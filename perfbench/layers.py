@@ -47,7 +47,8 @@ class Batch:
         self.t1 = t0  # process_batch returned
         self.applies: list[dict] = []
         self.reads: list[dict] = []
-        self.jvm_cpu_ns = 0
+        self.jvm_cpu_ns = 0  # JVM and driver Python CPU when the batch ended
+        self.py_cpu_s = 0.0
         self.jobs: dict[str, dict] = {}  # tag -> spark counts (traced)
 
 
@@ -70,6 +71,7 @@ class Recorder:
         self.cur: Batch | None = None
         self.skipped = 0
         self.stream_session = None
+        self.after_seed = None  # called once the seed batch has committed
         self.read_fn = None  # called after every commit when set
         self.after_batch = None  # traced runs: inspect the commit
         self.trace_s = 0.0  # time spent inside tracing code
@@ -113,6 +115,9 @@ class TimedPipeline(CdcPipeline):
         if rec.setup_left > 0:
             rec.stream_session = raw.sparkSession
             super().process_batch(raw, batch_id)
+            if rec.after_seed is not None:
+                rec.after_seed()
+                rec.after_seed = None
             rec.setup_left -= 1
             if rec.setup_left == 0:
                 rec.setup_end = time.time()
@@ -133,7 +138,7 @@ class TimedPipeline(CdcPipeline):
             rec.trace_s += time.perf_counter() - t
         if rec.read_fn is not None:
             b.reads = rec.read_fn(batch_id)
-        b.jvm_cpu_ns = rec.jvm_cpu_ns()
+        b.jvm_cpu_ns, b.py_cpu_s = rec.jvm_cpu_ns(), time.process_time()
         if rec.store is not None:
             t = time.perf_counter()
             b.jobs = rec.store.rollup()
@@ -148,6 +153,16 @@ class TimedSink(ParquetSink):
     """``apply_changeset`` timed per table, its jobs tagged ``apply``."""
 
     rec: Recorder | None = None
+    _plan = threading.local()  # (strategy, plan, seconds) of this thread's apply
+
+    def _merge_strategy(self, db, table, target, changes) -> str:
+        t = time.perf_counter()
+        strategy = super()._merge_strategy(db, table, target, changes)
+        # last_merge_plan is per sink, so a concurrent apply may
+        # overwrite it before this read: observability only, like the
+        # sink's own
+        self._plan.v = (strategy, self.last_merge_plan, time.perf_counter() - t)
+        return strategy
 
     def apply_changeset(self, db: str, table: str, changes) -> None:
         b = self.rec.cur if self.rec is not None else None
@@ -156,13 +171,12 @@ class TimedSink(ParquetSink):
             return
         rec = self.rec
         tag = f"{TAG_PREFIX}-apply-{b.batch_id}-{db}.{table}"
+        self._plan.v = ("shuffle", None, 0.0)
         t0 = time.time()
         with job_tag(rec.sc, tag):
             super().apply_changeset(db, table, changes)
         t1 = time.time()
-        # last_merge_plan is per sink, so a concurrent apply may have
-        # overwritten it: observability only, like the sink's own
-        plan = self.last_merge_plan
+        strategy, plan, plan_s = self._plan.v
         with rec.lock:
             b.applies.append(
                 {
@@ -171,7 +185,8 @@ class TimedSink(ParquetSink):
                     "t0": t0,
                     "t1": t1,
                     "priced": bool(plan) and not plan.get("under_floor"),
-                    "broadcast": bool(plan) and plan.get("strategy") == "broadcast",
+                    "broadcast": strategy == "broadcast",
+                    "plan_s": plan_s,
                 }
             )
 

@@ -1,6 +1,6 @@
 """CDC micro-batch benchmark: stream -> normalize -> LWW -> fan-out -> ParquetSink.
 
-    python3 perfbench/run.py --workload pg_rewrite_merge --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload pg_rewrite_merge --seed 1 --seconds 14 --trace 0
 
 Run from the repository root.  Each run:
 
@@ -207,9 +207,8 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=15)
+    ap.add_argument("--seconds", type=float, default=14)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--keep", action="store_true", help="keep the work directory")
     args = ap.parse_args()
 
     sys.path.insert(0, HERE)
@@ -227,8 +226,7 @@ def main() -> int:
         result = _run(spec, args, work)
     finally:
         _shutdown()
-        if not args.keep:
-            shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
     os.makedirs(os.path.join(OUT, "results"), exist_ok=True)
     name = f"{spec.name}-seed{args.seed}-trace{args.trace}.json"
     with open(os.path.join(OUT, "results", name), "w") as f:
@@ -289,6 +287,17 @@ def _run(spec, args, work: str):
 
     rec = Recorder(spark, traced, len(setup_files), args.seconds)
     pipe, sink = _build(spark, spec, os.path.join(work, "sink"), rec)
+    analyze_s = 0.0
+    if spec.analyze:
+
+        def analyze():
+            nonlocal analyze_s
+            t = time.perf_counter()
+            for table in sink.list_tables():
+                sink.analyze(*table, approx=True)
+            analyze_s = time.perf_counter() - t
+
+        rec.after_seed = analyze
     if spec.read_after_commit:
         rec.read_fn = lambda bid: _reads(spark, sink, tables, rec, bid)
     if traced:
@@ -297,7 +306,6 @@ def _run(spec, args, work: str):
     tables = [f"{spec.db}.{t}" for t in gen.tables]
     ckpt = os.path.join(work, "ckpt")
     q = _drain(spark, pipe, rec, indir, ckpt)
-    py1 = time.process_time()
     exc = q.exception()
     if exc is not None or rec.setup_end is None:
         raise RuntimeError(f"stream failed: {exc}")
@@ -322,7 +330,7 @@ def _run(spec, args, work: str):
         - sum(r["t1"] - r["t0"] for r in b.reads)
         for b in batches
     ]
-    cpu_s = (batches[-1].jvm_cpu_ns - rec.cpu0[0]) / 1e9 + (py1 - rec.cpu0[1])
+    cpu_s = (batches[-1].jvm_cpu_ns - rec.cpu0[0]) / 1e9 + (batches[-1].py_cpu_s - rec.cpu0[1])
 
     # -- oracle --------------------------------------------------------------
     t = time.perf_counter()
@@ -383,6 +391,7 @@ def _run(spec, args, work: str):
             "gen_s": gen_s,
             "session_s": session_s,
             "setup_batches_s": rec.setup_end - t_query,
+            "analyze_s": analyze_s,
             "setup_trigger_s": [
                 p["durationMs"]["triggerExecution"] / 1000
                 for i, p in sorted(progress.items())
@@ -513,10 +522,12 @@ def _per_layer(spark, spec, seed, sink, rec, batches, progress, survivors, reads
     m["sink.write_amplification"] = (wrote / surv_b if surv_b else 0.0, "ratio")
     rs = [r["t1"] - r["t0"] for r in reads if r["error"] is None]
     m["sink.read_s"] = (med(rs) if rs else 0.0, "s")
-    fr = [sink.dv_masked_fraction(*t) for t in sink.list_tables()]
-    m["sink.dv_masked_fraction"] = (statistics.fmean(fr) if fr else 0.0, "ratio")
+    if spec.merge_mode == "dv":
+        fr = [sink.dv_masked_fraction(*t) for t in sink.list_tables()]
+        m["sink.dv_masked_fraction"] = (statistics.fmean(fr), "ratio")
     m["planner.broadcast_share"] = (sum(a["broadcast"] for a in applies) / n_a, "ratio")
     m["planner.priced_share"] = (sum(a["priced"] for a in applies) / n_a, "ratio")
+    m["planner.plan_s"] = (med([a["plan_s"] for a in applies]), "s")
 
     m["spark.jobs_per_batch"] = (batch_c.get("jobs", 0) / n_b, "count")
     m["spark.stages_per_batch"] = (batch_c.get("stages", 0) / n_b, "count")

@@ -1,8 +1,8 @@
 """The benchmark's workloads: one closed-loop stream each.
 
-A micro-batch costs 3-5 s on a 4-core host, mostly fixed per-job and
+A micro-batch costs 4-7 s on a 4-core host, mostly fixed per-job and
 per-task overhead, so the sizes are chosen for a few timed batches per
-12 s run while the layer each workload stresses still dominates.
+14 s run while the layer each workload stresses still dominates.
 ``dms_skewed_dv_read`` is runnable by name but left out of
 BENCHMARK.json: one DV commit takes ~25 s (see README.md).
 """
@@ -29,6 +29,9 @@ class Workload:
     merge_mode: str = "rewrite"
     read_after_commit: bool = False  # fixed read of every table per batch
     warm_batches: int = 1
+    # ANALYZE every table after the seed batch, so the sink's merge
+    # planner plans each apply from the carried stats
+    analyze: bool = False
     # sizes the timed file budget, with room for a ~3x faster engine
     min_batch_s: float = 1.0
 
@@ -50,9 +53,9 @@ WORKLOADS = {
             seed_keys=10_000,
             keys_per_table=10_000,
             batch_events=2_000,
-            warm_batches=2,
             delete_share=0.10,
             insert_share=0.05,
+            analyze=True,
             min_batch_s=1.0,
         ),
         Workload(

@@ -14,12 +14,22 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def artifact_round(path: str) -> int:
+    """Round number of a round-stamped artifact: the leading digits
+    after the name's last ``_r`` (``BENCH_r15_c8.json`` -> 15)."""
+    m = re.match(r"\d+", os.path.basename(path).rsplit("_r", 1)[-1])
+    if m is None:
+        raise ValueError(f"no round number in {path!r}")
+    return int(m.group())
 
 
 def force(df) -> int:
@@ -991,7 +1001,7 @@ def main() -> None:
             import glob as _glob
 
             seen = [
-                int(p.rsplit("_r", 1)[1].split(".")[0])
+                artifact_round(p)
                 for pat in ("CORRECTNESS_r*.json", "BENCH_r*.json")
                 for p in _glob.glob(
                     os.path.join(os.path.dirname(__file__), pat)

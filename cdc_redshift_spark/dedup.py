@@ -89,14 +89,3 @@ def latest_per_key_agg(
     row = F.struct(*[F.col(c) for c in payload_cols])
     out = df.groupBy(*keys).agg(F.max_by(row, ordered).alias("__row"))
     return out.select(*[F.col(f"__row.{c}").alias(c) for c in payload_cols])
-
-
-def distinct_tables(df: DataFrame, db_col: str = "db", table_col: str = "table") -> list[tuple[str, str]]:
-    """Enumerate (db, table) pairs present in a batch.
-
-    The reference does this with a rank-1 window + collect (W2,
-    glue_pg_redshift_cdc.py:147-150); a plain distinct is strictly
-    better (map-side partial aggregation, no sort).
-    """
-    rows = df.select(db_col, table_col).distinct().collect()
-    return [(r[0], r[1]) for r in rows]

@@ -91,16 +91,6 @@ def minhash_signature_from(hashes: Column, k: int = 32) -> Column:
     return F.array(*[perm_min(a, b) for a, b in minhash_coeffs(k)])
 
 
-def minhash_signature(text_col: Column, k: int = 32, n: int = 3) -> Column:
-    """k-wide MinHash signature over char-n-gram shingles.
-
-    Only for ad-hoc use on small data — materialize
-    :func:`shingle_hashes` in a projection and use
-    :func:`minhash_signature_from` in real plans (see
-    :func:`minhash_lsh_pairs`)."""
-    return minhash_signature_from(shingle_hashes(text_col, n), k)
-
-
 def exploded_shingle_hashes(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:
@@ -787,12 +777,6 @@ def token_hashes(text_col: Column) -> Column:
     )
 
 
-def simhash64(text_col: Column) -> Column:
-    """64-bit SimHash of a text column (ad-hoc form; see
-    :func:`simhash64_from` for the two-step plan used at scale)."""
-    return simhash64_from(token_hashes(text_col))
-
-
 def simhash_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -915,43 +899,6 @@ def connected_components(
             f"consuming unconverged cluster labels"
         )
     return labels.select("id", F.col("lab").alias("cluster_id"))
-
-
-def embedding_cosine_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Embedding near-dup pairs: cosine >= threshold.
-
-    Brute-force O(N²) baseline with JVM-side dot products (zip_with +
-    aggregate).  The scale path buckets by random-hyperplane LSH first
-    (see operators/similarity.py) so only bucket-local pairs are
-    scored.
-    """
-    v = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    ).withColumn(
-        "norm",
-        F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x)),
-    )
-    a = v.select(F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
-    b = v.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    return (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(dot / (F.col("na") * F.col("nb")), 6).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -377,23 +377,6 @@ def _buckets_udf(planes_per_table: list[list[list[float]]]) -> Column:
     return _buckets
 
 
-def rh_lsh_bucket(
-    df: DataFrame,
-    n_planes: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-    dim: int | None = None,
-) -> DataFrame:
-    """Random-hyperplane signature: n_planes sign bits → bucket id."""
-    dim = dim or infer_dim(df, vec_col)
-    hp = hyperplanes(dim, n_planes, seed)
-    return df.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col),
-        F.element_at(_buckets_udf([hp])(F.col(vec_col)), 1).alias("bucket"),
-    )
-
-
 def _id_type(df: DataFrame, id_col: str) -> str:
     return df.schema[id_col].dataType.simpleString()
 

@@ -12,7 +12,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -98,18 +97,3 @@ def file_stream(
     if fmt != "json":
         raise ValueError(f"unsupported file_stream fmt: {fmt!r}")
     return reader.json(path)
-
-
-def rate_stream(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
-    """Synthetic load source for soak tests: rate → RAW_STREAM shape."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(rows_per_second))
-        .load()
-        .select(
-            F.to_json(F.struct(F.col("value").alias("id"))).alias("value"),
-            F.col("value").alias("offset"),
-            F.lit(0).alias("partition"),
-            F.col("timestamp"),
-        )
-    )

@@ -17,19 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
@@ -52,9 +39,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000),
             )
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all star-schema tables as temp views for spark.sql use."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

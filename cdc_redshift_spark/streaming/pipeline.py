@@ -19,8 +19,12 @@ and 3 for dms — glue_pg_redshift_cdc.py:207, glue_dms_redshift_cdc.py:197)
 because sinks commit per table; each thread submits independent Spark
 jobs, and the shared persisted batch keeps them from re-reading the
 source.  At 1000-executor scale the N-filters pattern is still sound
-*because* the batch is memory-resident and table count is small; for
-very wide table fan-outs use ``route_by_table`` (one partitionBy write).
+*because* the batch is memory-resident and table count is small.
+
+On a transaction-capable sink (``ParquetSink.transaction``) every
+batch's fan-out runs inside one sink transaction, so all of its tables
+publish together or none does; sinks without one (Redshift/JDBC)
+commit per table.
 """
 
 from __future__ import annotations
@@ -72,17 +76,14 @@ class CdcPipeline:
         on_raw_batch: Callable[[int, DataFrame], None] | None = None,
         expire_after_ms: int | None = None,
         expire_every: int = 10,
-        route_root: str | None = None,
-        compact_every: int = 5,
-        atomic_batches: bool = False,
         analyze_every: int | None = None,
         dead_letter_root: str | None = None,
     ):
         """``analyze_every=N`` re-ANALYZEs each table every N batches
         that TOUCH it (sinks without ``analyze`` ignore it; tables the
-        routed fan-out has not materialized yet are skipped), keeping
-        the merge planner's statistics fresh forever — without it, the
-        carried stats expire after the sink's ``analyze_carry_limit``
+        sink has not materialized are skipped), keeping the merge
+        planner's statistics fresh forever — without it, the carried
+        stats expire after the sink's ``analyze_carry_limit``
         commits and the broadcast flip silently reverts to shuffle.
 
         ``expire_after_ms`` enables periodic tombstone compaction:
@@ -90,26 +91,7 @@ class CdcPipeline:
         (max event-time seen) - expire_after_ms are expired from every
         sink table.  The horizon is EVENT time, so a tombstone survives
         exactly as long as an event old enough to lose to it can still
-        arrive — the same lateness contract as a watermark.
-
-        ``route_root`` switches the fan-out strategy: instead of N
-        per-table filter jobs, each batch lands in ONE
-        ``partitionBy(db, table)`` write under ``route_root``
-        (:func:`route_by_table`), and every ``compact_every`` batches
-        the landed slices are merged into the sink
-        (:func:`compact_routed`) — the right shape when the stream
-        carries hundreds of tables (SURVEY §7.3).  Both paths produce
-        identical sink state (LWW merge is associative and idempotent);
-        the routed path just batches the merge work.  Call
-        :meth:`compact_now` after the stream stops to flush the tail.
-
-        ``atomic_batches=True`` wraps each batch's per-table applies in
-        the sink's multi-table transaction (``sink.transaction()``):
-        all of a micro-batch's tables publish together or not at all —
-        a crash mid-batch can no longer expose half the fan-out to
-        readers.  Requires a transaction-capable sink (ParquetSink);
-        incompatible with ``route_root`` (that path defers merges by
-        design)."""
+        arrive — the same lateness contract as a watermark."""
         self.changeset_fn = changeset_fn
         self.sink = sink
         self.keys = keys
@@ -119,14 +101,11 @@ class CdcPipeline:
         self.on_raw_batch = on_raw_batch
         self.expire_after_ms = expire_after_ms
         self.expire_every = expire_every
-        self.route_root = route_root
-        self.compact_every = compact_every
-        self.atomic_batches = atomic_batches
         self.analyze_every = analyze_every
         self.dead_letter_root = dead_letter_root
         # every periodic schedule divides a counter — a zero would
         # ZeroDivisionError on the first batch, deep inside foreachBatch
-        for knob in ("compact_every", "expire_every", "analyze_every"):
+        for knob in ("expire_every", "analyze_every"):
             v = getattr(self, knob)
             if v is not None and v < 1:
                 raise ValueError(
@@ -134,16 +113,6 @@ class CdcPipeline:
                 )
         #: per-table touch counts driving the analyze_every schedule
         self._analyze_touches: dict[tuple[str, str], int] = {}
-        if atomic_batches and route_root is not None:
-            raise ValueError(
-                "atomic_batches is incompatible with route_root (routed "
-                "fan-out defers merges past the batch boundary)"
-            )
-        if atomic_batches and not hasattr(sink, "transaction"):
-            raise ValueError(
-                f"atomic_batches needs a transaction-capable sink, "
-                f"got {type(sink).__name__}"
-            )
         if getattr(sink, "occ", False):
             # the two commit regimes are mutually exclusive BY DESIGN
             # (parquet_sink.py OCC contract): exactly-once streaming
@@ -161,7 +130,6 @@ class CdcPipeline:
             )
         self.stats = PipelineStats()
         self._max_ts_ms: int | None = None
-        self._spark = None  # captured per-batch for compact_now()
 
     # -- per-batch body (the foreachBatch target) ---------------------------
     def process_batch(self, raw: DataFrame, batch_id: int) -> None:
@@ -235,38 +203,29 @@ class CdcPipeline:
             if batch_max is not None:
                 self._max_ts_ms = max(self._max_ts_ms or batch_max, batch_max)
 
-            if self.route_root is not None:
-                # wide-fan-out path: ONE partitioned write per batch,
-                # merge every compact_every batches
-                self._spark = changes_f.sparkSession
-                route_by_table(changes_f, self.route_root)
-                if self.stats.batches % self.compact_every == 0:
-                    self.compact_now()
-            else:
-
-                def apply_one(db: str, table: str) -> None:
-                    slice_df = changes_f.where(
-                        (F.col("db") == db) & (F.col("table") == table)
-                    )
-                    self.sink.apply_changeset(db, table, slice_df)
-
-                from contextlib import nullcontext
-
-                scope = (
-                    self.sink.transaction()
-                    if self.atomic_batches
-                    else nullcontext()
+            def apply_one(db: str, table: str) -> None:
+                slice_df = changes_f.where(
+                    (F.col("db") == db) & (F.col("table") == table)
                 )
-                with scope:
-                    if len(tables) <= 1 or self.max_workers <= 1:
-                        for db, table in tables:
-                            apply_one(db, table)
-                    else:
-                        with ThreadPoolExecutor(max_workers=self.max_workers) as ex:
-                            # surface worker exceptions in the driver (the
-                            # reference's executor.submit without .result()
-                            # would swallow them)
-                            list(ex.map(lambda t: apply_one(*t), tables))
+                self.sink.apply_changeset(db, table, slice_df)
+
+            def fan_out() -> None:
+                if len(tables) <= 1 or self.max_workers <= 1:
+                    for db, table in tables:
+                        apply_one(db, table)
+                else:
+                    with ThreadPoolExecutor(max_workers=self.max_workers) as ex:
+                        # surface worker exceptions in the driver (the
+                        # reference's executor.submit without .result()
+                        # would swallow them)
+                        list(ex.map(lambda t: apply_one(*t), tables))
+
+            if hasattr(self.sink, "transaction"):
+                # the batch's tables publish together or not at all
+                with self.sink.transaction():
+                    fan_out()
+            else:  # Redshift/JDBC: per-table commits
+                fan_out()
             if self.on_batch is not None:
                 self.on_batch(batch_id, changes_f)
             self._maybe_expire()
@@ -274,21 +233,6 @@ class CdcPipeline:
             log.info("batch %d: %d tables applied", batch_id, len(tables))
         finally:
             changes.unpersist()
-
-    def compact_now(self) -> list[tuple[str, str]]:
-        """Merge everything landed under ``route_root`` into the sink.
-        Safe to call any time (idempotent; crash-tolerant — see
-        :func:`compact_routed`).  Call after the stream stops to flush
-        slices landed since the last periodic compaction."""
-        if self.route_root is None or self._spark is None:
-            return []
-        return compact_routed(
-            self._spark,
-            self.route_root,
-            self.sink,
-            keys=self.keys,
-            max_workers=self.max_workers,
-        )
 
     def _maybe_analyze(self, tables: list[tuple[str, str]]) -> None:
         """Periodic stats refresh (see __init__ ``analyze_every``):
@@ -302,45 +246,23 @@ class CdcPipeline:
         The schedule is PER TABLE (touch count), not the global batch
         counter: a table whose batches never aligned with a global
         ``batches % N`` phase would otherwise never refresh and expire
-        anyway.  Tables the sink has not materialized yet (the routed
-        fan-out defers commits to compaction) are skipped until they
-        exist.  Cost: one aggregation pass per touched table every N
-        touches — the same bounded-maintenance contract as
-        ``expire_every``/``compact_every``."""
+        anyway.  Tables the sink has not materialized yet are skipped
+        until they exist.  Cost: one aggregation pass per touched table
+        every N touches — the same bounded-maintenance contract as
+        ``expire_every``."""
         if self.analyze_every is None or not hasattr(self.sink, "analyze"):
             return
-        # probe the knob ONCE from the signature — catching TypeError
-        # around the call would misread a TypeError raised *inside* a
-        # knob-capable analyze() as "sink lacks approx" and re-run the
-        # expensive exact-NDV pass the approx mode exists to avoid
-        import inspect
-
-        try:
-            params = inspect.signature(self.sink.analyze).parameters
-            # a **kwargs-accepting adapter (duck-typed wrapper around a
-            # knob-capable sink) must keep receiving approx=True — only
-            # an explicit positional-only signature lacks the knob
-            has_approx = "approx" in params or any(
-                p.kind is inspect.Parameter.VAR_KEYWORD
-                for p in params.values()
-            )
-        except (TypeError, ValueError):  # builtins/C callables
-            has_approx = False
-        exists = getattr(self.sink, "table_exists", None)
         for db, table in tables:
             n = self._analyze_touches.get((db, table), 0) + 1
             self._analyze_touches[(db, table)] = n
             if n % self.analyze_every != 0:
                 continue
-            if exists is not None and not exists(db, table):
+            if not self.sink.table_exists(db, table):
                 continue
             try:
                 # approximate NDV (HLL++, no expand): maintenance-path
                 # stats feed planning only, never correctness
-                if has_approx:
-                    self.sink.analyze(db, table, approx=True)
-                else:
-                    self.sink.analyze(db, table)
+                self.sink.analyze(db, table, approx=True)
             except Exception:  # noqa: BLE001 — stats are planning-only
                 # input: a transient refresh failure (IO, ENOSPC, Spark
                 # error) must never fail the micro-batch — the same
@@ -395,80 +317,3 @@ class CdcPipeline:
             writer = writer.trigger(processingTime=trigger)
         return writer.start()
 
-
-def route_by_table(changes: DataFrame, root: str) -> None:
-    """Alternative fan-out: ONE partitioned write instead of N filters.
-
-    ``partitionBy(db, table)`` lands every table's slice in one pass —
-    the right shape when the stream carries hundreds of tables and
-    per-table filter jobs would swamp the driver (SURVEY §7.3).
-    :func:`compact_routed` merges each landed partition into its
-    target.
-    """
-    (
-        changes.write.mode("append")
-        .partitionBy(*ROUTING_COLS)
-        .parquet(root)
-    )
-
-
-def compact_routed(
-    spark,
-    root: str,
-    sink: Sink,
-    keys: tuple[str, ...] = ("db", "table", "key"),
-    max_workers: int = 10,
-    clean: bool = True,
-) -> list[tuple[str, str]]:
-    """Merge every (db, table) slice landed by :func:`route_by_table`
-    into its sink target — the downstream half of the wide-fan-out
-    path, producing the SAME per-table state the N-filters path does.
-
-    Each landed partition's files are snapshotted first (so a stream
-    appending concurrently is untouched), read with ``basePath`` to
-    recover the routing columns, LWW-deduped, and applied through the
-    sink's idempotent merge.  ``clean=True`` removes exactly the files
-    processed; a crash between apply and clean just re-applies them —
-    idempotent, because the merge is LWW.  Listing is a directory walk
-    of db=/table= names, O(tables), no Spark job.
-    """
-    if getattr(sink, "occ", False):
-        # same contract as CdcPipeline.__init__: the crash-then-
-        # re-apply idempotence this function's clean-up relies on IS a
-        # same-version replay, which OCC claims reject
-        raise ValueError(
-            "compact_routed requires a single-writer sink (occ=False): "
-            "its crash recovery re-applies landed slices, which OCC's "
-            "exclusive claims would reject mid-recovery."
-        )
-    import glob
-    import os
-    import urllib.parse
-
-    from cdc_redshift_spark.dedup import latest_per_key as _lww
-
-    work: list[tuple[str, str, list[str]]] = []
-    for dbdir in sorted(glob.glob(os.path.join(root, "db=*"))):
-        db = urllib.parse.unquote(os.path.basename(dbdir).split("=", 1)[1])
-        for tdir in sorted(glob.glob(os.path.join(dbdir, "table=*"))):
-            table = urllib.parse.unquote(os.path.basename(tdir).split("=", 1)[1])
-            files = sorted(glob.glob(os.path.join(tdir, "*.parquet")))
-            if files:
-                work.append((db, table, files))
-
-    def one(db: str, table: str, files: list[str]) -> None:
-        slice_df = _lww(
-            spark.read.option("basePath", root).parquet(*files), keys=keys
-        )
-        sink.apply_changeset(db, table, slice_df)
-        if clean:
-            for f in files:
-                os.remove(f)
-
-    if len(work) <= 1 or max_workers <= 1:
-        for db, table, files in work:
-            one(db, table, files)
-    else:
-        with ThreadPoolExecutor(max_workers=max_workers) as ex:
-            list(ex.map(lambda w: one(*w), work))
-    return [(db, table) for db, table, _ in work]

@@ -385,31 +385,46 @@ def test_heavy_hitters_screen_then_semi_join(spark):
     assert plan.count("BroadcastNestedLoopJoin") == 1
 
 
-def test_aqe_coalesces_small_query_despite_wide_initial_partitions():
+def test_aqe_coalesces_small_query_despite_wide_initial_partitions(spark):
     """The session factory starts every shuffle at
     initialPartitionNum = max(256, 8*cpus) and relies on AQE to
     coalesce; pin that a small aggregate actually lands on FEW
     shuffle partitions (a host/config regression here would fragment
-    every tiny stage into 256 sorters — r6 VERDICT #7)."""
+    every tiny stage into 256 sorters — r6 VERDICT #7).
+
+    ``get_spark`` returns the live shared session with its production
+    confs applied, so the test restores the test session's confs
+    afterwards: later tests keep conftest's AQE/WSCG-off pin."""
     from cdc_redshift_spark.session import get_spark
 
-    spark = get_spark("aqe-pin-test")
-    df = (
-        spark.range(10_000)
-        .selectExpr("id % 7 AS k", "id AS v")
-        .groupBy("k")
-        .agg({"v": "sum"})
-    )
-    df.collect()  # AQE final plan only exists after execution
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "AdaptiveSparkPlan" in plan
-    # final partition count of the shuffle read must be far below the
-    # wide initial number — read it from the final RDD
-    n_parts = df.rdd.getNumPartitions()
-    assert n_parts <= 16, (
-        f"small aggregate fragmented into {n_parts} partitions; "
-        f"AQE coalescing lost (plan: {plan[:400]})"
-    )
+    saved = {r.key: r.value for r in spark.sql("SET").collect()}
+    try:
+        prod = get_spark("aqe-pin-test")
+        df = (
+            prod.range(10_000)
+            .selectExpr("id % 7 AS k", "id AS v")
+            .groupBy("k")
+            .agg({"v": "sum"})
+        )
+        df.collect()  # AQE final plan only exists after execution
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "AdaptiveSparkPlan" in plan
+        # final partition count of the shuffle read must be far below
+        # the wide initial number — read it from the final RDD
+        n_parts = df.rdd.getNumPartitions()
+        assert n_parts <= 16, (
+            f"small aggregate fragmented into {n_parts} partitions; "
+            f"AQE coalescing lost (plan: {plan[:400]})"
+        )
+    finally:
+        # static confs (driver memory, UI) never reach a live session
+        for r in spark.sql("SET").collect():
+            if not spark.conf.isModifiable(r.key):
+                continue
+            if r.key not in saved:
+                spark.conf.unset(r.key)
+            elif saved[r.key] != r.value:
+                spark.conf.set(r.key, saved[r.key])
 
 
 def test_substring_dedup_plan_bounded(spark):

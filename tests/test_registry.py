@@ -104,3 +104,23 @@ def test_no_cross_module_query_name_collisions():
         names += list(mod.QUERIES)
     dups = [n for n, c in Counter(names).items() if c > 1]
     assert not dups, f"query names shadow each other across modules: {dups}"
+
+
+def test_artifact_round_reads_leading_digits(monkeypatch):
+    """bench.py stamps BENCH_FULL_rNN.json one past the newest round
+    artifact, and tools/rotate_window.py reads CORRECTNESS_rNN.json
+    rounds: both parse names through bench.artifact_round, which must
+    read suffixed names such as BENCH_r15_c8.json (an int("15_c8")
+    there once silently stopped BENCH_FULL from being written)."""
+    import os
+
+    import pytest
+
+    monkeypatch.syspath_prepend(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from bench import artifact_round
+
+    assert artifact_round("BENCH_r15_c8.json") == 15
+    assert artifact_round("/repo/BENCH_FULL_r07.json") == 7
+    assert artifact_round("CORRECTNESS_r16.json") == 16
+    with pytest.raises(ValueError):
+        artifact_round("BENCH_rx.json")

@@ -376,95 +376,6 @@ def test_expire_tombstones_pruned(spark, tmp_path):
     assert {r.key for r in rows} == {"1", "3"}  # tombstone gone
 
 
-def test_route_by_table_partitioned_fanout(spark, tmp_path):
-    """The wide-fanout alternative: one partitionBy(db, table) write
-    lands every table's slice in a single pass."""
-    from cdc_redshift_spark.streaming.pipeline import route_by_table
-
-    changes = spark.createDataFrame(
-        [
-            ("d1", "t1", "1", 100, 0, "insert", "{}"),
-            ("d1", "t2", "2", 100, 1, "insert", "{}"),
-            ("d2", "t1", "3", 100, 2, "delete", None),
-        ],
-        "db string, table string, key string, ts_ms long, offset long, op string, payload string",
-    )
-    root = str(tmp_path / "routed")
-    route_by_table(changes, root)
-    out = spark.read.parquet(root)
-    assert {(r.db, r.table) for r in out.select("db", "table").distinct().collect()} == {
-        ("d1", "t1"),
-        ("d1", "t2"),
-        ("d2", "t1"),
-    }
-    import os as _os
-
-    assert _os.path.isdir(f"{root}/db=d1/table=t2")
-
-
-def test_compact_routed_matches_filter_path(spark, tmp_path):
-    """Fan-out landing + compactor must converge to the SAME per-table
-    state as the direct filter-path merge, including delete handling,
-    LWW across landed batches, and idempotent re-compaction."""
-    from cdc_redshift_spark.dedup import latest_per_key
-    from cdc_redshift_spark.streaming.pipeline import compact_routed, route_by_table
-
-    rows = [
-        # t1: insert, then newer update; key 2 deleted after insert
-        ("d1", "t1", "1", 100, 0, "insert", '{"v": "a"}'),
-        ("d1", "t1", "1", 200, 1, "update", '{"v": "a2"}'),
-        ("d1", "t1", "2", 100, 2, "insert", '{"v": "b"}'),
-        ("d1", "t2", "9", 100, 3, "insert", '{"v": "x"}'),
-    ]
-    rows2 = [
-        ("d1", "t1", "2", 300, 4, "delete", None),
-        ("d2", "t1", "7", 100, 5, "insert", '{"v": "z"}'),
-        # stale replay of t1/1 — must lose to the landed ts=200 row
-        ("d1", "t1", "1", 150, 6, "update", '{"v": "stale"}'),
-    ]
-    schema = (
-        "db string, table string, key string, ts_ms long, offset long, "
-        "op string, payload string"
-    )
-    root = str(tmp_path / "landing")
-    route_by_table(spark.createDataFrame(rows, schema), root)
-    route_by_table(spark.createDataFrame(rows2, schema), root)
-
-    keys = ("db", "table", "key")
-    sink = ParquetSink(spark, str(tmp_path / "sink"), keys=keys)
-    done = compact_routed(spark, root, sink, keys=keys)
-    assert set(done) == {("d1", "t1"), ("d1", "t2"), ("d2", "t1")}
-
-    # reference: the filter path over the identical union
-    ref_sink = ParquetSink(spark, str(tmp_path / "ref"), keys=keys)
-    allc = latest_per_key(
-        spark.createDataFrame(rows + rows2, schema), keys=keys
-    )
-    import pyspark.sql.functions as F
-
-    for db, table in done:
-        ref_sink.apply_changeset(
-            db, table, allc.where((F.col("db") == db) & (F.col("table") == table))
-        )
-
-    for db, table in done:
-        got = {
-            (r.key, r.ts_ms, r.payload)
-            for r in sink.read_table(spark, db, table).collect()
-        }
-        want = {
-            (r.key, r.ts_ms, r.payload)
-            for r in ref_sink.read_table(spark, db, table).collect()
-        }
-        assert got == want, (db, table)
-    # t1 specifically: key 1 at ts 200 (stale replay lost), key 2 deleted
-    st = {r.key: r.ts_ms for r in sink.read_table(spark, "d1", "t1").collect()}
-    assert st == {"1": 200}
-
-    # clean=True removed the landed files → a second compact is a no-op
-    assert compact_routed(spark, root, sink, keys=keys) == []
-
-
 def test_sink_bloom_index_lookup(spark, tmp_path):
     """bloom_index_cols builds a per-file index at every commit;
     lookup_files serves point lookups on a secondary key with no
@@ -1375,50 +1286,80 @@ def test_transaction_same_table_twice_raises(spark, tmp_path):
     assert {r.payload for r in sink.read_table(spark, "d", "a").collect()} == {"a1"}
 
 
-def test_pipeline_atomic_batches(spark, tmp_path):
-    """End-to-end: a routed 2-table micro-batch under
-    atomic_batches=True publishes both tables and leaves no pending
-    manifest; validation rejects incompatible configs."""
+def test_pipeline_batch_is_atomic_by_default(spark, tmp_path, monkeypatch):
+    """A default CdcPipeline on a ParquetSink publishes each
+    micro-batch's tables together or not at all: when the second
+    table's apply raises, neither table's _LATEST moves and no
+    _TXN_PENDING is left; replaying the same batch id publishes both.
+    A sink without transaction() still gets plain per-table applies."""
     import pytest
 
+    from cdc_redshift_spark.sinks.base import Sink
     from cdc_redshift_spark.streaming.pipeline import CdcPipeline
 
+    schema = (
+        "db string, table string, key string, ts_ms long, offset long, "
+        "op string, payload string"
+    )
+
+    def batch(ts, a, b):
+        return spark.createDataFrame(
+            [
+                ("d", "t1", "1", ts, ts, "insert", a),
+                ("d", "t2", "1", ts, ts + 1, "insert", b),
+            ],
+            schema,
+        )
+
+    def payloads():
+        return {
+            t: {r.payload for r in sink.read_table(spark, "d", t).collect()}
+            for t in ("t1", "t2")
+        }
+
     sink = ParquetSink(spark, str(tmp_path))
-    pipe = CdcPipeline(
-        changeset_fn=lambda df: df,
-        sink=sink,
-        max_workers=4,
-        atomic_batches=True,
-    )
-    raw = spark.createDataFrame(
-        [
-            ("d", "t1", "1", 100, 0, "insert", "a"),
-            ("d", "t2", "1", 100, 1, "insert", "b"),
-        ],
-        "db string, table string, key string, ts_ms long, offset long, op string, payload string",
-    )
-    pipe.process_batch(raw, 0)
-    assert sink.read_table(spark, "d", "t1").count() == 1
-    assert sink.read_table(spark, "d", "t2").count() == 1
+    pipe = CdcPipeline(changeset_fn=lambda df: df, sink=sink)
+    pipe.process_batch(batch(100, "a", "b"), 0)
+    assert payloads() == {"t1": {"a"}, "t2": {"b"}}
+    versions = {t: sink._latest_version("d", t) for t in ("t1", "t2")}
+
+    apply = sink.apply_changeset
+
+    def crash_on_t2(db, table, changes):
+        if table == "t2":
+            raise RuntimeError("crash mid-batch")
+        apply(db, table, changes)
+
+    monkeypatch.setattr(sink, "apply_changeset", crash_on_t2)
+    with pytest.raises(RuntimeError, match="crash mid-batch"):
+        pipe.process_batch(batch(200, "a2", "b2"), 1)
+    assert {t: sink._latest_version("d", t) for t in ("t1", "t2")} == versions
+    assert payloads() == {"t1": {"a"}, "t2": {"b"}}
     assert not os.path.exists(str(tmp_path / "_TXN_PENDING"))
 
-    with pytest.raises(ValueError, match="route_root"):
-        CdcPipeline(
-            changeset_fn=lambda df: df,
-            sink=sink,
-            atomic_batches=True,
-            route_root=str(tmp_path / "routed"),
-        )
+    monkeypatch.setattr(sink, "apply_changeset", apply)
+    pipe.process_batch(batch(200, "a2", "b2"), 1)  # the replay
+    assert payloads() == {"t1": {"a2"}, "t2": {"b2"}}
+    assert not os.path.exists(str(tmp_path / "_TXN_PENDING"))
 
-    class NoTxnSink:
-        pass
+    class PerTableSink(Sink):
+        def __init__(self):
+            self.applied = []
 
-    with pytest.raises(ValueError, match="transaction-capable"):
-        CdcPipeline(
-            changeset_fn=lambda df: df,
-            sink=NoTxnSink(),
-            atomic_batches=True,
-        )
+        def table_exists(self, db, table):
+            return False
+
+        def apply_changeset(self, db, table, changes):
+            self.applied.append((db, table, changes.count()))
+
+        def read_table(self, spark, db, table):
+            return None
+
+    plain = PerTableSink()
+    CdcPipeline(changeset_fn=lambda df: df, sink=plain).process_batch(
+        batch(100, "a", "b"), 0
+    )
+    assert sorted(plain.applied) == [("d", "t1", 1), ("d", "t2", 1)]
 
 
 # -- row-level commit provenance ------------------------------------------

@@ -4,6 +4,7 @@ idempotent replay, cross-batch late arrivals (SURVEY §5.5, §2.11)."""
 from __future__ import annotations
 
 import json
+import logging
 import os
 
 from cdc_redshift_spark.config import JobConfig, load_config
@@ -466,64 +467,6 @@ def test_pipeline_tombstone_expiry_lifecycle(spark, tmp_path):
     assert v_after_delete is not None
 
 
-def test_routed_pipeline_matches_filter_path(spark, tmp_path):
-    """route_root wiring (SURVEY §7.3 wide fan-out): the pipeline lands
-    each batch in ONE partitionBy(db, table) write, compacts every
-    compact_every batches inside the stream, and compact_now() flushes
-    the tail — ending in per-table state IDENTICAL to the N-filters
-    path on the same input (LWW merge is associative + idempotent)."""
-    batches = [
-        [
-            pg_line("c", 1, 100, {"v": "a"}, 0, db="d1", table="t1"),
-            pg_line("c", 2, 100, {"v": "b"}, 1, db="d1", table="t2"),
-            pg_line("c", 1, 100, {"v": "c"}, 2, db="d2", table="t1"),
-        ],
-        [
-            pg_line("u", 1, 200, {"v": "a2"}, 3, db="d1", table="t1"),
-            pg_line("d", 2, 200, None, 4, db="d1", table="t2"),
-        ],
-        [
-            pg_line("c", 3, 300, {"v": "e"}, 5, db="d1", table="t1"),
-            pg_line("u", 1, 50, {"v": "stale"}, 6, db="d2", table="t1"),
-        ],
-    ]
-
-    # reference run: the N-filters path
-    pipe_f, sink_f, in_f, ck_f = mk_pipeline(spark, tmp_path / "filt")
-    for i, lines in enumerate(batches):
-        write_batch_file(in_f, f"b{i}.json", lines)
-    drain(pipe_f, spark, in_f, ck_f)
-
-    # routed run: compact_every=2 → one in-stream compaction mid-run,
-    # compact_now() flushes the rest
-    routed_dir = tmp_path / "routed"
-    indir = str(routed_dir / "in")
-    ckpt = str(routed_dir / "ckpt")
-    os.makedirs(indir, exist_ok=True)
-    sink_r = ParquetSink(spark, str(routed_dir / "sink"), keys=KEYS)
-    pipe_r = CdcPipeline(
-        lambda raw: pg_changeset(raw, offset_col="offset"),
-        sink_r,
-        keys=KEYS,
-        route_root=str(routed_dir / "landing"),
-        compact_every=2,
-    )
-    for i, lines in enumerate(batches):
-        write_batch_file(indir, f"b{i}.json", lines)
-    drain(pipe_r, spark, indir, ckpt)
-    leftover = pipe_r.compact_now()
-    assert leftover, "tail batches must still be un-compacted at stop"
-    assert pipe_r.compact_now() == []  # landing dir fully drained
-
-    assert sink_r.list_tables() == sink_f.list_tables()
-    for db, table in sink_f.list_tables():
-        assert state(sink_r, spark, db, table) == state(sink_f, spark, db, table)
-    # end state spot-checks (delete applied, stale update lost)
-    assert state(sink_r, spark, "d1", "t2") == {}
-    assert state(sink_r, spark, "d2", "t1")["1"]["v"] == "c"
-    assert state(sink_r, spark, "d1", "t1")["1"]["v"] == "a2"
-
-
 def test_pipeline_with_dv_sink_end_to_end(spark, tmp_path):
     """The live streaming pipeline drives a deletion-vector sink:
     identical final state to the default rewrite sink, with the
@@ -756,15 +699,15 @@ def test_maybe_analyze_per_table_schedule_and_unmaterialized_skip(
 ):
     """The refresh schedule is PER TABLE (touch count): a table whose
     batches never align with a global batch phase still refreshes on
-    its own Nth touch; tables the routed fan-out has not materialized
-    in the sink yet are skipped instead of crashing the batch."""
+    its own Nth touch; tables not materialized in the sink yet are
+    skipped instead of crashing the batch."""
     sink = ParquetSink(spark, str(tmp_path / "s"), keys=KEYS)
     pipe = CdcPipeline(
         lambda raw: pg_changeset(raw, offset_col="offset"), sink, keys=KEYS,
         analyze_every=2,
     )
     calls = []
-    sink.analyze = lambda db, t: calls.append((db, t))
+    sink.analyze = lambda db, t, approx=False: calls.append((db, t))
     sink.table_exists = lambda db, t: t != "never"
     pipe._maybe_analyze([("d", "a")])                  # a:1
     pipe._maybe_analyze([("d", "a"), ("d", "b")])      # a:2 -> refresh; b:1
@@ -773,13 +716,12 @@ def test_maybe_analyze_per_table_schedule_and_unmaterialized_skip(
     assert calls == [("d", "a"), ("d", "b")]
 
 
-def test_maybe_analyze_never_fails_the_batch(spark, tmp_path):
+def test_maybe_analyze_never_fails_the_batch(spark, tmp_path, caplog):
     """Stats are a planning-only input: a transient failure inside the
     periodic refresh (IO, Spark error) must be logged and skipped, not
     propagate and kill the micro-batch — the same never-fail discipline
-    as the sink's _carry_analyze.  And a TypeError raised INSIDE a
-    knob-capable analyze() must not be misread as 'sink lacks approx'
-    and trigger a second (expensive exact-NDV) call."""
+    as the sink's _carry_analyze.  The refresh asks for approximate
+    NDV."""
     sink = ParquetSink(spark, str(tmp_path / "s"), keys=KEYS)
     pipe = CdcPipeline(
         lambda raw: pg_changeset(raw, offset_col="offset"), sink, keys=KEYS,
@@ -793,39 +735,20 @@ def test_maybe_analyze_never_fails_the_batch(spark, tmp_path):
 
     calls = []
     sink.analyze = boom
-    pipe._maybe_analyze([("d", "a")])  # must NOT raise
+    with caplog.at_level(logging.WARNING):
+        pipe._maybe_analyze([("d", "a")])  # must NOT raise
     assert calls == [("d", "a", True)]
-
-    def boom_type(db, table, approx=False):
-        calls.append((db, table, approx))
-        raise TypeError("bug inside a knob-capable analyze")
-
-    calls = []
-    sink.analyze = boom_type
-    pipe._maybe_analyze([("d", "a")])  # a:2 with analyze_every=1
-    # exactly ONE call, with the knob — no exact-NDV retry
-    assert calls == [("d", "a", True)]
-
-    # a **kwargs-accepting duck-typed adapter must keep receiving the
-    # knob (VAR_KEYWORD counts as approx-capable) — without it, every
-    # refresh through a wrapper silently downgrades to exact NDV
-    def adapter(db, table, **opts):
-        calls.append((db, table, opts.get("approx", False)))
-
-    calls = []
-    sink.analyze = adapter
-    pipe._maybe_analyze([("d", "a")])
-    assert calls == [("d", "a", True)]
+    assert "stats refresh failed for d.a" in caplog.text
 
 
 def test_pipeline_periodic_knobs_validated_at_construction(spark, tmp_path):
-    """analyze_every / compact_every / expire_every divide counters —
-    a 0 would ZeroDivisionError on the first batch, deep inside
-    foreachBatch.  Refuse loudly at construction instead."""
+    """analyze_every / expire_every divide counters — a 0 would
+    ZeroDivisionError on the first batch, deep inside foreachBatch.
+    Refuse loudly at construction instead."""
     import pytest
 
     sink = ParquetSink(spark, str(tmp_path / "s"), keys=KEYS)
-    for knob in ("analyze_every", "compact_every", "expire_every"):
+    for knob in ("analyze_every", "expire_every"):
         with pytest.raises(ValueError, match=knob):
             CdcPipeline(
                 lambda raw: pg_changeset(raw, offset_col="offset"),
@@ -839,11 +762,9 @@ def test_occ_sink_refused_by_streaming_regime(spark, tmp_path):
     """OCC and exactly-once streaming replay are mutually exclusive
     (parquet_sink.py OCC contract): recovery overwrites the same
     version directory, which exclusive claims reject.  The pipeline
-    and the routed compactor must refuse an occ=True sink LOUDLY at
-    construction, not corrupt (or deadlock) at first crash-recovery."""
+    must refuse an occ=True sink LOUDLY at construction, not corrupt
+    (or deadlock) at first crash-recovery."""
     import pytest
-
-    from cdc_redshift_spark.streaming.pipeline import compact_routed
 
     occ_sink = ParquetSink(spark, str(tmp_path / "s"), keys=KEYS, occ=True)
     with pytest.raises(ValueError, match="single-writer sink"):
@@ -852,8 +773,6 @@ def test_occ_sink_refused_by_streaming_regime(spark, tmp_path):
             occ_sink,
             keys=KEYS,
         )
-    with pytest.raises(ValueError, match="single-writer sink"):
-        compact_routed(spark, str(tmp_path / "routed"), occ_sink, keys=KEYS)
     # the plain single-writer sink remains accepted
     mk_pipeline(spark, tmp_path)
 
@@ -1016,3 +935,47 @@ def test_malformed_envelope_without_dlq_drops_loudly_not_fatally(
     drain(pipe, spark, indir, ckpt)
     assert pipe.stats.unroutable == 1
     assert set(state(sink, spark)) == {"2"}
+
+
+def test_perfbench_layers_fit_the_engine(spark, tmp_path, monkeypatch):
+    """The CDC benchmark (perfbench/) times the engine from outside,
+    through subclasses in perfbench/layers.py: TimedPipeline must still
+    construct against CdcPipeline's signature, ParquetSink.apply_changeset
+    must still plan through the _merge_strategy that TimedSink overrides,
+    and an apply on an analyzed table must leave last_merge_plan set.
+    Otherwise a refactor silently zeroes the benchmark's planner.*
+    metrics or breaks perfbench/run.py."""
+    from cdc_redshift_spark.sources.streams import RAW_STREAM_SCHEMA
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    monkeypatch.syspath_prepend(os.path.join(repo, "perfbench"))
+    import layers
+
+    def raw(name, lines):
+        write_batch_file(str(tmp_path), name, lines)
+        return spark.read.schema(RAW_STREAM_SCHEMA).json(str(tmp_path / name))
+
+    rec = layers.Recorder(spark, traced=False, setup_batches=1, seconds=600)
+    # a 1-byte broadcast floor, so the tiny table is priced, not skipped
+    sink = layers.TimedSink(
+        spark, str(tmp_path / "sink"), keys=KEYS, merge_broadcast_min_target=1
+    )
+    sink.rec = rec
+    pipe = layers.TimedPipeline(
+        lambda r: pg_changeset(r, offset_col="offset"), sink, keys=KEYS, rec=rec
+    )
+    # the seed batch runs untimed; analyze it as pg_rewrite_merge does
+    pipe.process_batch(
+        raw("seed.json", [pg_line("c", k, 100, {"v": "a"}, k) for k in range(50)]), 0
+    )
+    sink.analyze("d1", "t1", approx=True)
+    pipe.process_batch(
+        raw("b1.json", [pg_line("u", k, 200, {"v": "b"}, 100 + k) for k in range(5)]), 1
+    )
+
+    assert sink.last_merge_plan is not None
+    assert not sink.last_merge_plan.get("under_floor")
+    (batch,) = rec.batches
+    (apply,) = batch.applies
+    assert apply["table"] == "d1.t1" and apply["priced"]
+    assert state(sink, spark)["3"] == {"id": 3, "v": "b"}

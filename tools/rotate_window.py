@@ -30,6 +30,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import artifact_round  # noqa: E402
+
 ALWAYS = [
     "cdc_pg_replay",
     "cdc_lww_dedup",
@@ -43,7 +45,7 @@ WINDOW = 50
 def main() -> None:
     last: dict[str, int] = {}
     for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(f.rsplit("_r", 1)[1].split(".")[0])
+        rnd = artifact_round(f)
         for q, v in json.load(open(f)).items():
             if isinstance(v, dict):
                 last[q] = max(last.get(q, 0), rnd)

@@ -7,9 +7,28 @@ snapshot version and flips a pointer file — the same
 write-new-then-swap discipline as Delta/Iceberg commits, minus the
 format (those libs aren't available in this environment).
 
-Layout:
-    root/<db>/<table>/v<N>/part-*.parquet
-    root/<db>/<table>/_LATEST        # contains "N"
+Layout (``T`` = ``root/<db>/<table>``):
+    T/v<N>/part-*.parquet     # data files (partitioned: T/v<N>/<col>=<val>/)
+    T/v<N>/_SCHEMA            # catalog schema of snapshot N (JSON)
+    T/v<N>/_FILEVERS          # {data file: version that wrote it}
+    T/v<N>/_ANALYZE[_AGE]     # column stats, and commits since computed
+    T/v<N>/_DV/               # deletion vectors, (file, pos) parquet
+    T/v<N>/_BLOOM_<col>/, T/v<N>/_ZONEMAP/   # per-file index parquet
+    T/_LATEST                 # the pointer: contains "N"
+    T/_DROPPED                # dropped-column guard set (JSON)
+    T/_CLAIM_v<N>             # OCC claim marker (occ=True only)
+    root/_TXN_PENDING         # intent manifest of a multi-table commit
+
+Publish order: Spark writes the data files, ``_DV/`` and the index
+dirs into ``v<N>/`` (or hard-links them forward); then ``_SCHEMA``,
+``_FILEVERS`` and ``_ANALYZE[_AGE]``; then, inside a transaction only,
+``_TXN_PENDING``; then ``_LATEST`` flips; last the spent
+``_CLAIM_v<N>`` and ``_TXN_PENDING`` are removed.  Every small file
+publishes through :func:`cdc_redshift_spark.commit.atomic_write`, so
+every sidecar a pointer names is durable before the pointer flips
+(the Spark-written data files are not fsynced), and a crash at any
+step leaves the table at v<N-1> or, once ``_TXN_PENDING`` exists,
+rolls forward to v<N> on :meth:`recover`.
 
 Scale notes: with ``partition_cols`` set (``ts_date`` is the natural
 choice — it is the reference's Redshift sortkey,
@@ -38,6 +57,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cdc_redshift_spark import commit
 from cdc_redshift_spark.plans.merge import apply_changeset as merge_apply
 from cdc_redshift_spark.sinks.base import Sink
 
@@ -247,11 +267,8 @@ class ParquetSink(Sink):
         return os.path.join(self.root, db, table)
 
     def _latest_version(self, db: str, table: str) -> int | None:
-        ptr = os.path.join(self._dir(db, table), "_LATEST")
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            return int(f.read().strip())
+        v = commit.read_pointer(os.path.join(self._dir(db, table), "_LATEST"))
+        return None if v is None else int(v)
 
     def table_exists(self, db: str, table: str) -> bool:
         return self._latest_version(db, table) is not None
@@ -388,15 +405,13 @@ class ParquetSink(Sink):
         inference rather than imposing the latest schema on old data.
 
         The default (current) read resolves through the published
-        ``_LATEST`` pointer to that version's OWN ``_SCHEMA`` copy —
-        NOT the table-level file — because schema writes happen at
-        operation time while pointer flips can be deferred (sink
-        transactions) or pre-empted (crash before flip): trusting the
-        table-level file let an ABORTED ``drop_column`` make the
-        column vanish from reads of the still-published old snapshot.
-        The version dir is the atomic unit; its schema travels with
-        it.  The table-level file remains as the fallback for
-        pre-upgrade tables whose version dirs carry no schema copy."""
+        ``_LATEST`` pointer to that version's OWN ``_SCHEMA`` copy:
+        schema writes happen at operation time while pointer flips can
+        be deferred (sink transactions) or pre-empted (crash before
+        flip), so the version dir is the atomic unit and its schema
+        travels with it.  A table-level ``_SCHEMA`` is no longer
+        written; it is read only as the fallback for pre-upgrade
+        tables whose version dirs carry no schema copy."""
         from pyspark.sql.types import StructType
 
         import json as _json
@@ -415,7 +430,7 @@ class ParquetSink(Sink):
             return StructType.fromJson(_json.load(f))
 
     def _write_schema(
-        self, db: str, table: str, df: DataFrame, v: int | None = None
+        self, db: str, table: str, df: DataFrame, v: int
     ) -> None:
         # carry the column-mapping metadata forward: a field that was
         # renamed keeps pointing at its ORIGINAL physical parquet name
@@ -435,22 +450,12 @@ class ParquetSink(Sink):
         ]
         self._write_schema_json(db, table, StructType(fields), v)
 
-    def _write_schema_json(
-        self, db: str, table: str, schema, v: int | None = None
-    ) -> None:
+    def _write_schema_json(self, db: str, table: str, schema, v: int) -> None:
         import json as _json
 
-        d = self._dir(db, table)
-        os.makedirs(d, exist_ok=True)
-        payload = _json.dumps(schema.jsonValue())
-        targets = [self._schema_path(db, table)]
-        if v is not None:  # per-version copy for time-travel reads
-            targets.append(self._schema_path(db, table, v))
-        for path in targets:
-            tmp = path + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(payload)
-            os.replace(tmp, path)
+        commit.atomic_write(
+            self._schema_path(db, table, v), _json.dumps(schema.jsonValue())
+        )
 
     # -- column mapping (metadata-only rename) ------------------------------
     def _mapping(self, db: str, table: str) -> dict[str, str]:
@@ -1643,11 +1648,7 @@ class ParquetSink(Sink):
     def _write_dropped(self, db: str, table: str, d: dict[str, str]) -> None:
         import json as _json
 
-        p = self._dropped_path(db, table)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(d, f)
-        os.replace(tmp, p)
+        commit.atomic_write(self._dropped_path(db, table), _json.dumps(d))
 
     def _machinery_cols(self) -> set[str]:
         return (
@@ -1866,11 +1867,7 @@ class ParquetSink(Sink):
         # the _DROPPED guard travels with the catalog: a changeset on
         # the clone carrying a source-dropped column must raise too
         if os.path.exists(self._dropped_path(db, table)):
-            os.makedirs(self._dir(dest_db, dest_table), exist_ok=True)
-            shutil.copyfile(
-                self._dropped_path(db, table),
-                self._dropped_path(dest_db, dest_table),
-            )
+            self._write_dropped(dest_db, dest_table, self._dropped(db, table))
         schema = self._read_schema(db, table)
         if schema is not None:
             self._write_schema_json(dest_db, dest_table, schema, 1)
@@ -2149,10 +2146,10 @@ class ParquetSink(Sink):
             }
         import json as _json
 
-        path = os.path.join(self._dir(db, table), f"v{v}", "_ANALYZE")
-        with open(path + ".tmp", "w") as f:
-            _json.dump(stats, f)
-        os.replace(path + ".tmp", path)
+        commit.atomic_write(
+            os.path.join(self._dir(db, table), f"v{v}", "_ANALYZE"),
+            _json.dumps(stats),
+        )
         # fresh stats restart the carry chain (see _carry_analyze):
         # a leftover age marker from a carried sidecar is now wrong
         age = os.path.join(self._dir(db, table), f"v{v}", "_ANALYZE_AGE")
@@ -2568,8 +2565,8 @@ class ParquetSink(Sink):
         (the :meth:`column_stats` contract) — any IO/parse error here
         (corrupt age file from a crashed writer, ENOSPC) just skips
         the carry and the planner falls back to the stats-free
-        default.  The age file writes tmp+rename so a crash can leave
-        it missing or old, never partial."""
+        default.  Both files publish through :func:`commit.atomic_write`,
+        so a crash can leave them missing or old, never partial."""
         try:
             d = self._dir(db, table)
             prev = (
@@ -2582,17 +2579,14 @@ class ParquetSink(Sink):
             if not os.path.exists(src) or os.path.exists(dst):
                 return
             age_path = os.path.join(d, f"v{prev}", "_ANALYZE_AGE")
-            age = 0
-            if os.path.exists(age_path):
-                with open(age_path) as f:
-                    age = int(f.read().strip() or 0)
+            age = int(commit.read_pointer(age_path) or 0)
             if age + 1 > self.analyze_carry_limit:
                 return
-            shutil.copyfile(src, dst)
-            tmp = os.path.join(d, f"v{v}", "_ANALYZE_AGE.tmp")
-            with open(tmp, "w") as f:
-                f.write(str(age + 1))
-            os.replace(tmp, os.path.join(d, f"v{v}", "_ANALYZE_AGE"))
+            with open(src) as f:
+                commit.atomic_write(dst, f.read())
+            commit.atomic_write(
+                os.path.join(d, f"v{v}", "_ANALYZE_AGE"), str(age + 1)
+            )
         except Exception:
             return
 
@@ -2638,19 +2632,13 @@ class ParquetSink(Sink):
                 os.path.join(self._dir(db, table), f"v{v}")
             )
         }
-        p = self._manifest_path(db, table, v)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(man, f)
-        os.replace(tmp, p)
+        commit.atomic_write(
+            self._manifest_path(db, table, v), _json.dumps(man)
+        )
 
     def _flip_now(self, db: str, table: str, v: int) -> None:
         d = self._dir(db, table)
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, "_LATEST.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, os.path.join(d, "_LATEST"))  # atomic pointer flip
+        commit.atomic_write(os.path.join(d, "_LATEST"), str(v))
         # the published version's OCC claim marker is spent
         claim = os.path.join(d, f"_CLAIM_v{v}")
         if os.path.exists(claim):
@@ -2748,10 +2736,7 @@ class SinkTransaction:
         import json as _json
 
         p = self.sink._txn_path()
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(flips, f)
-        os.replace(tmp, p)  # the atomic commit point
+        commit.atomic_write(p, _json.dumps(flips))  # the commit point
         for db, table, v in flips:
             self.sink._flip_now(db, table, v)
         os.remove(p)

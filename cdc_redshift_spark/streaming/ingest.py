@@ -45,6 +45,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cdc_redshift_spark import commit
+
 _INDEX_SCHEMA = "fp string, batch int"
 
 
@@ -456,9 +458,9 @@ def compact_batches(
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(tmp)
     rows = spark.read.parquet(tmp).count()
-    marker = os.path.join(root, _COMPACT_MARKER)
-    with open(marker + ".tmp", "w") as f:
-        json.dump({"upto": int(upto_batch), "remove": sources}, f)
-    os.replace(marker + ".tmp", marker)  # commit point
+    commit.atomic_write(  # the commit point
+        os.path.join(root, _COMPACT_MARKER),
+        json.dumps({"upto": int(upto_batch), "remove": sources}),
+    )
     _finish_pending_compaction(root)
     return {"folded_dirs": len(sources), "rows": rows}

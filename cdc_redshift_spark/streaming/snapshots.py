@@ -4,13 +4,14 @@ write-new-then-swap layout of ``ParquetSink`` keyed by BATCH ID, so a
 foreachBatch retry of an already-committed batch no-ops.
 
 Layout:  ``path/v<token>/part-*.parquet`` + ``path/_LATEST``
-containing the committed version token (atomic ``os.replace`` pointer
-flip); snapshots beyond ``keep_versions`` are pruned on commit, the
-previous one always kept so a reader holding the old pointer still
-resolves.  A token is the batch id (``7``) or, after an in-place
-re-bucket migration, the batch id plus a sub-version (``7_r1``) —
-the batch-id part alone drives replay idempotency, so a migration
-between batches never swallows or re-applies a real batch.
+containing the committed version token (a pointer flip published by
+:func:`cdc_redshift_spark.commit.atomic_write`, after the version's
+``_COMMITTED`` marker); snapshots beyond ``keep_versions`` are pruned
+on commit, the previous one always kept so a reader holding the old
+pointer still resolves.  A token is the batch id (``7``) or, after an
+in-place re-bucket migration, the batch id plus a sub-version
+(``7_r1``) — the batch-id part alone drives replay idempotency, so a
+migration between batches never swallows or re-applies a real batch.
 
 Bucketed mode (``bucket_keys`` + ``n_buckets`` set by the subclass):
 the snapshot is stored hash-partitioned on the state keys —
@@ -58,6 +59,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from cdc_redshift_spark import commit
 
 #: partition column for bucketed snapshots — "__" prefix keeps it out
 #: of the user column namespace (same convention as the planner's
@@ -171,11 +174,7 @@ class VersionedSnapshotStore:
         return None if tok is None else _parse_token(tok)[0]
 
     def _committed_token(self) -> str | None:
-        ptr = os.path.join(self.path, "_LATEST")
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            return f.read().strip()
+        return commit.read_pointer(os.path.join(self.path, "_LATEST"))
 
     def current(self, buckets: list[int] | None = None) -> DataFrame | None:
         """The committed snapshot (None before the first commit).
@@ -218,14 +217,13 @@ class VersionedSnapshotStore:
         the first commit sizes it)."""
         tok = self._committed_token()
         if tok is not None:
-            vpin = os.path.join(self.path, f"v{tok}", "_NBUCKETS")
-            if os.path.exists(vpin):
-                with open(vpin) as f:
-                    return int(f.read().strip())
-        pin = os.path.join(self.path, "_BUCKETS")
-        if os.path.exists(pin):
-            with open(pin) as f:
-                return int(f.read().strip())
+            vdir = os.path.join(self.path, f"v{tok}")
+            n = commit.read_pointer(os.path.join(vdir, "_NBUCKETS"))
+            if n is not None:
+                return int(n)
+        pin = commit.read_pointer(os.path.join(self.path, "_BUCKETS"))
+        if pin is not None:
+            return int(pin)
         return 0 if self.n_buckets == AUTO else int(self.n_buckets)
 
     def _bucket_expr(self, n: int | None = None):
@@ -437,31 +435,22 @@ class VersionedSnapshotStore:
         for root, _dirs, files in os.walk(vdir):
             if any(not f.startswith((".", "_")) for f in files):
                 return
-        npin = os.path.join(vdir, "_NBUCKETS")
-        pinned = None
-        if os.path.exists(npin):
-            with open(npin) as f:
-                pinned = f.read().strip()
+        pinned = commit.read_pointer(os.path.join(vdir, "_NBUCKETS"))
         state.limit(0).drop(BUCKET_COL).write.mode("overwrite").parquet(vdir)
         if pinned is not None:
-            with open(npin, "w") as f:
-                f.write(pinned)
+            self._record_nbuckets(vdir, int(pinned))
 
     def _record_nbuckets(self, vdir: str, n: int) -> None:
         """Record the count a version's layout was hashed with INSIDE
         the version dir — parquet readers skip underscore files, and
         the atomic ``_LATEST`` flip makes count + layout take effect
         together (the crash window a mutable global pin would have)."""
-        with open(os.path.join(vdir, "_NBUCKETS"), "w") as f:
-            f.write(str(int(n)))
+        commit.atomic_write(os.path.join(vdir, "_NBUCKETS"), str(int(n)))
 
     def _pin_buckets(self, n: int) -> None:
         pin = os.path.join(self.path, "_BUCKETS")
         if not os.path.exists(pin):
-            tmp = pin + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(str(int(n)))
-            os.replace(tmp, pin)
+            commit.atomic_write(pin, str(int(n)))
 
     def _bucketed_on_disk(self) -> bool:
         """Whether the COMMITTED version is bucket-partitioned (an
@@ -513,14 +502,9 @@ class VersionedSnapshotStore:
         # crash between marker and pointer leaves a marked-but-never-
         # pointed dir, which is merely retained until keep_versions
         # ages it out — safe in both directions.
-        with open(
-            os.path.join(self.path, f"v{token}", "_COMMITTED"), "w"
-        ) as f:
-            f.write("1")
-        tmp = os.path.join(self.path, "_LATEST.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(token))
-        os.replace(tmp, os.path.join(self.path, "_LATEST"))
+        vdir = os.path.join(self.path, f"v{token}")
+        commit.atomic_write(os.path.join(vdir, "_COMMITTED"), "1")
+        commit.atomic_write(os.path.join(self.path, "_LATEST"), str(token))
         # prune old snapshots beyond keep_versions (the previous one is
         # kept so a reader holding the old pointer still resolves;
         # hard-linked files survive — rmtree only unlinks names).

@@ -119,95 +119,6 @@ def stateful_lww_dedup(
     )
 
 
-def tws_available() -> bool:
-    """True when transformWithStateInPandas can actually RUN here: the
-    API's state-server protocol needs ``google.protobuf`` at stream
-    start (pyspark declares it for connect/streaming extras; this
-    container omits it)."""
-    from importlib.util import find_spec
-
-    try:
-        return find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no 'google' namespace package at all
-        return False
-
-
-def stateful_lww_dedup_tws(
-    changes: DataFrame,
-    keys: Sequence[str] = ("db", "table", "key"),
-    state_ttl_ms: int | None = None,
-) -> DataFrame:
-    """Continuous LWW dedup on Spark 4's ``transformWithStateInPandas``
-    — same semantics and state shape as :func:`stateful_lww_dedup`
-    (exact suppression: a batch whose events all lose to the remembered
-    winner emits NOTHING for that key), on the successor API.
-
-    Why it exists alongside the ``applyInPandasWithState`` form:
-    transformWithState is the API Spark is consolidating stateful
-    processing on — typed state variables (value/list/map) instead of
-    one tuple, per-state TTL without manual timeout bookkeeping,
-    timers, and initial-state bootstrap.  Operationally it runs on the
-    same keyed state store (one shuffle on ``keys``, O(1) state/key,
-    RocksDB-checkpointable), so the 100 TB story is unchanged; the
-    per-key-group Python dispatch cost also matches, so the
-    ``max_by`` aggregate form remains the throughput pick
-    (:func:`stateful_lww_dedup_agg`).
-
-    Runtime dependency: transformWithState's Python↔JVM state protocol
-    rides on protobuf (``google.protobuf``), which this container does
-    not ship — so here the operator is plan-constructable and
-    schema-checked but the stream crashes at start
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE), exactly like the
-    Kafka source's live-broker path (SURVEY §2 S1).  On a standard
-    Spark 4 install (protobuf is a required pyspark dependency there)
-    it runs as written; the parity test skips itself when protobuf is
-    absent and documents why.  :func:`tws_available` reports the
-    capability.
-    """
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class _LwwProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._winner = handle.getValueState(
-                "winner", _STATE_SCHEMA, ttlDurationMs=state_ttl_ms
-            )
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timer_values
-        ) -> Iterator[pd.DataFrame]:
-            best = None
-            best_key = None
-            for pdf in rows:
-                m = len(pdf)
-                if not m:
-                    continue
-                ts = pdf["ts_ms"].to_numpy()
-                off = pdf["offset"].to_numpy()
-                # same vectorized argmax as stateful_lww_dedup
-                i = 0 if m == 1 else int(np.lexsort((off, ts))[-1])
-                cand_key = (int(ts[i]), int(off[i]))
-                if best is None or cand_key > best_key:
-                    best = pdf if m == 1 else pdf.iloc[[i]]
-                    best_key = cand_key
-            if best is None:
-                return
-            prev = self._winner.get()
-            if prev is not None and best_key <= (prev[0], prev[1]):
-                return  # exact suppression, matching the pandas-state form
-            self._winner.update(best_key)
-            yield best
-
-        def close(self) -> None:
-            pass
-
-    return changes.groupBy(*[F.col(k) for k in keys]).transformWithStateInPandas(
-        statefulProcessor=_LwwProcessor(),
-        outputStructType=CHANGESET_SCHEMA,
-        outputMode="update",
-        timeMode="processingTime" if state_ttl_ms is not None else "none",
-    )
-
-
 def stateful_lww_dedup_agg(
     changes: DataFrame, keys: Sequence[str] = ("db", "table", "key")
 ) -> DataFrame:

@@ -263,58 +263,6 @@ def test_compaction_folds_dirs_and_preserves_replay(spark, docs):
         assert got2 == want
 
 
-def test_compaction_crash_recovery_never_loses_rows(spark, docs):
-    """Kill the swap at its worst points: after the marker is written
-    but before source removal, and after removal but before the
-    rename.  Every entry path must converge to the same folded state
-    with zero row loss."""
-    import json
-    import shutil
-
-    from cdc_redshift_spark.streaming.ingest import (
-        _COMPACT_MARKER,
-        _COMPACT_TMP,
-        _finish_pending_compaction,
-        compact_batches,
-    )
-
-    hi = docs.agg(F.max("doc_id")).collect()[0][0] + 1
-    with tempfile.TemporaryDirectory() as tmp:
-        idx, acc = os.path.join(tmp, "idx"), os.path.join(tmp, "acc")
-        dd = IngestDeduper(idx, acc)
-        cuts = [0, hi // 3, 2 * hi // 3, hi]
-        for i, (lo, up) in enumerate(zip(cuts, cuts[1:])):
-            dd(docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < up)), i)
-        rows_before = spark.read.parquet(idx).drop("batch").count()
-
-        # simulate: crash right AFTER the commit marker (stage the tmp
-        # dir + marker by hand, exactly what compact_batches writes)
-        sources = [d for d in _dirs(idx) if d.startswith("batch=")]
-        union = spark.read.parquet(*[os.path.join(idx, d) for d in sources])
-        union.write.mode("overwrite").parquet(os.path.join(idx, _COMPACT_TMP))
-        with open(os.path.join(idx, _COMPACT_MARKER), "w") as f:
-            json.dump({"upto": 3, "remove": sources}, f)
-
-        # crash point A: nothing removed yet -> recovery completes all
-        assert _finish_pending_compaction(idx)
-        assert _dirs(idx) == ["batch=-1"]
-        assert spark.read.parquet(idx).drop("batch").count() == rows_before
-
-        # crash point B: rename done but marker left behind (the
-        # post-rename window) — recovery must NOT delete batch=-1
-        with open(os.path.join(idx, _COMPACT_MARKER), "w") as f:
-            json.dump({"upto": 3, "remove": ["batch=-1"] + sources}, f)
-        assert _finish_pending_compaction(idx)
-        assert _dirs(idx) == ["batch=-1"]
-        assert spark.read.parquet(idx).drop("batch").count() == rows_before
-
-        # idempotent no-op when nothing left to fold
-        assert compact_batches(spark, idx, upto_batch=99) == {
-            "folded_dirs": 0,
-            "rows": 0,
-        }
-
-
 def test_compaction_works_for_neardup_signature_index(spark, docs):
     """compact_batches is layout-generic: the near-dup deduper's
     signature index (id, sh, sig arrays) folds the same way, and the

@@ -1240,39 +1240,6 @@ def test_transaction_abort_publishes_nothing(spark, tmp_path):
     assert {r.payload for r in sink.read_table(spark, "d", "a").collect()} == {"a3"}
 
 
-def test_transaction_crash_after_manifest_rolls_forward(spark, tmp_path, monkeypatch):
-    """Crash between the intent manifest and the pointer flips: a new
-    sink instance (pipeline restart) rolls the transaction FORWARD."""
-    sink = ParquetSink(spark, str(tmp_path))
-    sink.apply_changeset("d", "a", chdf(spark, [("1", 100, 0, "insert", "a1")]))
-    sink.apply_changeset("d", "b", chdf(spark, [("1", 100, 0, "insert", "b1")]))
-
-    flips = []
-    orig = ParquetSink._flip_now
-
-    def crashing_flip(self, db, table, v):
-        if flips:  # let the first flip through, die before the second
-            raise OSError("simulated crash mid-publish")
-        flips.append((db, table, v))
-        orig(self, db, table, v)
-
-    with monkeypatch.context() as m:
-        m.setattr(ParquetSink, "_flip_now", crashing_flip)
-        import pytest
-
-        with pytest.raises(OSError, match="simulated crash"):
-            with sink.transaction():
-                sink.apply_changeset("d", "a", chdf(spark, [("1", 200, 1, "update", "a2")]))
-                sink.apply_changeset("d", "b", chdf(spark, [("1", 200, 1, "update", "b2")]))
-    # half-published state + pending manifest on disk
-    assert os.path.exists(str(tmp_path / "_TXN_PENDING"))
-    # restart: a fresh sink self-heals in __init__
-    sink2 = ParquetSink(spark, str(tmp_path))
-    assert not os.path.exists(str(tmp_path / "_TXN_PENDING"))
-    assert {r.payload for r in sink2.read_table(spark, "d", "a").collect()} == {"a2"}
-    assert {r.payload for r in sink2.read_table(spark, "d", "b").collect()} == {"b2"}
-
-
 def test_transaction_same_table_twice_raises(spark, tmp_path):
     import pytest
 

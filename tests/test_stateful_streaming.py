@@ -263,89 +263,3 @@ def test_streaming_sessionize_gap_merge_and_close(spark, tmp_path):
     assert s1["first_ts_ms"] == t0 and s1["last_ts_ms"] == t0 + 300_000
     # session end = last event + gap (30 min)
     assert (s1["session_end"] - s1["session_start"]).total_seconds() == 35 * 60
-
-
-def test_tws_lww_plan_construction(spark):
-    """The transformWithState form must at least BUILD here (schema
-    resolution and the grouped-plan shape don't need protobuf): the
-    output schema must equal the pandas-state form's."""
-    from cdc_redshift_spark.streaming.stateful import stateful_lww_dedup_tws
-
-    indir_schema = (
-        "db string, table string, key string, ts_ms long, offset long, "
-        "op string, payload string, ts_date date"
-    )
-    import tempfile
-
-    src = spark.readStream.schema(indir_schema).json(tempfile.mkdtemp())
-    out_tws = stateful_lww_dedup_tws(src)
-    out_pds = stateful_lww_dedup(src)
-    assert out_tws.schema == out_pds.schema
-    assert out_tws.isStreaming
-
-
-import pytest as _pytest
-
-from cdc_redshift_spark.streaming.stateful import tws_available
-
-
-@_pytest.mark.skipif(
-    not tws_available(),
-    reason="transformWithState needs google.protobuf at stream start; "
-    "not shipped in this container (see stateful_lww_dedup_tws docstring)",
-)
-def test_tws_lww_parity_with_pandas_state(spark, tmp_path):
-    """transformWithStateInPandas LWW form: identical emissions to the
-    applyInPandasWithState form across the same cross-batch scenario —
-    fresh keys, stale suppression, checkpointed state surviving a
-    restart."""
-    from cdc_redshift_spark.streaming.stateful import stateful_lww_dedup_tws
-
-    # transformWithState requires the RocksDB state store provider
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    batches = [
-        [pg_line("c", 1, 100, {"v": "a"}, 0), pg_line("c", 2, 100, {"v": "b"}, 1)],
-        [
-            pg_line("u", 1, 50, {"v": "stale"}, 2),
-            pg_line("u", 2, 200, {"v": "b2"}, 3),
-            pg_line("c", 3, 150, {"v": "c"}, 4),
-            # in-batch duel for k3: the (ts, offset) winner must be picked
-            pg_line("u", 3, 150, {"v": "c2"}, 5),
-        ],
-        [pg_line("u", 1, 75, {"v": "older"}, 6)],
-    ]
-    results = {}
-    try:
-        for form, build in (
-            ("pandas_state", stateful_lww_dedup),
-            ("tws", stateful_lww_dedup_tws),
-        ):
-            indir = str(tmp_path / form / "in")
-            ckpt = str(tmp_path / form / "ckpt")
-            os.makedirs(indir, exist_ok=True)
-            per_phase = []
-            for i, lines in enumerate(batches):
-                write_batch_file(indir, f"b{i}.json", lines)
-                emitted = run_updates(spark, indir, ckpt, build)
-                per_phase.append(
-                    sorted((r["key"], r["ts_ms"], r["offset"]) for r in emitted)
-                )
-            results[form] = per_phase
-    finally:
-        if old_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old_provider)
-    assert results["tws"] == results["pandas_state"]
-    # and both match the scenario's expected emissions
-    assert results["tws"] == [
-        [("1", 100, 0), ("2", 100, 1)],
-        [("2", 200, 3), ("3", 150, 5)],
-        [],
-    ]

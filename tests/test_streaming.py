@@ -7,6 +7,7 @@ import json
 import logging
 import os
 
+from cdc_redshift_spark import commit
 from cdc_redshift_spark.config import JobConfig, load_config
 from cdc_redshift_spark.normalize import pg_changeset
 from cdc_redshift_spark.sinks.parquet_sink import ParquetSink
@@ -38,10 +39,8 @@ def pg_line(op, key, ts_ms, payload=None, offset=0, db="d1", table="t1"):
 
 
 def write_batch_file(d: str, name: str, lines: list[str]) -> None:
-    tmp = os.path.join(d, f".{name}.tmp")
-    with open(tmp, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    os.replace(tmp, os.path.join(d, name))
+    # a file-stream source must never list a partial batch file
+    commit.atomic_write(os.path.join(d, name), "\n".join(lines) + "\n")
 
 
 def mk_pipeline(spark, tmp_path, **kw) -> tuple[CdcPipeline, ParquetSink, str, str]:

@@ -47,21 +47,12 @@ from cdc_redshift_spark.streaming.stateful import (
 
 _DAY = 86_400_000
 
-#: container format for streaming phase files (round-16, VERDICT r15
-#: "Next round" #4): the harness writes each phase's rows and the
-#: stream reads them back — parquet removes the per-row JSON encode at
-#: write AND the schema-directed JSON parse on every stream read
-#: (guide §4/§6).  The envelope `value` STRINGS are the data and ride
-#: both containers byte-identically, so every gated streaming query's
-#: results are unchanged (re-verified against the DuckDB oracle).
-_PHASE_FMT = "parquet"
-
-
 def _write_phase(df: DataFrame, n_files: int, indir: str) -> None:
-    """One phase's rows -> ``n_files`` files (coalesce > 1 keeps the
-    encode parallel) in the harness container format."""
-    w = df.coalesce(n_files).write.mode("append")
-    w.parquet(indir) if _PHASE_FMT == "parquet" else w.json(indir)
+    """One phase's rows -> ``n_files`` parquet files (coalesce > 1 keeps
+    the encode parallel).  Parquet, not JSON: no per-row encode at write
+    and no schema-directed parse on every stream read; the envelope
+    ``value`` strings ride through byte-identically."""
+    df.coalesce(n_files).write.mode("append").parquet(indir)
 
 
 def _raw_shape(df: DataFrame) -> DataFrame:
@@ -83,7 +74,7 @@ def _changeset_stream(spark: SparkSession, indir: str) -> DataFrame:
     form re-emits a remembered winner whenever a later losing batch
     touches its key, inflating the emission count.)"""
     return pg_changeset(
-        file_stream(spark, indir, max_files_per_trigger=None, fmt=_PHASE_FMT),
+        file_stream(spark, indir, max_files_per_trigger=None, fmt="parquet"),
         offset_col="offset",
     )
 
@@ -99,7 +90,7 @@ def _drive_phases(
     """Shared streaming-query harness.
 
     For each ``(df, n_files)`` phase: write the rows as ``n_files``
-    JSON files (coalesce > 1 keeps the encode parallel), then drain
+    parquet files (coalesce > 1 keeps the encode parallel), then drain
     ``build(spark, indir)`` with ``availableNow`` so the whole phase is
     one micro-batch whose emissions append to a parquet landing dir
     (``with_batch_id`` stamps each emission with its micro-batch id for
@@ -140,6 +131,9 @@ def _drive_phases(
                 "would silently corrupt the oracle comparison"
             )
 
+    # kept under every session: a stateful query's state store keeps
+    # the shuffle.partitions of its first checkpoint, and no AQE conf
+    # resizes it
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "16")
     try:
@@ -381,11 +375,9 @@ def q_events_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         reader = sp.readStream.schema(
             "event_id long, user_id long, event_type string, ts_us long"
         )
-        src = (
-            reader.parquet(indir)
-            if _PHASE_FMT == "parquet"
-            else reader.json(indir)
-        ).withColumn("ts", F.timestamp_micros(F.col("ts_us")))
+        src = reader.parquet(indir).withColumn(
+            "ts", F.timestamp_micros(F.col("ts_us"))
+        )
         purchases = src.filter(F.col("event_type") == "purchase").select(
             F.col("event_id").alias("p_id"),
             "user_id",
@@ -567,8 +559,6 @@ def q_cdc_ingest_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(indir, exist_ok=True)
     dedup = IngestDeduper(idx, acc)
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
     try:
         for lo, up in zip(cuts, cuts[1:]):
             _write_phase(
@@ -581,11 +571,7 @@ def q_cdc_ingest_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             reader = spark.readStream.schema("doc_id bigint, text string")
             q = (
                 # no file cap: the wave = one micro-batch
-                (
-                    reader.parquet(indir)
-                    if _PHASE_FMT == "parquet"
-                    else reader.json(indir)
-                )
+                reader.parquet(indir)
                 .writeStream.foreachBatch(dedup)
                 .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
@@ -603,7 +589,6 @@ def q_cdc_ingest_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         shutil.rmtree(root, ignore_errors=True)
 
     return out
@@ -644,8 +629,6 @@ def q_cdc_ingest_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             if e.startswith("batch=") and os.path.isdir(os.path.join(d, e))
         )
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
     try:
         dd = IngestDeduper(idx, acc)
         waves = list(zip(cuts, cuts[1:]))
@@ -674,7 +657,6 @@ def q_cdc_ingest_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         shutil.rmtree(root, ignore_errors=True)
     return out
 
@@ -744,6 +726,11 @@ def q_cdc_stream_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="drift_stream_")
     indir, ckpt = os.path.join(root, "in"), os.path.join(root, "ckpt")
     os.makedirs(indir, exist_ok=True)
+    # kept for sessions not built by get_spark: without its cached-plan
+    # conf, the applier's localCheckpoint inside foreachBatch keeps all
+    # shuffle.partitions (default 200) partitions.  Pinned to 16 this
+    # entry ran 3.55 s instead of 4.53 s (median of 4, sf0.01, plain
+    # local[8] session on 4 cores).
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "16")
     try:
@@ -751,7 +738,7 @@ def q_cdc_stream_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             _write_phase(_raw_shape(phase), 8, indir)
             q = (
                 file_stream(
-                    spark, indir, max_files_per_trigger=None, fmt=_PHASE_FMT
+                    spark, indir, max_files_per_trigger=None, fmt="parquet"
                 )
                 .writeStream.foreachBatch(applier)
                 .option("checkpointLocation", ckpt)
@@ -2052,6 +2039,11 @@ def q_cdc_dead_letter_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = _os.path.join(root, "ckpt")
     dlq = _os.path.join(root, "dlq")
     _os.makedirs(indir, exist_ok=True)
+    # kept for sessions not built by get_spark: without its cached-plan
+    # conf, the pipeline's persisted LWW batch keeps all
+    # shuffle.partitions (default 200) partitions.  Pinned to 16 this
+    # entry ran 3.06 s instead of 11.8 s (median of 4, sf0.01, plain
+    # local[8] session on 4 cores).
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "16")
     try:
@@ -2067,7 +2059,7 @@ def q_cdc_dead_letter_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q = pipe.start(
             file_stream(
-                spark, indir, max_files_per_trigger=None, fmt=_PHASE_FMT
+                spark, indir, max_files_per_trigger=None, fmt="parquet"
             ),
             checkpoint=ckpt,
             available_now=True,

@@ -7,6 +7,14 @@ That choice dies at 100 TB.  We instead enable AQE so Spark picks the
 partition count at runtime (coalescing small batches down to few tasks
 — same effect as the reference's 1 — while scaling up for big ones),
 and leave shuffle.partitions at a per-deployment value.
+
+Cached plans follow the same rule: AQE may coalesce a ``persist()``ed
+plan's output partitions too, so a job over a cached micro-batch (the
+pipeline's LWW result, a sink slice) runs as many tasks as its data
+needs instead of ``initialPartitionNum``.  One builder default, no
+runtime toggle; only the state store of a stateful stream keeps the
+partition count it was first checkpointed with, because no AQE conf
+resizes it.
 """
 
 from __future__ import annotations
@@ -48,6 +56,11 @@ def get_spark(
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             str(max(256, int(cpus) * 8)),
+        )
+        # without this AQE leaves a persisted plan at the wide initial
+        # width, and every job over the cache runs ~256 tasks
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

@@ -605,7 +605,7 @@ class ParquetSink(Sink):
         EVERY micro-batch commit one fixed-latency aggregation job to
         reach a foregone conclusion (measured 74% per-commit overhead
         on a 1.5k-row micro-batch against a 150k-row table;
-        tools/probe_apply_steady.py).
+        SCALE.md "Round-10: CDC apply steady state").
         """
         self.last_merge_plan = None
         if target is None:

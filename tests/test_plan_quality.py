@@ -416,6 +416,34 @@ def test_aqe_coalesces_small_query_despite_wide_initial_partitions(spark):
             f"small aggregate fragmented into {n_parts} partitions; "
             f"AQE coalescing lost (plan: {plan[:400]})"
         )
+
+        # a CACHED plan too: CdcPipeline persists each micro-batch's LWW
+        # result and routes/applies over it; AQE must coalesce the
+        # persisted shuffle, or every job over the cache runs
+        # initialPartitionNum tasks whatever the batch size
+        from cdc_redshift_spark.dedup import latest_per_key
+
+        changes = latest_per_key(
+            prod.range(2_000).selectExpr(
+                "'db' AS db",
+                "CAST(id % 3 AS STRING) AS table",
+                "CAST(id % 97 AS STRING) AS key",
+                "id AS ts_ms",
+                "id AS offset",
+                "IF(id % 5 = 0, 'delete', 'upsert') AS op",
+            )
+        ).persist()
+        try:
+            changes.count()
+            cached_parts = (
+                changes.where("op <> 'delete'").rdd.getNumPartitions()
+            )
+            assert cached_parts <= 16, (
+                f"filter over a cached LWW batch runs {cached_parts} "
+                "partitions; AQE does not coalesce persisted plans"
+            )
+        finally:
+            changes.unpersist()
     finally:
         # static confs (driver memory, UI) never reach a live session
         for r in spark.sql("SET").collect():

@@ -667,9 +667,9 @@ def test_merge_strategy_under_floor_skips_changeset_pricing(
     target below the broadcast floor, the flip can never engage, so
     _merge_strategy must NOT pay the df_key_stats aggregation job —
     measured at 74% per-commit overhead on micro-batches before this
-    (tools/probe_apply_steady.py).  With the floor lowered, the same
-    sink consults the changeset again (decision unchanged either way
-    for an under-8x-ratio batch: shuffle)."""
+    (SCALE.md "Round-10: CDC apply steady state").  With the floor
+    lowered, the same sink consults the changeset again (decision
+    unchanged either way for an under-8x-ratio batch: shuffle)."""
     import cdc_redshift_spark.operators.planner as planner
     from cdc_redshift_spark.sinks.parquet_sink import ParquetSink
     from pyspark.sql import functions as F

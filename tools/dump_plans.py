@@ -91,10 +91,9 @@ CALLOUTS = {
     # bucketed store (SCALE.md round-11 second session).  The same
     # holds for the round-13 streaming faces cdc_stream_emb_drift /
     # cdc_stream_token_drift / cdc_rollup_autogrow_stream (history
-    # independence probed by tools/probe_stream_drift_scale.py,
-    # SCALE.md round-13) and the round-14 privacy faces
-    # cdc_stream_k_anonymity / cdc_stream_l_diversity (maintained
-    # QI-class counts; scoring reads only state cells through the
+    # independence measured in SCALE.md round-13) and the round-14
+    # privacy faces cdc_stream_k_anonymity / cdc_stream_l_diversity
+    # (maintained QI-class counts; scoring reads only state cells through the
     # shared k_anonymity_score / l_diversity_score expressions whose
     # batch plans ARE dumped above).
     # cdc_stream_ivf_index's scale property (batch=<id>/cell=<c> probes

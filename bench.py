@@ -345,7 +345,7 @@ def main() -> None:
     cdc_secs = timed(lambda: run_apply(raw), keep_cache=True)
     rec_per_s = n_events / cdc_secs if cdc_secs > 0 else 0.0
 
-    # Scaling evidence (tools/scale_smoke.py folded in): the same CDC
+    # Scaling evidence (SCALE.md): the same CDC
     # batch at 4x replication — throughput should RISE as fixed costs
     # amortize (single-shuffle, map-side-combine plan); a drop flags a
     # scaling regression.  Reported in `extra` only, so the headline

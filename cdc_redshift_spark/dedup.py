@@ -36,10 +36,7 @@ def latest_per_key(
     partial winner per (keys, hash-salt) — the hot key's rows spread
     over ``salt`` window tasks — phase 2 picks the winner of the ≤
     ``salt`` survivors per key.  Same result (max over a partition is
-    associative); bounded task size.  Prefer
-    :func:`latest_per_key_agg` where possible — its map-side combine
-    handles skew without the extra pass — but the salted window keeps
-    window semantics for callers that pin this plan shape.
+    associative); bounded task size.
     """
     order = [F.col(ts_col).desc()]
     if tiebreak_col is not None:
@@ -67,25 +64,3 @@ def latest_per_key(
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def latest_per_key_agg(
-    df: DataFrame,
-    keys: Sequence[str] = ("db", "table", "key"),
-    ts_col: str = "ts_ms",
-    tiebreak_col: str = "offset",
-) -> DataFrame:
-    """Skew-robust LWW via max_by on a struct ordering key.
-
-    ``max_by(struct(all columns), struct(ts, offset))`` aggregates with
-    map-side partial combine, so a hot key reduces locally in every
-    task before one value per key crosses the shuffle — unlike the
-    window variant, which must co-locate every duplicate row.  Prefer
-    this form at scale; semantics are identical to
-    :func:`latest_per_key`.
-    """
-    payload_cols = [c for c in df.columns]
-    ordered = F.struct(F.col(ts_col), F.col(tiebreak_col))
-    row = F.struct(*[F.col(c) for c in payload_cols])
-    out = df.groupBy(*keys).agg(F.max_by(row, ordered).alias("__row"))
-    return out.select(*[F.col(f"__row.{c}").alias(c) for c in payload_cols])

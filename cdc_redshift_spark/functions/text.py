@@ -145,7 +145,7 @@ def winnow_fingerprints(col: Column, k: int = 8, w: int = 4) -> Column:
     SIGMOD'03 — the rolling-hash scheme behind MOSS).
 
     Positional k-gram hashes of the normalized text (portable 28-bit
-    md5 ints, see operators/dedup.py `shingle_hashes`), then each
+    md5 ints, see operators/dedup.py `exploded_shingle_hashes`), then each
     w-window's MINIMUM hash is selected; the distinct window minima
     are the document's fingerprint set.  Guarantees of the scheme: any
     shared substring of length ≥ k + w - 1 contributes at least one
@@ -280,15 +280,6 @@ def winnow_fingerprints_df_window(
         F.min("h").over(wspec).alias("wmin"),
     ).where(F.col("__i") <= F.greatest(F.col("__n") - (w - 1), F.lit(1)))
     return mins.groupBy("id").agg(F.collect_set("wmin").alias("fps"))
-
-
-def char_ngrams(col: Column, n: int = 3) -> Column:
-    """Character n-gram (shingle) array of the normalized text —
-    substring over a generated index sequence, all JVM-side."""
-    norm = normalize_text(col)
-    # sequence(1, greatest(len - n + 1, 1)) then substring per position
-    idx = F.sequence(F.lit(1), F.greatest(F.length(norm) - F.lit(n - 1), F.lit(1)))
-    return F.transform(idx, lambda i: F.substring(norm, i, n))
 
 
 #: PII patterns for corpus redaction — conservative, precision-first

@@ -1193,106 +1193,3 @@ def bpe_pair_counts(
         .orderBy(F.desc("cnt"), F.asc("left"), F.asc("right"))
         .limit(k)
     )
-
-
-def _apply_merge(syms: Column, left: str, right: str) -> Column:
-    """Greedy left-to-right non-overlapping merge of adjacent
-    (left, right) into left||right — the standard BPE apply rule — as
-    one codegen fold (no UDF)."""
-    merged = left + right
-    return F.aggregate(
-        syms,
-        F.expr("CAST(array() AS array<string>)"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(left))
-            & (s == F.lit(right)),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(F.lit(merged)),
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
-
-
-def bpe_train(
-    docs: DataFrame,
-    n_merges: int = 10,
-    text_col: str = "text",
-) -> list[tuple[int, str, str, int]]:
-    """Train ``n_merges`` BPE merges: per round, ONE vocab-sized pair
-    aggregation picks the most frequent adjacent pair (ties: left asc,
-    right asc — deterministic), the merge applies to the symbol arrays
-    as a codegen fold, and the loop repeats on the updated vocab.
-
-    Driver state is one (left, right, cnt) row per round — the
-    centroid-seed bounded-collect class; the vocab frame is
-    localCheckpoint'ed each round (lineage truncation, the PageRank
-    discipline).  Returns [(rank, left, right, cnt)], rank 1 first.
-
-    At 100 TB the corpus scan happens ONCE (word-type fold); each of
-    the R merge rounds then costs one aggregation over the vocab
-    (~1e6-1e8 rows), which is why production BPE trainers are
-    feasible at all — the loop never re-reads the corpus.
-    """
-    vocab = _bpe_word_types(docs, text_col).localCheckpoint(eager=True)
-    out: list[tuple[int, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
-        top = (
-            _pair_counts(vocab)
-            .orderBy(F.desc("cnt"), F.asc("left"), F.asc("right"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        left, right, cnt = top[0]["left"], top[0]["right"], top[0]["cnt"]
-        out.append((rank, left, right, int(cnt)))
-        nxt = vocab.withColumn(
-            "syms", _apply_merge(F.col("syms"), left, right)
-        ).localCheckpoint(eager=True)
-        vocab.unpersist()
-        vocab = nxt
-    vocab.unpersist()
-    return out
-
-
-def bpe_encode(
-    docs: DataFrame,
-    merges: list[tuple[int, str, str, int]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Apply a trained merge table (:func:`bpe_train` output) to the
-    corpus: every word decomposes to characters + '</w>' and the
-    merges replay IN RANK ORDER as chained greedy folds — the standard
-    BPE encode.  Returns (``id_col``, n_words, n_tokens, tokens) where
-    ``tokens`` is the per-document subword sequence.
-
-    Plan: pure codegen Column expressions (one fold per merge, no UDF,
-    no shuffle) — encoding is embarrassingly parallel however large
-    the corpus.  Keep the merge table to O(100) entries per call;
-    each merge adds one fold layer to the expression tree (chunk
-    deeper vocabularies into successive selects if codegen depth
-    becomes a limit)."""
-    from cdc_redshift_spark.functions.text import words
-
-    toks = F.filter(words(F.col(text_col)), lambda w: w != "")
-    syms = F.transform(
-        toks,
-        lambda w: F.concat(F.split(w, ""), F.array(F.lit("</w>"))),
-    )
-    def _merge_fn(left: str, right: str):
-        # a closure, not default-arg capture: PySpark derives the
-        # higher-order function's arity from the lambda signature
-        return lambda s: _apply_merge(s, left, right)
-
-    for _rank, left, right, _cnt in merges:
-        syms = F.transform(syms, _merge_fn(left, right))
-    flat = F.flatten(syms)
-    return docs.select(
-        F.col(id_col),
-        F.size(toks).alias("n_words"),
-        F.size(flat).alias("n_tokens"),
-        flat.alias("tokens"),
-    )

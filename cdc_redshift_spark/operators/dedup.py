@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cdc_redshift_spark.functions.text import char_ngrams, normalize_text
+from cdc_redshift_spark.functions.text import normalize_text
 from cdc_redshift_spark.operators.simjoin import (
     _capture_plan,
     stable_verify_codegen,
@@ -59,21 +59,6 @@ def minhash_coeffs(k: int, seed: int = 42) -> list[tuple[int, int]]:
         b = x % MINHASH_P
         coeffs.append((a, b))
     return coeffs
-
-
-def shingle_hashes(text_col: Column, n: int = 3) -> Column:
-    """Distinct char-n-gram shingles → portable 28-bit hashes.
-
-    Hash = first 7 hex chars of md5, parsed as int — identical in
-    DuckDB (`('0x' || substr(md5(s),1,7))::BIGINT`), so oracles can
-    mirror signatures exactly.  28 bits keeps h*a below 2^59 so the
-    minhash permutation (h*a + b) never overflows int64 in either
-    engine (Spark would wrap silently; DuckDB throws).
-    """
-    grams = F.array_distinct(char_ngrams(text_col, n))
-    return F.transform(
-        grams, lambda s: F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("long")
-    )
 
 
 def minhash_signature_from(hashes: Column, k: int = 32) -> Column:
@@ -681,6 +666,9 @@ def minhash_lsh_pairs(
         )
 
     if eager:
+        # unguarded on purpose: the array verify is already inside the
+        # guarded `scored` cache (or Arrow-side on the bitmap path), so
+        # this plan compiles only a threshold over its output
         ck = out.localCheckpoint(eager=True)
         _capture_plan(f"minhash_lsh_pairs.{unit}", out)
         out = ck

@@ -486,8 +486,8 @@ def join_view_delta(
     ``ParquetSink`` layout), pass ``left_new`` ALREADY PRUNED to the
     delta's buckets — rows outside ``dR``'s key buckets cannot join
     ``dR``, so the filter is semantics-free and turns the fact scan
-    into a touched-partition read (measured 1/64 of files in
-    ``tools/scale_smoke.py``; SCALE.md round-6 second pass).
+    into a touched-partition read (measured 1/64 of files, SCALE.md
+    round-6 second pass).
     """
     l_cols = [c for c in d_left.columns if c != sign_col]
     part1 = (

@@ -238,6 +238,10 @@ def jaccard_similarity_join(
         # token hashes in the SAME rarest-first order (see hash_verify)
         .withColumn("hs", F.transform("toks", lambda t: F.xxhash64(t)))
     )
+    if hash_verify:
+        # candidates and the verify read only hs: keep toks out of
+        # the persisted frame
+        ordered = ordered.drop("toks")
     if eager:
         # NOTE: persist() plans the cached subtree EAGERLY at this call
         # (CacheManager resolves executedPlan when the cache is

@@ -59,8 +59,7 @@ def apply_changeset(
     A row is a delete iff its op equals ``'delete'`` NULL-SAFELY: a
     NULL op (a malformed envelope that _map_op passes through) is
     data, not a tombstone — the three-valued ``!=`` filter would
-    otherwise silently drop the winning row from the state (and from
-    BOTH halves of :func:`split_upserts_deletes`).
+    otherwise silently drop the winning row from the state.
 
     ``keep_tombstones=True`` retains winning delete rows (op='delete')
     in the output instead of dropping them.  Sinks that store state
@@ -263,21 +262,6 @@ def _broadcast_apply(
     if keep_tombstones:
         return out
     return out.where(~F.col(op_col).eqNullSafe(F.lit(DELETE_OP)))
-
-
-def split_upserts_deletes(
-    changes: DataFrame, op_col: str = "op"
-) -> tuple[DataFrame, DataFrame]:
-    """Partition a deduped changeset into (upserts, deletes).
-
-    Mirrors the reference's two-write path (non-deletes with MERGE
-    postaction, then deletes with DELETE USING postaction —
-    glue_dms_redshift_cdc.py:175-193).  Used by SQL-pushing sinks;
-    the native path uses :func:`apply_changeset` directly.
-    """
-    upserts = changes.where(~F.col(op_col).eqNullSafe(F.lit(DELETE_OP)))
-    deletes = changes.where(F.col(op_col).eqNullSafe(F.lit(DELETE_OP)))
-    return upserts, deletes
 
 
 def merge_into(

@@ -13,7 +13,7 @@ Layout (``T`` = ``root/<db>/<table>``):
     T/v<N>/_FILEVERS          # {data file: version that wrote it}
     T/v<N>/_ANALYZE[_AGE]     # column stats, and commits since computed
     T/v<N>/_DV/               # deletion vectors, (file, pos) parquet
-    T/v<N>/_BLOOM_<col>/, T/v<N>/_ZONEMAP/   # per-file index parquet
+    T/v<N>/_BLOOM_<col>/      # per-file Bloom index parquet
     T/_LATEST                 # the pointer: contains "N"
     T/_DROPPED                # dropped-column guard set (JSON)
     T/_CLAIM_v<N>             # OCC claim marker (occ=True only)
@@ -63,6 +63,10 @@ from cdc_redshift_spark.sinks.base import Sink
 
 HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
+#: commits an ``_ANALYZE`` sidecar may be carried forward before it
+#: expires (see ParquetSink._carry_analyze); <=0 disables carrying
+ANALYZE_CARRY_LIMIT = 64
+
 
 class CommitConflictError(RuntimeError):
     """A concurrent writer claimed or published the version this commit
@@ -87,14 +91,10 @@ class ParquetSink(Sink):
         partition_cols: Sequence[str] = (),
         cluster_keys: Sequence[str] = (),
         bloom_index_cols: Sequence[str] = (),
-        bloom_m_bits: int | str = "auto",
-        zonemap_index_cols: Sequence[str] = (),
         merge_mode: str = "rewrite",
         constraints: dict[str, str] | None = None,
         generated_cols: dict[str, str] | None = None,
         occ: bool = False,
-        merge_broadcast_min_target: int | None = None,
-        analyze_carry_limit: int = 64,
     ):
         """``cluster_keys`` range-clusters every committed snapshot
         (operators/layout.py): each written file covers a disjoint
@@ -110,19 +110,9 @@ class ParquetSink(Sink):
         then read only candidate files via :meth:`lookup_files`.
         Pruned commits maintain the index incrementally (untouched
         partitions' rows carried forward; only rewritten partitions
-        scanned).  ``bloom_m_bits``: 'auto' (default — per-file
-        sizing at ~18 bits/key so realistic file sizes don't
-        saturate the filter) or a fixed bit count.
-
-        ``zonemap_index_cols`` builds the per-file min/max zone map
-        (operators/layout.zonemap_file_index) for the named columns,
-        stored as ``_ZONEMAP`` parquet next to the snapshot — RANGE
-        predicates on any indexed column resolve to an explicit
-        candidate file list via :meth:`lookup_range_files` (the range
-        complement of the Bloom index; useful for columns correlated
-        with but different from the cluster key, e.g. event time on
-        an ingest-time-clustered table).  Maintained incrementally on
-        pruned commits exactly like the Bloom index.
+        scanned).  Filters are sized per file at ~18 bits/key
+        (``bloom_file_index``'s 'auto'), so realistic file sizes don't
+        saturate them.
 
         ``merge_mode``: ``'rewrite'`` (default) merges by rewriting
         touched data (partition-pruned when possible);  ``'dv'``
@@ -135,7 +125,14 @@ class ParquetSink(Sink):
         rewrite cannot match when updates scatter across partitions.
         Reads anti-join the (tiny) DV sidecar at scan time;
         :meth:`compact` folds DVs back into a clean rewrite when the
-        masked fraction grows."""
+        masked fraction grows.
+
+        Two fixed policies are module constants, not options: the
+        merge planner's broadcast floor
+        (``planner.MERGE_BROADCAST_MIN_TARGET``, see
+        :meth:`_merge_strategy`) and :data:`ANALYZE_CARRY_LIMIT`, the
+        number of commits an ``_ANALYZE`` sidecar is carried forward
+        before it expires (see :meth:`_carry_analyze`)."""
         self.spark = spark
         self.root = root
         self.keys = list(keys)
@@ -144,22 +141,11 @@ class ParquetSink(Sink):
         self.partition_cols = list(partition_cols)
         self.cluster_keys = list(cluster_keys)
         self.bloom_index_cols = list(bloom_index_cols)
-        self.bloom_m_bits = bloom_m_bits
-        self.zonemap_index_cols = list(zonemap_index_cols)
         if merge_mode not in ("rewrite", "dv"):
             raise ValueError(
                 f"merge_mode must be 'rewrite' or 'dv', got {merge_mode!r}"
             )
         self.merge_mode = merge_mode
-        #: broadcast-merge flip floor (bytes of estimated target size,
-        #: None = planner default MERGE_BROADCAST_MIN_TARGET): below
-        #: it the target shuffle is cheap and the broadcast plan's
-        #: fixed overheads dominate.  Tests set 0 to exercise the seam
-        #: on small fixtures.
-        self.merge_broadcast_min_target = merge_broadcast_min_target
-        #: commits an _ANALYZE sidecar may be carried forward before
-        #: it expires (see _carry_analyze); <=0 disables carrying
-        self.analyze_carry_limit = analyze_carry_limit
         #: {name: SQL boolean expr} CHECK constraints (Delta contract:
         #: a row violates only when the expr evaluates FALSE — null is
         #: a pass; spell NOT NULL as "x IS NOT NULL").  Enforced on
@@ -634,9 +620,6 @@ class ParquetSink(Sink):
             return "shuffle"
         if not stats or key not in stats:
             return "shuffle"
-        floor = self.merge_broadcast_min_target
-        if floor is None:
-            floor = MERGE_BROADCAST_MIN_TARGET
         try:
             # metadata-only pre-check (same estimate join_plan would
             # compute for its left side): an under-floor target can
@@ -648,7 +631,7 @@ class ParquetSink(Sink):
             est_target = estimate_size_bytes(
                 stats, row_bytes=row_bytes_of(target.dtypes)
             )
-            if est_target < floor:
+            if est_target < MERGE_BROADCAST_MIN_TARGET:
                 # same key set as a real join_plan result (plus the
                 # under_floor discriminator) so observability
                 # consumers indexing e.g. plan["skew_risk"] never
@@ -679,7 +662,9 @@ class ParquetSink(Sink):
         except Exception:
             return "shuffle"
         self.last_merge_plan = plan
-        return merge_strategy_from_plan(plan, min_target_bytes=floor)
+        return merge_strategy_from_plan(
+            plan, min_target_bytes=MERGE_BROADCAST_MIN_TARGET
+        )
 
     def _apply_pruned(
         self,
@@ -775,8 +760,6 @@ class ParquetSink(Sink):
             linked.append(name)
         if self.bloom_index_cols:
             self._build_bloom_incremental(db, table, v + 1, v, linked)
-        if self.zonemap_index_cols:
-            self._build_zonemap_incremental(db, table, v + 1, v, linked)
         # a DV-bearing snapshot hard-links masked rows forward: the
         # sidecar rows of LINKED partitions must travel too (rewritten
         # partitions were rebuilt from the DV-APPLIED state, so their
@@ -968,7 +951,7 @@ class ParquetSink(Sink):
                 self._dv_dir(db, table, v + 1)
             )
             self._write_schema(db, table, append_rows, v + 1)
-            if self.bloom_index_cols or self.zonemap_index_cols:
+            if self.bloom_index_cols:
                 self._index_dv_commit(db, table, v + 1, v, appended)
             self._flip(db, table, v + 1)
         finally:
@@ -982,17 +965,16 @@ class ParquetSink(Sink):
         prev_v: int,
         appended_files: list[str],
     ) -> None:
-        """Bloom/zone-map maintenance for a DV commit: every previous
-        file is hard-linked (rows carried by path rewrite, ALL dirs
-        linked), and only the appended files are scanned.  Masked rows
-        stay in the indexes as false-positive candidates — a wasted
-        file read at lookup time, never a correctness loss; compact()
-        rebuilds clean."""
+        """Bloom maintenance for a DV commit: every previous file is
+        hard-linked (rows carried by path rewrite, ALL dirs linked),
+        and only the appended files are scanned.  Masked rows stay in
+        the index as false-positive candidates — a wasted file read at
+        lookup time, never a correctness loss; compact() rebuilds
+        clean."""
         from cdc_redshift_spark.operators.layout import (
             BLOOM_K_HASHES,
             BLOOM_M_BITS,
             bloom_file_index,
-            zonemap_file_index,
         )
 
         old_seg = f"/{db}/{table}/v{prev_v}/"
@@ -1017,33 +999,11 @@ class ParquetSink(Sink):
             idx = carry(old_idx)
             if appended_files:
                 idx = idx.unionByName(
-                    bloom_file_index(
-                        self.spark,
-                        appended_files,
-                        col,
-                        m_bits=self.bloom_m_bits,
-                    )
+                    bloom_file_index(self.spark, appended_files, col)
                 )
             idx.coalesce(1).write.mode("overwrite").parquet(
                 self._bloom_dir(db, table, new_v, col)
             )
-        if self.zonemap_index_cols:
-            prev_dir = self._zonemap_dir(db, table, prev_v)
-            if not os.path.isdir(prev_dir):
-                self._build_zonemap(db, table, new_v)
-            else:
-                idx = carry(self.spark.read.parquet(prev_dir))
-                if appended_files:
-                    idx = idx.unionByName(
-                        zonemap_file_index(
-                            self.spark,
-                            appended_files,
-                            self.zonemap_index_cols,
-                        )
-                    )
-                idx.coalesce(1).write.mode("overwrite").parquet(
-                    self._zonemap_dir(db, table, new_v)
-                )
 
     def compact(self, db: str, table: str) -> None:
         """Fold deletion vectors into a clean snapshot: read the
@@ -1622,7 +1582,7 @@ class ParquetSink(Sink):
             old_seg,
             new_seg,
         )
-        if self.bloom_index_cols or self.zonemap_index_cols:
+        if self.bloom_index_cols:
             # every file carries: index rows travel by path rewrite
             self._index_dv_commit(db, table, new_v, src_v, [])
         self._write_schema_json(db, table, new_schema, new_v)
@@ -1657,7 +1617,6 @@ class ParquetSink(Sink):
             | set(self.partition_cols)
             | set(self.cluster_keys)
             | set(self.bloom_index_cols)
-            | set(self.zonemap_index_cols)
         )
 
     def _catalog_or_infer(self, db: str, table: str, v: int):
@@ -1768,7 +1727,7 @@ class ParquetSink(Sink):
         snapshot, committed as a NEW version — history is preserved,
         so a restore is itself undoable by another restore.  Zero data
         bytes move: the new snapshot hard-links the target version's
-        files, its DV sidecar and Bloom/zone-map index rows carry by
+        files, its DV sidecar and Bloom index rows carry by
         path rewrite, its per-version schema becomes the current
         catalog entry again (a later rename/evolution rolls back
         logically WITH the data, matching Delta), and the file
@@ -1857,13 +1816,6 @@ class ParquetSink(Sink):
                 rewrite(idx).coalesce(1).write.mode(
                     "overwrite"
                 ).parquet(self._bloom_dir(dest_db, dest_table, 1, col))
-        zdir = self._zonemap_dir(db, table, v)
-        if os.path.isdir(zdir):
-            rewrite(self.spark.read.parquet(zdir)).coalesce(
-                1
-            ).write.mode("overwrite").parquet(
-                self._zonemap_dir(dest_db, dest_table, 1)
-            )
         # the _DROPPED guard travels with the catalog: a changeset on
         # the clone carrying a source-dropped column must raise too
         if os.path.exists(self._dropped_path(db, table)):
@@ -1887,8 +1839,6 @@ class ParquetSink(Sink):
         writer.parquet(path)
         if self.bloom_index_cols:
             self._build_bloom(db, table, v)
-        if self.zonemap_index_cols:
-            self._build_zonemap(db, table, v)
         self._write_schema(db, table, state, v)
         self._flip(db, table, v)
 
@@ -1952,49 +1902,6 @@ class ParquetSink(Sink):
             ).count()
         )
         return masked / total if total else 0.0
-
-    def maintain(
-        self,
-        db: str,
-        table: str,
-        target_file_bytes: int = 128 * 1024 * 1024,
-        dv_mask_threshold: float = 0.2,
-        tombstone_horizon_ms: int | None = None,
-        keep_versions: int = 3,
-    ) -> dict:
-        """ONE maintenance entry point — the periodic job a 100 TB
-        deployment schedules per table, composing the four levers in
-        the order that avoids wasted work:
-
-        1. fold deletion vectors (:meth:`compact`) when the masked
-           fraction crosses ``dv_mask_threshold`` — folding first
-           means the subsequent bin-packing never rewrites masked
-           rows;
-        2. expire tombstones older than ``tombstone_horizon_ms``
-           (skipped when None — the horizon is a source-lateness
-           contract only the pipeline knows);
-        3. :meth:`optimize` small files to ``target_file_bytes``;
-        4. :meth:`vacuum` to ``keep_versions`` retained snapshots —
-           last, so every rewrite above can still hard-link from its
-           predecessor.
-
-        Every step is a no-op when its trigger isn't met (steps 1-3
-        commit nothing at all in that case), so running ``maintain``
-        on a healthy table costs metadata reads only.  Returns a
-        report dict of what each step did.
-        """
-        report: dict = {}
-        frac = self.dv_masked_fraction(db, table)
-        report["dv_masked_fraction"] = round(frac, 4)
-        if frac > dv_mask_threshold:
-            self.compact(db, table)
-            report["dv_folded"] = True
-        if tombstone_horizon_ms is not None:
-            report["tombstones_expired_before"] = tombstone_horizon_ms
-            self.expire_tombstones(db, table, tombstone_horizon_ms)
-        report["optimize"] = self.optimize(db, table, target_file_bytes)
-        report["vacuumed"] = self.vacuum(db, table, keep_last=keep_versions)
-        return report
 
     def analyze(
         self,
@@ -2209,15 +2116,15 @@ class ParquetSink(Sink):
     def _build_bloom(self, db: str, table: str, v: int) -> None:
         """Full index build over snapshot ``v`` — correct whenever the
         snapshot was fully (re)written (``_commit``), since every file
-        is new anyway.  Geometry: ``bloom_m_bits`` ('auto' by default
-        — each file's filter sized from its own row count, so large
-        files don't saturate; see operators/layout.bloom_file_index).
+        is new anyway.  Geometry: each file's filter is sized from its
+        own row count, so large files don't saturate (the 'auto'
+        sizing of operators/layout.bloom_file_index).
         """
         from cdc_redshift_spark.operators.layout import bloom_file_index
 
         snap = os.path.join(self._dir(db, table), f"v{v}")
         for col in self.bloom_index_cols:
-            idx = bloom_file_index(self.spark, snap, col, m_bits=self.bloom_m_bits)
+            idx = bloom_file_index(self.spark, snap, col)
             # coalesce: the index is |files| rows — one file suffices
             idx.coalesce(1).write.mode("overwrite").parquet(
                 self._bloom_dir(db, table, v, col)
@@ -2284,7 +2191,6 @@ class ParquetSink(Sink):
                     self.spark,
                     [os.path.join(dst, d) for d in touched],
                     col,
-                    m_bits=self.bloom_m_bits,
                 )
                 idx = carried.unionByName(fresh)
             else:
@@ -2302,8 +2208,7 @@ class ParquetSink(Sink):
     ) -> DataFrame:
         """Index rows of hard-linked (byte-identical) partition dirs,
         carried to the new snapshot with a path rewrite — shared by
-        the Bloom and zone-map incremental maintainers and the DV
-        sidecar carry.
+        the Bloom incremental maintainer and the DV sidecar carry.
 
         ``linked_dirs`` are raw ``os.listdir`` names, but the ``file``
         column holds URIs (``input_file_name`` /
@@ -2311,7 +2216,7 @@ class ParquetSink(Sink):
         percent-encoded: a partition value ``'a b'`` is the directory
         ``p=a b`` on disk but ``.../p=a%20b/...`` in the URI.
         Matching the raw name alone silently drops the carried
-        Bloom/zone-map/DV rows of any such partition — deleted rows
+        Bloom/DV rows of any such partition — deleted rows
         resurrect and the index serves false negatives.  Each dir is
         therefore matched under BOTH spellings: the raw name and its
         percent-encoded form (``quote(d, safe="=")`` reproduces the
@@ -2336,96 +2241,6 @@ class ParquetSink(Sink):
             "file",
             F.replace(F.col("file"), F.lit(old_seg), F.lit(new_seg)),
         )
-
-    # -- zone-map index maintenance ---------------------------------------
-    def _zonemap_dir(self, db: str, table: str, v: int) -> str:
-        return os.path.join(self._dir(db, table), f"v{v}", "_ZONEMAP")
-
-    def _build_zonemap(self, db: str, table: str, v: int) -> None:
-        """Full zone-map build over one snapshot — full commits only
-        (overwrite / non-pruned merge), where every file is new."""
-        from cdc_redshift_spark.operators.layout import zonemap_file_index
-
-        snap = os.path.join(self._dir(db, table), f"v{v}")
-        idx = zonemap_file_index(
-            self.spark, snap, self.zonemap_index_cols
-        )
-        idx.coalesce(1).write.mode("overwrite").parquet(
-            self._zonemap_dir(db, table, v)
-        )
-
-    def _build_zonemap_incremental(
-        self,
-        db: str,
-        table: str,
-        new_v: int,
-        prev_v: int,
-        linked_dirs: list[str],
-    ) -> None:
-        """Zone-map maintenance for a PRUNED commit: same O(touched
-        partitions) discipline as the Bloom path — hard-linked files'
-        min/max zones are unchanged by construction, so their rows
-        carry forward with a path rewrite and only rewritten
-        partitions are scanned.  Falls back to a full build when the
-        previous index is missing (newly configured)."""
-        from cdc_redshift_spark.operators.layout import zonemap_file_index
-
-        if not os.path.isdir(self._zonemap_dir(db, table, prev_v)):
-            self._build_zonemap(db, table, new_v)
-            return
-        dst = os.path.join(self._dir(db, table), f"v{new_v}")
-        linked_set = set(linked_dirs)
-        touched = [
-            d
-            for d in os.listdir(dst)
-            if os.path.isdir(os.path.join(dst, d))
-            and not d.startswith(("_", "."))
-            and d not in linked_set
-        ]
-        old_seg = f"/{db}/{table}/v{prev_v}/"
-        new_seg = f"/{db}/{table}/v{new_v}/"
-        old_idx = self.spark.read.parquet(
-            self._zonemap_dir(db, table, prev_v)
-        )
-        carried = self._carried_index_rows(
-            old_idx, linked_dirs, old_seg, new_seg
-        )
-        if touched:
-            fresh = zonemap_file_index(
-                self.spark,
-                [os.path.join(dst, d) for d in touched],
-                self.zonemap_index_cols,
-            )
-            idx = carried.unionByName(fresh)
-        else:
-            idx = carried
-        idx.coalesce(1).write.mode("overwrite").parquet(
-            self._zonemap_dir(db, table, new_v)
-        )
-
-    def lookup_range_files(
-        self, db: str, table: str, bounds: dict
-    ) -> list[str]:
-        """Candidate data files whose zones intersect every
-        ``col: (lo, hi)`` bound, in the CURRENT snapshot (no false
-        negatives; ``None`` = unbounded).  Read them with
-        :meth:`read_files` instead of scanning — a raw
-        ``spark.read.parquet(*files)`` loses partition-directory
-        columns and, in dv merge mode, serves DV-masked (deleted /
-        superseded) rows."""
-        from cdc_redshift_spark.operators.layout import zonemap_prune_files
-
-        missing = [c for c in bounds if c not in self.zonemap_index_cols]
-        if missing:
-            raise ValueError(
-                f"no zone map for column(s) {missing}; sink indexes "
-                f"{self.zonemap_index_cols}"
-            )
-        v = self._latest_version(db, table)
-        if v is None:
-            return []
-        idx = self.spark.read.parquet(self._zonemap_dir(db, table, v))
-        return zonemap_prune_files(idx, bounds)
 
     def lookup_files(
         self, db: str, table: str, col: str, value
@@ -2479,7 +2294,7 @@ class ParquetSink(Sink):
         include_tombstones: bool = False,
     ) -> DataFrame:
         """Read an index-pruned candidate-file list (from
-        :meth:`lookup_files` / :meth:`lookup_range_files`) with FULL
+        :meth:`lookup_files`) with FULL
         table read semantics — the point-lookup fast path that stays
         correct in every sink mode.  A raw
         ``spark.read.parquet(*files)`` is wrong twice over:
@@ -2554,7 +2369,7 @@ class ParquetSink(Sink):
         exists for.  Warehouse semantics: stats are estimates and stay
         usable until refreshed; staleness is bounded by an explicit
         age counter (``_ANALYZE_AGE`` = commits since the stats were
-        computed) — past ``analyze_carry_limit`` the chain EXPIRES and
+        computed) — past :data:`ANALYZE_CARRY_LIMIT` the chain EXPIRES and
         the planner reverts to the safe default rather than planning
         on arbitrarily stale cardinalities.  ``src_v`` overrides the
         carry source (restore commits link an OLDER version's data, so
@@ -2580,7 +2395,7 @@ class ParquetSink(Sink):
                 return
             age_path = os.path.join(d, f"v{prev}", "_ANALYZE_AGE")
             age = int(commit.read_pointer(age_path) or 0)
-            if age + 1 > self.analyze_carry_limit:
+            if age + 1 > ANALYZE_CARRY_LIMIT:
                 return
             with open(src) as f:
                 commit.atomic_write(dst, f.read())

@@ -83,7 +83,7 @@ class CdcPipeline:
         that TOUCH it (sinks without ``analyze`` ignore it; tables the
         sink has not materialized are skipped), keeping the merge
         planner's statistics fresh forever — without it, the carried
-        stats expire after the sink's ``analyze_carry_limit``
+        stats expire after ``parquet_sink.ANALYZE_CARRY_LIMIT``
         commits and the broadcast flip silently reverts to shuffle.
 
         ``expire_after_ms`` enables periodic tombstone compaction:
@@ -239,7 +239,7 @@ class CdcPipeline:
         every N batches that TOUCH a table, re-ANALYZE it, so the
         stats that drive the merge planner's broadcast flip never
         expire out from under a long-running pipeline (carried
-        sidecars age out after the sink's ``analyze_carry_limit``
+        sidecars age out after ``parquet_sink.ANALYZE_CARRY_LIMIT``
         commits — a stream that merges forever on one manual ANALYZE
         would silently lose its CBO at that horizon).
 

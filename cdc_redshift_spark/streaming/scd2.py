@@ -47,13 +47,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pyspark.sql import functions as F
-
 from cdc_redshift_spark.operators.incremental import (
     scd2_apply,
     scd2_history,
     scd2_late_batch_rows,
-    scd2_rebuild_keys,
 )
 from cdc_redshift_spark.streaming.snapshots import AUTO, VersionedSnapshotStore
 
@@ -155,61 +152,6 @@ class Scd2Maintainer(VersionedSnapshotStore):
                         "(scd2_late_batch_rows lists them)"
                     )
             hist = scd2_apply(stored, changes, **kw)
-        if pruned:
-            self._commit_pruned(hist, batch_id, touched, last)
-        else:
-            self._commit(hist, batch_id)
-        return True
-
-    def repair_update(
-        self, changes: DataFrame, changelog: DataFrame, batch_id: int
-    ) -> bool:
-        """:meth:`update` variant for batches that MAY carry late
-        changes — the recovery path the ``raise`` policy points at:
-        rows behind the stored frontier route their KEYS to a
-        changelog rebuild (:func:`operators.incremental.
-        scd2_rebuild_keys`) while everything else applies
-        incrementally, and the spliced history commits as one
-        version.  ``changelog`` must hold EVERY change for the
-        rebuilt keys, this batch's included (at scale: the retained
-        CDC log, key-partitioned so the rebuild reads only touched
-        partitions).  Same replay idempotence as update()."""
-        last = self.committed_batch()
-        if last is not None and batch_id <= last:
-            return False
-        kw = dict(
-            keys=self.keys,
-            ts_col=self.ts_col,
-            attrs=self.attrs,
-            op_col=self.op_col,
-            tiebreak=self.tiebreak,
-        )
-        # late keys are by definition IN the batch, so the rebuild
-        # only ever touches the batch's buckets — the same pruned
-        # read/commit discipline as update() applies unchanged
-        pruned = self.bucket_keys and self._bucketed_on_disk()
-        touched = self.touched_buckets(changes) if pruned else None
-        stored = self.current(buckets=touched)
-        if stored is None:
-            hist = scd2_history(changes, **kw)
-        else:
-            late_keys = (
-                scd2_late_batch_rows(stored, changes, self.keys, self.ts_col)
-                .select(*self.keys)
-                .distinct()
-            )
-            ok = changes.join(F.broadcast(late_keys), self.keys, "left_anti")
-            hist = scd2_apply(stored, ok, **kw)
-            hist = scd2_rebuild_keys(
-                hist,
-                changelog,
-                self.keys,
-                self.ts_col,
-                self.attrs,
-                late_keys,
-                op_col=self.op_col,
-                tiebreak=self.tiebreak,
-            )
         if pruned:
             self._commit_pruned(hist, batch_id, touched, last)
         else:

@@ -5,13 +5,13 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from cdc_redshift_spark.dedup import latest_per_key, latest_per_key_agg
+from cdc_redshift_spark.dedup import latest_per_key
 from cdc_redshift_spark.normalize import (
     dms_changeset,
     mongo_changeset,
     pg_changeset,
 )
-from cdc_redshift_spark.plans.merge import apply_changeset, split_upserts_deletes
+from cdc_redshift_spark.plans.merge import apply_changeset
 
 KEYS = ("db", "table", "key")
 
@@ -109,26 +109,6 @@ def test_multi_table_routing(spark):
         ],
     )
     assert {(r.db, r.table) for r in st.collect()} == {("d1", "a"), ("d1", "b"), ("d2", "a")}
-
-
-def test_window_and_agg_dedup_agree(spark):
-    events = [pg_event("u", k % 3, 100 + k, {"v": str(k)}, k) for k in range(20)]
-    ch = pg_changeset(mk_raw(spark, events), offset_col="offset")
-    a = {(r.key, r.payload) for r in latest_per_key(ch).collect()}
-    b = {(r.key, r.payload) for r in latest_per_key_agg(ch).collect()}
-    assert a == b
-
-
-def test_split_upserts_deletes(spark):
-    ch = latest_per_key(
-        pg_changeset(
-            mk_raw(spark, [pg_event("c", 1, 100, {}, 0), pg_event("d", 2, 100, None, 1)]),
-            offset_col="offset",
-        )
-    )
-    ups, dels = split_upserts_deletes(ch)
-    assert ups.count() == 1 and dels.count() == 1
-    assert dels.collect()[0].key == "2"
 
 
 def test_mongo_normalize(spark):
@@ -370,8 +350,7 @@ def test_null_op_row_is_data_not_tombstone(spark):
     """r15 review hunt: a NULL op (malformed envelope passed through
     _map_op's otherwise) must behave as data everywhere — the
     three-valued `op != 'delete'` filters silently dropped the
-    winning row from merged state and from BOTH halves of
-    split_upserts_deletes."""
+    winning row from merged state."""
     cs = spark.createDataFrame(
         [
             ("1", 100, 0, None, "a"),   # NULL op: data
@@ -393,9 +372,6 @@ def test_null_op_row_is_data_not_tombstone(spark):
         assert got == {"1", "2"}, (
             f"{strategy}: NULL-op row dropped as a pseudo-tombstone"
         )
-    ups, dels = split_upserts_deletes(cs)
-    assert {r.key for r in ups.collect()} == {"1", "2"}
-    assert {r.key for r in dels.collect()} == {"3"}
 
 
 def test_null_op_row_survives_sink_round_trip(spark, tmp_path):

@@ -362,6 +362,88 @@ def test_crash_points_bucketed_rollup_update_then_rebucket(
     assert (m._committed_token(), m._bucket_count()) == ("1_r1", 8)
 
 
+def _view(m):
+    cur = m.current()
+    rows = [tuple(r) for r in cur.collect()] if cur is not None else []
+    return m.committed_batch(), sorted(rows, key=repr)
+
+
+def test_crash_points_bucketed_scd2_update(spark, tmp_path, monkeypatch):
+    """A bucketed Scd2Maintainer.update that closes one key's open
+    interval and opens a new key: the pointer flip publishes the
+    touched-bucket rewrite, and a replay after any crash folds the
+    batch exactly once."""
+    from pyspark.sql import functions as F
+
+    from cdc_redshift_spark.streaming.scd2 import Scd2Maintainer
+
+    root = str(tmp_path / "scd2")
+
+    def maintainer():
+        return Scd2Maintainer(
+            spark, root, keys=["k"], ts_col="ts", attrs=["attr"],
+            tiebreak=["seq"], n_buckets=4,
+        )
+
+    def changes(rows):
+        return spark.createDataFrame(
+            rows, "k string, ts long, seq long, op string, attr string"
+        ).select(
+            "k", F.timestamp_seconds("ts").alias("ts"), "seq", "op", "attr"
+        )
+
+    maintainer().update(
+        changes([(f"k{i}", 10, i, "insert", f"a{i}") for i in range(6)]), 0
+    )
+    step = [("k1", 20, 10, "update", "b1"), ("new", 20, 11, "insert", "n")]
+    seen = crash_every_step(
+        monkeypatch, root, restart=maintainer,
+        op=lambda m: m.update(changes(step), 1),
+        read=_view, publishes=_latest,
+    )
+    assert _kinds(seen) == [
+        ("write", "_NBUCKETS"), ("write", "_COMMITTED"), ("write", "_LATEST"),
+    ]
+
+
+def test_crash_points_bucketed_join_view_update(spark, tmp_path, monkeypatch):
+    """A bucketed JoinViewMaintainer.update that replaces one left row:
+    the pointer flip publishes the touched-bucket rewrite; a replay
+    after any crash reaches the same bag of view rows."""
+    from pyspark.sql import functions as F
+
+    from cdc_redshift_spark.streaming.joinview import JoinViewMaintainer
+
+    root = str(tmp_path / "jv")
+    L = spark.createDataFrame([(k, f"l{k}") for k in range(8)], "k int, lv string")
+    R = spark.createDataFrame([(k, f"r{k}") for k in range(8)], "k int, rv string")
+
+    def maintainer():
+        return JoinViewMaintainer(
+            spark, root, on=["k"], cols=["k", "lv", "rv"], n_buckets=4
+        )
+
+    one = F.lit(1).alias("sign")
+    maintainer().update(
+        L.select("k", "lv", one), L, R.select("k", "rv", one), R.limit(0), 0
+    )
+    dL = spark.createDataFrame(
+        [(3, "l3", -1), (3, "L3", 1)], "k int, lv string, sign int"
+    )
+    L1 = L.where(F.col("k") != 3).unionByName(
+        spark.createDataFrame([(3, "L3")], "k int, lv string")
+    )
+    dR = spark.createDataFrame([], "k int, rv string, sign int")
+    seen = crash_every_step(
+        monkeypatch, root, restart=maintainer,
+        op=lambda m: m.update(dL, L1, dR, R, 1),
+        read=_view, publishes=_latest,
+    )
+    assert _kinds(seen) == [
+        ("write", "_NBUCKETS"), ("write", "_COMMITTED"), ("write", "_LATEST"),
+    ]
+
+
 def test_crash_points_compact_batches(spark, tmp_path, monkeypatch):
     """compact_batches over a prior consolidation: before the _COMPACT
     marker nothing changes; from it on, _finish_pending_compaction

@@ -432,110 +432,6 @@ def test_temperature_mix_validation(spark):
         temperature_mix(df, 10, n_buckets=100)  # not a power of 2
 
 
-def test_bpe_train_matches_reference(spark):
-    """bpe_train == the classic pure-Python Sennrich trainer (same
-    tie rule) on a small corpus, including the greedy left-to-right
-    merge apply ('aaa' + (a,a) -> [aa, a])."""
-    import collections
-
-    from cdc_redshift_spark.operators.corpus import bpe_train
-
-    texts = [
-        "the cat sat on the mat",
-        "the dog sat on the log",
-        "low lower lowest",
-        "aaa aaab the the the",
-    ]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
-                               "doc_id long, text string")
-
-    def ref_train(corpus, n):
-        vocab = collections.Counter()
-        for t in corpus:
-            for w in t.split():
-                vocab[tuple(w) + ("</w>",)] += 1
-        merges = []
-        for rank in range(1, n + 1):
-            pc = collections.Counter()
-            for syms, wc in vocab.items():
-                for a, b in zip(syms, syms[1:]):
-                    pc[(a, b)] += wc
-            if not pc:
-                break
-            # max count, ties by (left, right) ascending
-            (l, r), c = min(
-                pc.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-            )
-            merges.append((rank, l, r, c))
-            new_vocab = collections.Counter()
-            for syms, wc in vocab.items():
-                out, i = [], 0
-                while i < len(syms):
-                    if (
-                        i + 1 < len(syms)
-                        and syms[i] == l
-                        and syms[i + 1] == r
-                    ):
-                        out.append(l + r)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                new_vocab[tuple(out)] += wc
-            vocab = new_vocab
-        return merges
-
-    got = bpe_train(df, n_merges=8)
-    want = ref_train(texts, 8)
-    assert got == want
-
-
-def test_bpe_apply_merge_greedy(spark):
-    from pyspark.sql import functions as F
-
-    from cdc_redshift_spark.operators.corpus import _apply_merge
-
-    df = spark.createDataFrame([(["a", "a", "a"],)], "s array<string>")
-    out = df.select(_apply_merge(F.col("s"), "a", "a").alias("m")).first()
-    assert out.m == ["aa", "a"]
-
-
-def test_bpe_encode_matches_reference(spark):
-    """bpe_encode replays the trained merges exactly as the pure-
-    Python greedy encoder does, word by word."""
-    from cdc_redshift_spark.operators.corpus import bpe_encode, bpe_train
-
-    texts = [
-        "the cat sat on the mat",
-        "lower lowest low the the",
-        "aaa aaab",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    merges = bpe_train(df, n_merges=6)
-
-    def encode_word(w):
-        syms = list(w) + ["</w>"]
-        for _rank, l, r, _c in merges:
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == l and syms[i + 1] == r:
-                    out.append(l + r)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return syms
-
-    got = {r.doc_id: (r.n_words, r.n_tokens, r.tokens)
-           for r in bpe_encode(df, merges).collect()}
-    for i, t in enumerate(texts):
-        want = [s for w in t.split() for s in encode_word(w)]
-        assert got[i] == (len(t.split()), len(want), want), i
-
-
 def test_corpus_token_drift_oov_and_identity(spark, tmp_path):
     """corpus_token_drift: identical halves score psi 0 (every cell's
     p_ref == p_cur); a current-only token lands in the OOV cell and

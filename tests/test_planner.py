@@ -182,7 +182,9 @@ def test_broadcast_merge_null_tiebreak_matches_shuffle(spark):
     assert {(r.k, r.v) for r in bcast.collect()} == exp
 
 
-def test_sink_merge_strategy_composite_keys_use_struct_ndv(spark, tmp_path):
+def test_sink_merge_strategy_composite_keys_use_struct_ndv(
+    spark, tmp_path, monkeypatch
+):
     """ADVICE r8 (low), resolved properly: a composite-key sink plans
     from the COMPOSITE_KEY struct-NDV analyze() records at the real
     grouping grain — keys[0] alone ('db'-like low-NDV leaders) can
@@ -194,12 +196,12 @@ def test_sink_merge_strategy_composite_keys_use_struct_ndv(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    import cdc_redshift_spark.operators.planner as planner
     from cdc_redshift_spark.operators.planner import COMPOSITE_KEY
     from cdc_redshift_spark.sinks.parquet_sink import ParquetSink
 
-    sink = ParquetSink(
-        spark, str(tmp_path), keys=("k", "k2"), merge_broadcast_min_target=0
-    )
+    monkeypatch.setattr(planner, "MERGE_BROADCAST_MIN_TARGET", 0)
+    sink = ParquetSink(spark, str(tmp_path), keys=("k", "k2"))
     base = spark.range(0, 2_000).select(
         (F.col("id") % 3).alias("k"),  # low-NDV leading key: the trap
         F.col("id").alias("k2"),
@@ -278,6 +280,7 @@ def test_sink_merge_flips_to_broadcast_from_analyze_stats(spark, tmp_path, monke
     """The VERDICT r7 #3 contract: a sink whose table carries an
     _ANALYZE sidecar auto-plans the next merge's changes-side
     broadcast; without stats it falls back to the shuffle plan."""
+    import cdc_redshift_spark.operators.planner as planner
     import cdc_redshift_spark.sinks.parquet_sink as ps
     from cdc_redshift_spark.sinks.parquet_sink import ParquetSink
     from pyspark.sql import functions as F
@@ -295,9 +298,9 @@ def test_sink_merge_flips_to_broadcast_from_analyze_stats(spark, tmp_path, monke
     # MERGE_BROADCAST_MIN_TARGET (where the target shuffle is cheap
     # and broadcast's fixed overheads lose — measured at sf0.01);
     # zeroing it exercises the stats->flip seam itself
-    sink = ParquetSink(
-        spark, str(tmp_path), keys=("k",), merge_broadcast_min_target=0
-    )
+    default_floor = planner.MERGE_BROADCAST_MIN_TARGET
+    monkeypatch.setattr(planner, "MERGE_BROADCAST_MIN_TARGET", 0)
+    sink = ParquetSink(spark, str(tmp_path), keys=("k",))
     base = spark.range(0, 8_000).select(
         F.col("id").alias("k"),
         F.col("id").cast("string").alias("v"),
@@ -331,30 +334,35 @@ def test_sink_merge_flips_to_broadcast_from_analyze_stats(spark, tmp_path, monke
     # under the DEFAULT floor the same stats keep the shuffle plan:
     # an 8k-row target's shuffle is cheaper than broadcast's fixed
     # overheads (second scan + bounded jobs)
+    monkeypatch.setattr(
+        planner, "MERGE_BROADCAST_MIN_TARGET", default_floor
+    )
     defsink = ParquetSink(spark, str(tmp_path), keys=("k",))
     tgt = defsink.read_table(spark, "d", "t")
     assert defsink._merge_strategy("d", "t", tgt, batch2) == "shuffle"
 
 
-def test_analyze_stats_carry_forward_and_expiry(spark, tmp_path):
+def test_analyze_stats_carry_forward_and_expiry(spark, tmp_path, monkeypatch):
     """The CBO seam must survive the commits BETWEEN analyze()
     refreshes: each merge commits a NEW version, and per-version stats
     would otherwise orphan after the first merge — silently reverting
     every later micro-batch to shuffle, exactly in the streaming
     regime the broadcast plan exists for.  Pin: stats carry forward
     across merges (with an age counter), keep driving the broadcast
-    flip, and EXPIRE past analyze_carry_limit."""
+    flip, and EXPIRE past ANALYZE_CARRY_LIMIT."""
     import os
 
     from pyspark.sql import functions as F
 
+    import cdc_redshift_spark.operators.planner as planner
+    import cdc_redshift_spark.sinks.parquet_sink as ps
     from cdc_redshift_spark.sinks.parquet_sink import ParquetSink
 
+    monkeypatch.setattr(planner, "MERGE_BROADCAST_MIN_TARGET", 0)
+
     def mk(path, limit):
-        return ParquetSink(
-            spark, str(path), keys=("k",),
-            merge_broadcast_min_target=0, analyze_carry_limit=limit,
-        )
+        monkeypatch.setattr(ps, "ANALYZE_CARRY_LIMIT", limit)
+        return ParquetSink(spark, str(path), keys=("k",))
 
     base = spark.range(0, 4_000).select(
         F.col("id").alias("k"),
@@ -416,19 +424,19 @@ def test_analyze_stats_carry_forward_and_expiry(spark, tmp_path):
     assert sink3.column_stats("d", "t") == frozen
 
 
-def test_analyze_approx_mode_drives_the_same_flip(spark, tmp_path):
+def test_analyze_approx_mode_drives_the_same_flip(spark, tmp_path, monkeypatch):
     """approx=True (HLL++ NDV, no expand — the analyze_every
     maintenance mode) must produce planner-usable stats: NDV within
     HLL tolerance at the composite grain, and the same broadcast flip
     as exact stats."""
     from pyspark.sql import functions as F
 
+    import cdc_redshift_spark.operators.planner as planner
     from cdc_redshift_spark.operators.planner import COMPOSITE_KEY
     from cdc_redshift_spark.sinks.parquet_sink import ParquetSink
 
-    sink = ParquetSink(
-        spark, str(tmp_path), keys=("k", "k2"), merge_broadcast_min_target=0
-    )
+    monkeypatch.setattr(planner, "MERGE_BROADCAST_MIN_TARGET", 0)
+    sink = ParquetSink(spark, str(tmp_path), keys=("k", "k2"))
     base = spark.range(0, 2_000).select(
         (F.col("id") % 3).alias("k"),
         F.col("id").alias("k2"),
@@ -711,10 +719,8 @@ def test_merge_strategy_under_floor_skips_changeset_pricing(
         assert k in plan, k
     assert plan["skew_risk"] is False and plan["blowup_risk"] is False
 
-    sink0 = ParquetSink(
-        spark, str(tmp_path / "floor_0"), keys=("k",),
-        merge_broadcast_min_target=0,
-    )
+    monkeypatch.setattr(planner, "MERGE_BROADCAST_MIN_TARGET", 0)
+    sink0 = ParquetSink(spark, str(tmp_path / "floor_0"), keys=("k",))
     sink0.overwrite("d", "t", base)
     sink0.analyze("d", "t", approx=True)
     assert sink0._merge_strategy(

@@ -705,30 +705,6 @@ def test_scd2_rebuild_keys_splice_equals_full_rebuild(spark, ops, touched):
     assert _hist_rows(repaired) == _hist_rows(full)
 
 
-def test_scd2_maintainer_repair_update_handles_late_rows(spark, tmp_path):
-    """repair_update routes late keys to a changelog rebuild and
-    applies the rest incrementally — committing once, equal to the
-    full build over the whole log."""
-    rows = [
-        ("a", 10, 0, "update", "v1"),
-        ("a", 30, 1, "update", "v2"),
-        ("b", 15, 2, "update", "w1"),
-    ]
-    ch0 = _ch(spark, rows)
-    m = _maintainer(spark, tmp_path)
-    assert m.update(ch0, 0)
-    # batch 1: a late mid-chain change for 'a' + an on-time one for 'b'
-    b1_rows = [("a", 20, 3, "update", "mid"), ("b", 40, 4, "update", "w2")]
-    b1 = _ch(spark, b1_rows)
-    changelog = _ch(spark, rows + b1_rows)
-    assert m.repair_update(b1, changelog, 1)
-    assert not m.repair_update(b1, changelog, 1)  # replay no-op
-    assert m.committed_batch() == 1
-    assert _hist_rows(m.current()) == _hist_rows(
-        scd2_history(changelog, **KW)
-    )
-
-
 def test_join_view_maintainer_bootstrap_fold_replay(spark, tmp_path):
     """JoinViewMaintainer: bootstrap from empty via the delta algebra,
     fold a mixed batch, replay no-ops, retention bounds versions."""

@@ -607,97 +607,6 @@ def test_repartition_table_guards_and_layout(spark, tmp_path):
     assert sink.partition_cols == []
 
 
-def test_sink_zonemap_incremental_and_range_lookup(
-    spark, tmp_path, monkeypatch
-):
-    """zonemap_index_cols: pruned commits maintain the zone map
-    incrementally (only rewritten partitions scanned; hard-linked
-    partitions' rows carried with a path rewrite), the pruned merge
-    path stays engaged alongside the _ZONEMAP dir, and range lookups
-    on the CURRENT snapshot return a no-false-negative candidate
-    list."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    import cdc_redshift_spark.operators.layout as layout_mod
-    from cdc_redshift_spark.sinks.parquet_sink import ParquetSink
-
-    root = str(tmp_path / "zm")
-    sink = ParquetSink(
-        spark,
-        root,
-        keys=("k",),
-        partition_cols=("p",),
-        zonemap_index_cols=("evt",),
-    )
-
-    def ch(rows, ts):
-        return spark.createDataFrame(
-            rows, "k long, p string, evt long, op string"
-        ).select(
-            "k", "p", "evt", "op",
-            F.lit(ts).cast("long").alias("ts_ms"),
-            F.col("k").alias("offset"),
-        )
-
-    # evt correlates with k: partition p<i> holds evt in [1000+i, ...]
-    rows = [(i, f"p{i % 4}", 1000 + i, "insert") for i in range(200)]
-    sink.apply_changeset("db", "t", ch(rows, 1))
-
-    scanned: list = []
-    real = layout_mod.zonemap_file_index
-
-    def spy(spark_, path, cols):
-        scanned.append(path)
-        return real(spark_, path, cols)
-
-    monkeypatch.setattr(layout_mod, "zonemap_file_index", spy)
-
-    # second commit touches ONLY p1 (key 41)
-    sink.apply_changeset("db", "t", ch([(41, "p1", 9999, "update")], 2))
-
-    tdir = os.path.join(root, "db", "t")
-    for p in ("p=p0", "p=p2", "p=p3"):
-        f1 = sorted(
-            f for f in os.listdir(os.path.join(tdir, "v1", p))
-            if f.endswith(".parquet")
-        )
-        f2 = sorted(
-            f for f in os.listdir(os.path.join(tdir, "v2", p))
-            if f.endswith(".parquet")
-        )
-        assert f2 and f1 == f2
-        for f in f2:
-            assert os.path.samefile(
-                os.path.join(tdir, "v1", p, f),
-                os.path.join(tdir, "v2", p, f),
-            ), f"{p}/{f} rewritten — pruned path lost with zonemap on"
-
-    # incremental maintenance scanned ONLY the touched partition
-    assert len(scanned) == 1 and isinstance(scanned[0], list)
-    assert [os.path.basename(x) for x in scanned[0]] == ["p=p1"]
-
-    # carried rows serve untouched partitions at the new version
-    files = sink.lookup_range_files("db", "t", {"evt": (1040, 1044)})
-    assert files and all("/v2/" in f for f in files)
-    got = (
-        spark.read.parquet(*files)
-        .where(F.col("evt").between(1040, 1044))
-        .collect()
-    )
-    assert sorted(r["k"] for r in got) == [40, 42, 43, 44]  # 41 updated
-    # fresh rows serve the rewritten partition
-    files2 = sink.lookup_range_files("db", "t", {"evt": (9000, None)})
-    got2 = spark.read.parquet(*files2).where(F.col("evt") >= 9000).collect()
-    assert [r["k"] for r in got2] == [41]
-    # unknown column raises loudly
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        sink.lookup_range_files("db", "t", {"nope": (0, 1)})
-
-
 def _dv_ch(spark, rows, ts):
     from pyspark.sql import functions as F
 
@@ -793,7 +702,9 @@ def test_dv_compact_folds_vectors_and_preserves_state(spark, tmp_path):
         "db", "t", _dv_ch(spark, [(3, "u3", "update"), (4, None, "delete")], 2)
     )
     before = {r.k: r.val for r in sink.read_table(spark, "db", "t").collect()}
+    assert sink.dv_masked_fraction("db", "t") > 0
     sink.compact("db", "t")
+    assert sink.dv_masked_fraction("db", "t") == 0.0
     tdir = os.path.join(str(tmp_path / "dvc"), "db", "t")
     v = sink._latest_version("db", "t")
     assert not os.path.isdir(os.path.join(tdir, f"v{v}", "_DV"))
@@ -1428,41 +1339,6 @@ def test_commit_version_unknown_for_pre_manifest_links(spark, tmp_path):
     assert rows == {"1": 2, "2": None}
 
 
-def test_maintain_composes_the_four_levers(spark, tmp_path):
-    """DV-heavy fragmented table: maintain folds the DVs, packs the
-    files, and bounds retained versions; a second call on the now-
-    healthy table commits nothing."""
-    sink = ParquetSink(spark, str(tmp_path), merge_mode="dv")
-    sink.apply_changeset(
-        "d", "t",
-        chdf(spark, [(str(i), 100, i, "insert", "a") for i in range(10)]).repartition(4),
-    )
-    # mask 6 of 10 rows across two DV commits
-    sink.apply_changeset(
-        "d", "t",
-        chdf(spark, [(str(i), 200, 100 + i, "update", "b") for i in range(4)]),
-    )
-    sink.apply_changeset(
-        "d", "t",
-        chdf(spark, [(str(i), 300, 200 + i, "update", "c") for i in range(4, 6)]),
-    )
-    assert sink.dv_masked_fraction("d", "t") > 0.2
-    rep = sink.maintain("d", "t", keep_versions=1)
-    assert rep["dv_folded"] and rep["dv_masked_fraction"] > 0.2
-    assert sink.dv_masked_fraction("d", "t") == 0.0
-    assert len(sink.versions("d", "t")) == 1
-    rows = {r.key: r.payload for r in sink.read_table(spark, "d", "t").collect()}
-    assert rows == {
-        **{str(i): "b" for i in range(4)},
-        **{str(i): "c" for i in range(4, 6)},
-        **{str(i): "a" for i in range(6, 10)},
-    }
-    v = sink._latest_version("d", "t")
-    rep2 = sink.maintain("d", "t", keep_versions=1)
-    assert not rep2.get("dv_folded") and rep2["optimize"]["rewritten"] == []
-    assert sink._latest_version("d", "t") == v  # nothing committed
-
-
 def test_restore_semantics_dv(spark, tmp_path):
     from cdc_redshift_spark.sinks.parquet_sink import ParquetSink
 
@@ -1668,14 +1544,18 @@ def test_dropped_guard_survives_readd_restore_and_clone(spark, tmp_path):
         )
 
 
-def test_analyze_column_stats_roundtrip_and_version_isolation(spark, tmp_path):
+def test_analyze_column_stats_roundtrip_and_version_isolation(
+    spark, tmp_path, monkeypatch
+):
     """analyze() persists exact one-pass stats per SNAPSHOT: the sidecar
     reads back verbatim and the old version keeps its own.  A later
     commit CARRIES the estimates forward (warehouse staleness
-    semantics, bounded by analyze_carry_limit — see
+    semantics, bounded by ANALYZE_CARRY_LIMIT — see
     test_planner.test_analyze_stats_carry_forward_and_expiry);
-    analyze_carry_limit=0 opts back into strict version scoping."""
+    ANALYZE_CARRY_LIMIT=0 means strict version scoping."""
     import pytest as _pytest
+
+    import cdc_redshift_spark.sinks.parquet_sink as ps
 
     sink = ParquetSink(spark, str(tmp_path))
     rows = [
@@ -1700,9 +1580,10 @@ def test_analyze_column_stats_roundtrip_and_version_isolation(spark, tmp_path):
     assert sink.column_stats("d", "t") == got
     assert sink.column_stats("d", "t", version=1) == got
 
-    # strict version scoping on demand: carry disabled -> a new
-    # commit's snapshot has no stats until analyzed
-    strict = ParquetSink(spark, str(tmp_path / "strict"), analyze_carry_limit=0)
+    # strict version scoping: carry disabled -> a new commit's
+    # snapshot has no stats until analyzed
+    monkeypatch.setattr(ps, "ANALYZE_CARRY_LIMIT", 0)
+    strict = ParquetSink(spark, str(tmp_path / "strict"))
     strict.apply_changeset("d", "t", chdf(spark, rows))
     strict.analyze("d", "t", ["key"])
     strict.apply_changeset("d", "t", chdf(spark, [("e", 200, 4, "insert", "z")]))

@@ -603,6 +603,7 @@ def test_pipeline_micro_batches_plan_broadcast_from_carried_stats(
     (COMPOSITE_KEY), carried forward across the commits BETWEEN
     analyze() calls (_carry_analyze), consulted per batch by
     _merge_strategy — while batch results stay exactly LWW-correct."""
+    import cdc_redshift_spark.operators.planner as planner
     import cdc_redshift_spark.sinks.parquet_sink as ps
 
     captured = []
@@ -618,9 +619,8 @@ def test_pipeline_micro_batches_plan_broadcast_from_carried_stats(
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(indir, exist_ok=True)
     # floor=0: the fixture table is tiny; the seam is what's pinned
-    sink = ParquetSink(
-        spark, str(tmp_path / "sink"), keys=KEYS, merge_broadcast_min_target=0
-    )
+    monkeypatch.setattr(planner, "MERGE_BROADCAST_MIN_TARGET", 0)
+    sink = ParquetSink(spark, str(tmp_path / "sink"), keys=KEYS)
     pipe = CdcPipeline(
         lambda raw: pg_changeset(raw, offset_col="offset"), sink, keys=KEYS
     )
@@ -655,6 +655,7 @@ def test_pipeline_auto_analyze_keeps_stats_fresh(spark, tmp_path, monkeypatch):
     """analyze_every: the pipeline refreshes its own statistics — no
     manual ANALYZE anywhere — so the broadcast flip engages from the
     first merge batch and can never age out of the carry limit."""
+    import cdc_redshift_spark.operators.planner as planner
     import cdc_redshift_spark.sinks.parquet_sink as ps
 
     captured = []
@@ -669,10 +670,9 @@ def test_pipeline_auto_analyze_keeps_stats_fresh(spark, tmp_path, monkeypatch):
     indir = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(indir, exist_ok=True)
-    sink = ParquetSink(
-        spark, str(tmp_path / "sink"), keys=KEYS,
-        merge_broadcast_min_target=0, analyze_carry_limit=1,
-    )
+    monkeypatch.setattr(planner, "MERGE_BROADCAST_MIN_TARGET", 0)
+    monkeypatch.setattr(ps, "ANALYZE_CARRY_LIMIT", 1)
+    sink = ParquetSink(spark, str(tmp_path / "sink"), keys=KEYS)
     pipe = CdcPipeline(
         lambda raw: pg_changeset(raw, offset_col="offset"), sink, keys=KEYS,
         analyze_every=1,
@@ -944,6 +944,7 @@ def test_perfbench_layers_fit_the_engine(spark, tmp_path, monkeypatch):
     and an apply on an analyzed table must leave last_merge_plan set.
     Otherwise a refactor silently zeroes the benchmark's planner.*
     metrics or breaks perfbench/run.py."""
+    import cdc_redshift_spark.operators.planner as planner
     from cdc_redshift_spark.sources.streams import RAW_STREAM_SCHEMA
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -956,9 +957,8 @@ def test_perfbench_layers_fit_the_engine(spark, tmp_path, monkeypatch):
 
     rec = layers.Recorder(spark, traced=False, setup_batches=1, seconds=600)
     # a 1-byte broadcast floor, so the tiny table is priced, not skipped
-    sink = layers.TimedSink(
-        spark, str(tmp_path / "sink"), keys=KEYS, merge_broadcast_min_target=1
-    )
+    monkeypatch.setattr(planner, "MERGE_BROADCAST_MIN_TARGET", 1)
+    sink = layers.TimedSink(spark, str(tmp_path / "sink"), keys=KEYS)
     sink.rec = rec
     pipe = layers.TimedPipeline(
         lambda r: pg_changeset(r, offset_col="offset"), sink, keys=KEYS, rec=rec

@@ -8,15 +8,23 @@ the CDC apply rate measured against the reference's designed envelope
 (200k offsets / 30s trigger ≈ 6,667 rec/s sustained — BASELINE.md).
 Each query is forced with a noop-format write so Catalyst can't prune
 the work away (a count() would drop unused columns from the scan).
+Every `queries` figure but `cdc_apply_batch` is a row of ENTRIES.
 """
 
 from __future__ import annotations
 
+import gc
+import glob
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
+from collections.abc import Callable
+from functools import cache, partial, reduce
+from typing import Any, NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -32,1011 +40,560 @@ def artifact_round(path: str) -> int:
     return int(m.group())
 
 
-def force(df) -> int:
-    """Fully materialize every column of df; return row count."""
+def force(df) -> None:
+    """Fully materialize every column of df through the noop sink."""
     df.write.format("noop").mode("overwrite").save()
-    return 0
 
 
-def main() -> None:
-    from cdc_redshift_spark.session import get_spark
+class Entry(NamedTuple):
+    """A timed row: each iteration times ``thunk(spark, setup(spark))``,
+    then calls ``teardown`` on the setup's result.  ``query`` is the
+    ``queries()`` key of a registry-backed row."""
 
-    spark = get_spark("bench")
+    name: str
+    thunk: Callable[[Any, Any], object]
+    iters: int = 2
+    keep_cache: bool = False
+    setup: Callable[[Any], Any] | None = None
+    teardown: Callable[[Any], object] | None = None
+    query: str | None = None
 
-    import __spark_entry__ as entrymod
 
-    qs = entrymod.queries()
-
-    headline = [
-        "cdc_pg_replay",
-        "cdc_lww_dedup",
-        "q1_pricing_summary",
-        "q3_shipping_priority",
-        "q5_local_supplier_volume",
-        "events_sessionize",
-        "text_stats",
-        "text_fingerprint",
-        "dedup_exact",
-        # dedup_minhash_lsh is timed per-config below (.char/.word) —
-        # the gated query runs BOTH folds in one slot, which made
-        # round-over-round reads misleading (r7's 3.2 s vs r9's 7.5 s
-        # was a fold artifact, re-diagnosed every round)
-        "sim_topk_query",
-        "sim_lsh_eval",
-        # round-4 operator families
-        "events_asof_attribution",
-        "text_winnow",
-        "sim_pq_eval",
-        # round-5: the previously un-benched hot-path shapes — corpus
-        # decontamination (n-gram inverted-index join), stream-stream
-        # interval join, and the multimodal feature pipeline
-        "corpus_decontaminate",
-        "mm_features_similarity",
-        # round-5 additions: incremental rollup maintenance (the
-        # changed-rows-only aggregate path) and the one-pass DQ gate
-        "events_incremental_rollup",
-        "dq_orders_suite",
-        # round-5 third pass: prefix-filtered exact similarity join
-        # and batch-vs-index incremental near-dup probe
-        "dedup_simjoin",
-        # round-6: the layout family's write-clustered-then-scan path
-        # (range shuffle + parquet commit + stats-pruned read)
-        "layout_pruned_scan",
-        # round-6 second pass: SCD2 dimension-history build (one
-        # per-key window over the full change stream) and BM25
-        # sparse retrieval (filtered posting explode + broadcast df)
-        "scd2_user_history",
-        "docs_bm25_topk",
-        # round-7 second pass: substring-span dedup (gram explode +
-        # two gram-keyed aggs + island window) and DSIR importance
-        # weights (gram explode + bucket-bounded broadcast scoring)
-        "docs_substring_dedup",
-        "corpus_dsir_weights",
-        # round-7 third pass: CCNet-style bigram-LM fluency scoring
-        # (transition explode + two broadcast bucket models + one
-        # per-doc average shuffle)
-        "corpus_lm_perplexity",
-        # round-7 fourth pass: SemDeDup (kmeans cells + in-cell GEMM)
-        # and BPE pair stats (corpus scan folds to vocab, pair explode)
-        "emb_semantic_dedup",
-        "corpus_bpe_pairs",
-        # round-9 (VERDICT r8 #7, carried r7 #4): the remaining
-        # un-benched r7 heavies — containment join (prefix-filtered
-        # n-gram overlap), pointer-doubling tree roots (log-depth
-        # iterative joins), and integer-exact TWAP windows
-        "dedup_containment",
-        "graph_tree_roots",
-        "events_twap",
-        # round-11 second session: the drift monitor both ways — the
-        # batch three-aggregate-pass form and the maintained-histogram
-        # streaming form (RollupMaintainer state + shared scoring)
-        "dq_drift_psi",
-        "cdc_stream_psi_drift",
-        # round-13: the drift triad's other two streaming faces
-        # (maintained state + shared scoring, VERDICT r11 #4) and the
-        # composed salted-skew execution path (flag -> confirm ->
-        # salted_join, VERDICT r11 #5)
-        "cdc_stream_emb_drift",
-        "cdc_stream_token_drift",
-        "plan_salted_exec",
-        # round-14: the privacy triad's streaming faces (maintained
-        # QI-class / QI x value cell counts + shared threshold/EMD
-        # scoring, one per CDC op: update / correction / delete)
-        "cdc_stream_k_anonymity",
-        "cdc_stream_l_diversity",
-        "cdc_stream_t_closeness",
-    ]
-    # the JVM-aggregation stateful variant: measures the streaming
-    # LWW operator itself, not applyInPandasWithState's ~0.2 ms/key
-    # Python floor (which would add a flat ~40 s at sf0.1's 150k
-    # keys and drown every other signal in the suite wall).  Measured
-    # LAST: the streaming run leaves state-store maintenance threads
-    # and JVM churn that settle() can't fully reclaim, which was
-    # measured to double the cdc_apply_batch time when it ran first.
-    tail_headline = ["events_stream_join", "cdc_stateful_lww_agg_stream"]
-
-    # warmup: touch each table + JIT the common codepaths, and spin up
-    # the Python/Arrow worker pool at the smallest SF so the first
-    # pandas-UDF query isn't charged ~10s of one-time worker startup
-    # (32 workers importing numpy/pandas).  Warmup is excluded from
-    # the reported total, same as the q1 JIT warmup always was.
-    qs["q1_pricing_summary"](spark, SF_DIR).count()
-    warm_sf = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_sf):
-        # dedup_simjoin: the PPJoin prefix/verify codegen is the
-        # heaviest JIT in the suite — measured 20 s cold vs 6.5 s
-        # after one tiny-SF run of the same plan shape (C2 compiles
-        # the generated class once; the shape is SF-independent)
-        # round 16: containment + incremental-minhash join the warmup
-        # list — the whole candidate-verify family shares the
-        # JIT-warmup-sensitive intersect path (OPTIMIZATION_r16.md §3),
-        # and one tiny-SF run compiles the same generated classes the
-        # sf0.1 measurement then reuses
-        for wname in (
-            "dedup_minhash_lsh",
-            "sim_lsh_eval",
-            "dedup_simjoin",
-            "dedup_containment",
-            "dedup_incremental_minhash",
-        ):
-            force(qs[wname](spark, warm_sf))
-
-    def settle() -> None:
-        """Between-measurement cleanup (outside every timed window):
-        release leaked cache blocks and force a JVM GC so one query's
-        heap churn (checkpoint blocks, shuffle buffers) doesn't bleed
-        into the next query's wall time.
-
-        PYTHON gc runs FIRST (round-12 watch-item diagnosis): eager
-        localCheckpoint blocks — the drift monitors and streaming
-        maintainers pin their inputs with them — are freed by
-        ContextCleaner only after the py4j handle drops, and CPython
-        reference cycles keep those handles alive until a collect; a
-        JVM System.gc() alone cannot reclaim them.  Measured: a
-        checkpoint pileup costs the apply path ~10-13%, and
-        python-gc-then-jvm-gc recovers it fully (SCALE.md round-12)."""
-        import gc as _gc
-
-        _gc.collect()
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-
-    # The sandbox host carries variable background load (measured 7x
-    # swings on identical runs); min-of-2 is the contention-robust
-    # estimator of a plan's actual cost and is what `queries` reports.
-    # keep_cache=True skips the clearCache half of settle() — the CDC
-    # apply measurements deliberately persist their input changelog,
-    # and clearing the cache inside the timed loop would silently
-    # charge the input's regeneration to the apply pipeline.
-    def timed(fn, keep_cache: bool = False, iters: int = 2) -> float:
-        import gc as _gc
-
-        best = float("inf")
-        for _ in range(iters):
-            _gc.collect()  # drop py4j handles so ContextCleaner can act
-            if not keep_cache:
+def run(spark, e: Entry) -> float:
+    """Min-of-``e.iters`` wall of ``e.thunk`` in seconds, to 3 dp: host
+    load swings identical runs up to 7x, and the min is the robust cost
+    estimate.  Off the clock before each call: Python gc FIRST (eager
+    localCheckpoint blocks are freed only once reference cycles holding
+    their py4j handles are collected; a pileup cost the apply path
+    ~10-13%, SCALE.md); clearCache, unless the row keeps an input it
+    persisted outside the window; then a JVM GC."""
+    best = float("inf")
+    for _ in range(e.iters):
+        state = e.setup(spark) if e.setup else None
+        try:
+            gc.collect()
+            if not e.keep_cache:
                 spark.catalog.clearCache()
             spark.sparkContext._jvm.System.gc()
             t0 = time.perf_counter()
-            fn()
+            e.thunk(spark, state)
             best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
+        finally:
+            if e.teardown:
+                e.teardown(state)
+    return round(best, 3)
 
-    # known JIT/host-noise-sensitive entries get min-of-3 (measured
-    # 6.7 s vs 11.0 s across two same-tree suite runs; the isolated
-    # steady state is ~5.5 s — SCALE.md).  Round 11 extends the
-    # treatment to the other three entries whose round-over-round
-    # deltas have been re-diagnosed as noise in three consecutive
-    # verdicts; their isolated steady states are pinned once in
-    # SCALE.md's round-11 section — compare against THOSE, not
-    # against last round's in-suite number.
-    extra_iters = {
-        "dedup_simjoin": 3,
-        "graph_tree_roots": 3,
-        "layout_pruned_scan": 3,
-        "events_twap": 3,
-    }
 
-    def pair_agg(df):
-        # VERDICT r13 #3: dedup_simjoin emits ~965k verified pair ROWS
-        # at sf0.1 and the noop-materialization of that result set —
-        # not the PPJoin — is what swings with host contention (three
-        # rounds of noise triage).  Reducing to (pair count, pairing
-        # checksum) keeps every pair computed AND verified while the
-        # timed window measures the join; query + oracle are unchanged.
-        return df.selectExpr(
-            "count(1)", "bit_xor(xxhash64(id_a, id_b, jaccard))"
-        ).collect()
+@cache
+def _queries() -> dict:
+    import __spark_entry__
+    return __spark_entry__.queries()
 
-    times: dict[str, float] = {}
-    for name in headline:
-        fn = (
-            (lambda: pair_agg(qs[name](spark, SF_DIR)))
-            if name == "dedup_simjoin"
-            else (lambda: force(qs[name](spark, SF_DIR)))
-        )
-        times[name] = timed(fn, iters=extra_iters.get(name, 2))
 
-    # dedup_minhash_lsh split by shingle config (VERDICT r9 #5): one
-    # registry slot, two sub-timings, so the char fold stays
-    # like-for-like comparable with the pre-fold rounds (r7 and
-    # earlier timed ONLY char) and the word fold gets its own number.
+def registry(name: str, iters: int = 2, shape: Callable = force) -> Entry:
+    """A row timing registry query ``name`` at SF_DIR, consumed by ``shape``."""
+    thunk = lambda spark, _: shape(_queries()[name](spark, SF_DIR))  # noqa: E731
+    return Entry(name, thunk, iters, query=name)
+
+
+def pair_agg(df) -> None:
+    """dedup_simjoin's noop write of ~965k pair rows, not its PPJoin, swings
+    with host load; (count, pairing checksum) still verifies every pair."""
+    df.selectExpr("count(1)", "bit_xor(xxhash64(id_a, id_b, jaccard))").collect()
+
+
+def _docs(spark, index: bool = False):
+    """(all, stored corpus, 5% micro-batch) of the documents table; with
+    ``index``, the corpus's signatures persisted outside the window."""
     from pyspark.sql import functions as F
-
-    from cdc_redshift_spark.operators.dedup import minhash_lsh_pairs
-    from cdc_redshift_spark.queries.dedup_q import (
-        MINHASH_BUCKET_CAP,
-        WORD_N,
-        WORD_THRESHOLD,
-    )
+    from cdc_redshift_spark.operators.dedup import minhash_frames
+    from cdc_redshift_spark.queries.dedup_q import INC_MH_K
     from cdc_redshift_spark.sources.tables import load_table
+    d = load_table(spark, SF_DIR, "documents")
+    ex, ba = d.where(F.col("doc_id") % 20 != 0), d.where(F.col("doc_id") % 20 == 0)
+    if index:
+        ex = minhash_frames(ex, k=INC_MH_K).persist()
+        ex.count()
+    return d, ex, ba
 
-    mh_docs = load_table(spark, SF_DIR, "documents")
-    times["dedup_minhash_lsh.char"] = timed(
-        lambda: force(
-            minhash_lsh_pairs(
-                mh_docs,
-                k=32,
-                bands=8,
-                jaccard_threshold=0.6,
-                max_bucket_size=MINHASH_BUCKET_CAP,
-            )
-        )
-    )
-    times["dedup_minhash_lsh.word"] = timed(
-        lambda: force(
-            minhash_lsh_pairs(
-                mh_docs,
-                k=32,
-                bands=8,
-                n=WORD_N,
-                jaccard_threshold=WORD_THRESHOLD,
-                unit="word",
-                max_bucket_size=MINHASH_BUCKET_CAP,
-            )
-        )
-    )
 
-    # incremental-minhash split (r6 VERDICT #3): the old single entry
-    # conflated the ONE-TIME index construction with the steady-state
-    # probe the operator exists for.  `_build` times signing the
-    # stored corpus; `_probe` times the real per-batch work — sign a
-    # MICRO-batch (5% of the corpus; the gated query's 25% bulk split
-    # is a correctness fixture, not a steady-state batch:index ratio)
-    # + band-join it against the ALREADY-PERSISTED index.  The probe
-    # is candidate-bound (~20 us per exact verify under codegen;
-    # band join itself profiled at 1.8 s), so batch size IS the knob:
-    # the 25% bulk batch emits ~1.1M pairs (13 s); the 5% micro-batch
-    # sees ~350k candidates / ~240k qualifying pairs (~970 genuine
-    # near-dup neighbors per batch doc on this deliberately dense
-    # fixture — only 8/5000 docs are EXACT dups, so the verify work
-    # is irreducible for exact pair output).
+def _lsh(unit: str) -> Callable:
+    """dedup_minhash_lsh per shingle config: the registry query runs
+    both folds in one slot; char stays comparable with older rounds."""
+    def thunk(_spark, docs) -> None:
+        from cdc_redshift_spark.operators.dedup import minhash_lsh_pairs
+        from cdc_redshift_spark.queries import dedup_q as q
+        word = unit == "word"
+        force(minhash_lsh_pairs(
+            docs[0], k=32, bands=8, n=q.WORD_N if word else 3, unit=unit,
+            jaccard_threshold=q.WORD_THRESHOLD if word else 0.6,
+            max_bucket_size=q.MINHASH_BUCKET_CAP))
+    return thunk
+
+
+# The incremental-minhash rows split the one-time index build from the
+# steady-state probe: a 5% micro-batch band-joined to the persisted index
+# (the query's 25% split is a fixture, not a steady-state batch ratio).
+def _inc_build(_spark, docs) -> None:
+    from cdc_redshift_spark.operators.dedup import minhash_frames
+    from cdc_redshift_spark.queries.dedup_q import INC_MH_K
+    force(minhash_frames(docs[1], k=INC_MH_K))
+
+
+def _inc_probe(_spark, docs) -> None:
+    from cdc_redshift_spark.operators import dedup as op
+    from cdc_redshift_spark.queries import dedup_q as q
+    _, idx, batch = docs
+    k = q.INC_MH_K
+    force(op.incremental_minhash_pairs(idx, op.minhash_frames(batch, k=k), k=k,
+                                       bands=q.INC_MH_BANDS,
+                                       jaccard_threshold=q.INC_MH_THRESHOLD))
+
+
+def _dv_setup(spark):
+    """A fresh dv-mode sink holding the orders base (the apply mutates
+    versioned state) and the changeset persisted outside the window: the
+    row times the DV merge commit, not the changeset's lineage."""
     from pyspark.sql import functions as F
-
-    from cdc_redshift_spark.operators.dedup import (
-        incremental_minhash_pairs,
-        minhash_frames,
-    )
-    from cdc_redshift_spark.queries.dedup_q import (
-        INC_MH_BANDS,
-        INC_MH_K,
-        INC_MH_THRESHOLD,
-    )
+    from cdc_redshift_spark.sinks.parquet_sink import ParquetSink
     from cdc_redshift_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    ex = docs.where(F.col("doc_id") % 20 != 0)
-    ba = docs.where(F.col("doc_id") % 20 == 0)
-    times["dedup_incremental_minhash_build"] = timed(
-        lambda: force(minhash_frames(ex, k=INC_MH_K))
+    base = load_table(spark, SF_DIR, "orders").select(
+        F.col("o_orderkey").alias("k"), F.col("o_orderstatus").alias("status"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        F.lit(1).cast("long").alias("ts_ms"), F.col("o_orderkey").alias("offset"),
+        F.lit("insert").alias("op"),
     )
-    idx = minhash_frames(ex, k=INC_MH_K).persist()
-    idx.count()
-    times["dedup_incremental_minhash_probe"] = timed(
-        lambda: force(
-            incremental_minhash_pairs(
-                idx,
-                minhash_frames(ba, k=INC_MH_K),
-                k=INC_MH_K,
-                bands=INC_MH_BANDS,
-                jaccard_threshold=INC_MH_THRESHOLD,
-            )
-        ),
-        keep_cache=True,
-    )
-    idx.unpersist()
+    mo = F.pmod(F.col("k"), F.lit(10))
+    upd = base.where(mo == 2).withColumn("status", F.lit("U"))
+    ch = (
+        upd.withColumn("op", F.lit("update"))
+        .unionByName(base.where(mo == 3).withColumn("op", F.lit("delete")))
+        .withColumn("ts_ms", F.lit(2).cast("long"))
+    ).persist()
+    ch.count()
+    root = tempfile.mkdtemp(prefix="bench_dv_")
+    sink = ParquetSink(spark, root, keys=("k",), merge_mode="dv")
+    sink.apply_changeset("db", "t", base)
+    return root, sink, ch
 
-    # CDC apply-rate: one full micro-batch (synth changelog ≈ reference's
-    # 200k-offset trigger at sf0.1) through parse→normalize→dedup→merge
+
+def _dv_teardown(state) -> None:
+    state[2].unpersist()
+    shutil.rmtree(state[0], ignore_errors=True)
+
+
+#: The timed rows, in run order, which is also their `queries` order.
+#: The last N_TAIL rows run after the CDC apply and the `extra` probes.
+ENTRIES = [
+    *map(registry, (
+        "cdc_pg_replay", "cdc_lww_dedup", "q1_pricing_summary", "q3_shipping_priority",
+        "q5_local_supplier_volume", "events_sessionize", "text_stats",
+        "text_fingerprint", "dedup_exact", "sim_topk_query", "sim_lsh_eval",
+        "events_asof_attribution", "text_winnow", "sim_pq_eval", "corpus_decontaminate",
+        "mm_features_similarity", "events_incremental_rollup", "dq_orders_suite",
+    )),
+    # min-of-3 rows are JIT- and host-noise-sensitive (dedup_simjoin read
+    # 6.7 s vs 11.0 s in two same-tree suite runs, ~5.5 s isolated);
+    # compare them with their isolated steady states in SCALE.md
+    registry("dedup_simjoin", iters=3, shape=pair_agg),
+    registry("layout_pruned_scan", iters=3),
+    *map(registry, (
+        "scd2_user_history", "docs_bm25_topk", "docs_substring_dedup",
+        "corpus_dsir_weights", "corpus_lm_perplexity", "emb_semantic_dedup",
+        "corpus_bpe_pairs", "dedup_containment",
+    )),
+    registry("graph_tree_roots", iters=3),
+    registry("events_twap", iters=3),
+    *map(registry, (
+        "dq_drift_psi", "cdc_stream_psi_drift", "cdc_stream_emb_drift",
+        "cdc_stream_token_drift", "plan_salted_exec", "cdc_stream_k_anonymity",
+        "cdc_stream_l_diversity", "cdc_stream_t_closeness",
+    )),
+    Entry("dedup_minhash_lsh.char", _lsh("char"), setup=_docs),
+    Entry("dedup_minhash_lsh.word", _lsh("word"), setup=_docs),
+    Entry("dedup_incremental_minhash_build", _inc_build, setup=_docs),
+    Entry("dedup_incremental_minhash_probe", _inc_probe, keep_cache=True,
+          setup=partial(_docs, index=True), teardown=lambda st: st[1].unpersist()),
+    Entry("sink_dv_merge_commit",
+          lambda _, state: state[1].apply_changeset("db", "t", state[2]),
+          keep_cache=True, setup=_dv_setup, teardown=_dv_teardown),
+    # The tail runs LAST: streaming leaves state-store threads and JVM churn
+    # that cleanup can't reclaim, which doubled cdc_apply_batch when run
+    # first.  The JVM LWW variant is timed: applyInPandasWithState's Python
+    # floor (~0.2 ms/key, ~40 s at sf0.1) would drown every other signal.
+    registry("events_stream_join"),
+    registry("cdc_stateful_lww_agg_stream"),
+]
+N_TAIL = 2
+
+#: Forced once at the smallest SF before any timing: the candidate-verify
+#: family's JIT is the suite's heaviest (dedup_simjoin 20 s cold vs 6.5 s
+#: warm) and C2 compiles it once whatever the SF.
+WARMUP = ("dedup_minhash_lsh", "sim_lsh_eval", "dedup_simjoin", "dedup_containment",
+          "dedup_incremental_minhash")
+
+#: The DMS replay, string vs variant payload: ~par expected (0.97x at sf0.1,
+#: one from_json either way), pinning that the variant path costs nothing.
+VARIANT = (("replay_string_s", "cdc_dms_relational"),
+           ("replay_variant_s", "cdc_dms_variant_replay"))
+
+
+def ratio(a: float, b: float) -> float:
+    return round(a / max(b, 1e-9), 2)
+
+
+def cdc_apply(spark) -> tuple[float, dict]:
+    """CDC apply: one micro-batch (≈ the reference's 200k-offset trigger
+    at sf0.1) through parse -> normalize -> LWW -> merge, then at 4x; the
+    4x rate should RISE as fixed costs amortize (a drop flags a scaling
+    regression).  Each input is persisted outside the window and kept."""
+    from pyspark.sql import functions as F
     from cdc_redshift_spark.dedup import latest_per_key
     from cdc_redshift_spark.normalize import pg_changeset
     from cdc_redshift_spark.plans.merge import apply_changeset
     from cdc_redshift_spark.queries.cdc import synth_pg_changelog
+    keys = ("db", "table", "key")
 
+    def apply(_spark, raw) -> None:
+        ch = latest_per_key(pg_changeset(raw, offset_col="offset"), keys=keys)
+        force(apply_changeset(None, ch, keys=keys))
+    row = Entry("cdc_apply_batch", apply, keep_cache=True)
     raw = synth_pg_changelog(spark, SF_DIR).persist()
-    n_events = raw.count()
-
-    def run_apply(r):
-        ch = latest_per_key(
-            pg_changeset(r, offset_col="offset"), keys=("db", "table", "key")
-        )
-        force(apply_changeset(None, ch, keys=("db", "table", "key")))
-
-    cdc_secs = timed(lambda: run_apply(raw), keep_cache=True)
-    rec_per_s = n_events / cdc_secs if cdc_secs > 0 else 0.0
-
-    # Scaling evidence (SCALE.md): the same CDC
-    # batch at 4x replication — throughput should RISE as fixed costs
-    # amortize (single-shuffle, map-side-combine plan); a drop flags a
-    # scaling regression.  Reported in `extra` only, so the headline
-    # suite wall stays comparable round-over-round.
-    from pyspark.sql import functions as F
-
-    reps = 4
-    parts = [
+    n = raw.count()
+    secs = run(spark, row._replace(setup=lambda _: raw))
+    big = reduce(lambda a, b: a.unionByName(b), [
         raw.select(
             F.regexp_replace("value", '"id":', f'"id":{i}00').alias("value"),
             (F.col("offset") + i * 100_000_000).alias("offset"),
         )
-        for i in range(reps)
-    ]
-    big = parts[0]
-    for p in parts[1:]:
-        big = big.unionByName(p)
-    big = big.persist()
-    n_events_4x = big.count()
+        for i in range(4)
+    ]).persist()
+    n_4x = big.count()
     raw.unpersist()
-    cdc_secs_4x = timed(lambda: run_apply(big), keep_cache=True)
+    secs_4x = run(spark, row._replace(setup=lambda _: big))
     big.unpersist()
-    rec_per_s_4x = n_events_4x / cdc_secs_4x if cdc_secs_4x > 0 else 0.0
+    rate = n / secs if secs > 0 else 0.0
+    rate_4x = n_4x / secs_4x if secs_4x > 0 else 0.0
+    return secs, {
+        "cdc_events": n, "cdc_rec_per_s": round(rate, 1),
+        "baseline_rec_per_s": 6667, "cdc_vs_baseline_x": round(rate / 6667, 2),
+        "cdc_events_4x": n_4x, "cdc_rec_per_s_4x": round(rate_4x, 1),
+        "cdc_scaleup_x": round(rate_4x / rate, 2) if rate else 0.0,
+    }
 
-    # sink DV-merge commit (VERDICT r8 #7): the deletion-vector merge
-    # path against a committed 150k-row base — winners computed, _DV
-    # sidecar written, every untouched data file hard-linked forward
-    # (no rewrite).  Fresh sink per iteration (the apply mutates
-    # versioned state); only the changeset apply is timed.
-    import shutil
-    import tempfile
 
-    from cdc_redshift_spark.sinks.parquet_sink import ParquetSink
+def merge_crossover(spark) -> dict:
+    """Shuffle vs broadcast apply_changeset, the planner's pick (the seam
+    ParquetSink consults) and whether it won, at both ratio extremes:
+    "micro", 0.5% of keys into a 16x target (the streaming steady state
+    broadcast exists for); "bulk", all keys into the plain target (the
+    backfill shape); "disk_micro", micro against the 16x target read
+    from parquet, where only the shuffle plan pays a full-target shuffle."""
+    from pyspark.sql import functions as F
+    from cdc_redshift_spark.operators import planner as p
+    from cdc_redshift_spark.plans.merge import apply_changeset
+    from cdc_redshift_spark.sources.tables import load_table
 
-    o = load_table(spark, SF_DIR, "orders")
-    dv_base = o.select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("status"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        F.lit(1).cast("long").alias("ts_ms"),
-        F.col("o_orderkey").alias("offset"),
-        F.lit("insert").alias("op"),
-    )
-    mo = F.pmod(F.col("k"), F.lit(10))
-    # persisted + counted OUTSIDE the timed window (the file's input
-    # discipline): the measurement is the DV merge COMMIT, not the
-    # changeset's lineage recomputation
-    dv_ch = (
-        dv_base.where(mo == 2)
-        .withColumn("status", F.lit("U"))
-        .withColumn("op", F.lit("update"))
-        .unionByName(dv_base.where(mo == 3).withColumn("op", F.lit("delete")))
-        .withColumn("ts_ms", F.lit(2).cast("long"))
-    ).persist()
-    dv_ch.count()
-    best_dv = float("inf")
-    for _ in range(2):
-        root = tempfile.mkdtemp(prefix="bench_dv_")
-        try:
-            sink = ParquetSink(spark, root, keys=("k",), merge_mode="dv")
-            sink.apply_changeset("db", "t", dv_base)
-            # GC only — settle()'s clearCache would evict the
-            # persisted changeset and re-charge its lineage here
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            sink.apply_changeset("db", "t", dv_ch)
-            best_dv = min(best_dv, time.perf_counter() - t0)
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-    dv_ch.unpersist()
-    times["sink_dv_merge_commit"] = round(best_dv, 3)
-
-    # merge-strategy crossover (VERDICT r8 #5): shuffle vs broadcast
-    # apply_changeset at both extremes of the changeset:target ratio —
-    # "micro" = 0.5% of keys against a 16x-replicated target (the
-    # streaming steady state the broadcast plan exists for: avoid
-    # shuffling a huge table for a tiny batch) and "bulk" = 100% of
-    # keys against the plain target (the backfill shape, where both
-    # plans move everything and the shuffle's single pass wins).  The
-    # planner decision is the SAME seam ParquetSink consults
-    # (df_key_stats -> join_plan -> merge_strategy_from_plan) and must
-    # land on the faster side at each extreme; `extra` records the
-    # four walls, the picks, and whether each pick won.
-    from cdc_redshift_spark.operators.planner import (
-        df_key_stats,
-        join_plan,
-        merge_strategy_from_plan,
-        row_bytes_of,
-    )
-
-    li = load_table(spark, SF_DIR, "lineitem")
-    base_key = F.col("l_orderkey") * 8 + F.col("l_linenumber")
-    mbase = li.select(
-        base_key.alias("k"),
-        F.col("l_quantity").cast("double").alias("qty"),
-        F.col("l_returnflag").alias("v"),
-        F.lit(100).cast("long").alias("ts_ms"),
-        base_key.alias("offset"),
-        F.lit("load").alias("op"),
-    )
-    # disjoint 16x replication: the big-target regime at any SF
-    big_parts = [
-        mbase.select(
-            (F.col("k") + i * 1_000_000_000).alias("k"),
-            "qty", "v", "ts_ms",
-            (F.col("offset") + i * 1_000_000_000).alias("offset"),
-            "op",
-        )
-        for i in range(16)
-    ]
-    mbig = big_parts[0]
-    for p in big_parts[1:]:
-        mbig = mbig.unionByName(p)
-    mbig = mbig.persist()
-    msmall = mbase.persist()
-    merge_x: dict = {"big_target_rows": mbig.count(),
-                     "bulk_target_rows": msmall.count()}
-    for label, mtgt, pred in (
-        ("micro", mbig, F.pmod(F.col("k"), F.lit(200)) == 7),
-        ("bulk", msmall, F.lit(True)),
-    ):
-        mch = (
-            mtgt.where(pred)
-            .withColumn("v", F.lit("upd"))
+    def leg(label: str, tgt, pred, iters: int) -> None:
+        ch = (
+            tgt.where(pred).withColumn("v", F.lit("upd"))
             .withColumn("ts_ms", F.lit(200).cast("long"))
             .withColumn("offset", F.col("offset") + 100_000_000)
             .withColumn("op", F.lit("update"))
         ).persist()
-        merge_x[f"{label}_rows"] = mch.count()
+        merge_x[f"{label}_rows"] = ch.count()
+
+        def apply(_spark, strategy) -> None:
+            force(apply_changeset(tgt, ch, keys=("k",), strategy=strategy))
         for strat in ("shuffle", "broadcast"):
-            # min-of-3: the two plans are within ~1 s of each other at
-            # this SF and in-suite JVM state swings individual runs
-            # more than that (isolated probes: broadcast 2.1 s vs
-            # shuffle 3.1 s on the micro extreme)
-            merge_x[f"{label}_{strat}_s"] = timed(
-                lambda: force(
-                    apply_changeset(mtgt, mch, keys=("k",), strategy=strat)
-                ),
-                keep_cache=True,
-                iters=3,
-            )
-        plan = join_plan(
-            df_key_stats(mtgt, "k"),
-            df_key_stats(mch, "k"),
-            "k",
-            left_row_bytes=row_bytes_of(mtgt.dtypes),
-            right_row_bytes=row_bytes_of(mch.dtypes),
-        )
-        pick = merge_strategy_from_plan(plan)
-        other = "shuffle" if pick == "broadcast" else "broadcast"
+            row = Entry(label, apply, iters, keep_cache=True,
+                        setup=lambda _, s=strat: s)
+            merge_x[f"{label}_{strat}_s"] = run(spark, row)
+        pick = p.merge_strategy_from_plan(p.join_plan(
+            p.df_key_stats(tgt, "k"), p.df_key_stats(ch, "k"), "k",
+            left_row_bytes=p.row_bytes_of(tgt.dtypes),
+            right_row_bytes=p.row_bytes_of(ch.dtypes),
+        ))
+        walls = [merge_x[f"{label}_{strat}_s"] for strat in ("shuffle", "broadcast")]
         merge_x[f"{label}_planner_pick"] = pick
-        merge_x[f"{label}_pick_is_faster"] = bool(
-            merge_x[f"{label}_{pick}_s"] <= merge_x[f"{label}_{other}_s"]
+        merge_x[f"{label}_pick_is_faster"] = merge_x[f"{label}_{pick}_s"] <= min(walls)
+        ch.unpersist()
+    key = F.col("l_orderkey") * 8 + F.col("l_linenumber")
+    mbase = load_table(spark, SF_DIR, "lineitem").select(
+        key.alias("k"), F.col("l_quantity").cast("double").alias("qty"),
+        F.col("l_returnflag").alias("v"), F.lit(100).cast("long").alias("ts_ms"),
+        key.alias("offset"), F.lit("load").alias("op"),
+    )
+    # disjoint 16x replication: the big-target regime at any SF
+    mbig = reduce(lambda a, b: a.unionByName(b), [
+        mbase.select(
+            (F.col("k") + i * 1_000_000_000).alias("k"), "qty", "v", "ts_ms",
+            (F.col("offset") + i * 1_000_000_000).alias("offset"), "op",
         )
-        mch.unpersist()
+        for i in range(16)
+    ]).persist()
+    msmall = mbase.persist()
+    merge_x = {"big_target_rows": mbig.count(), "bulk_target_rows": msmall.count()}
+    micro = F.pmod(F.col("k"), F.lit(200)) == 7
+    # min-of-3: the two plans are within ~1 s of each other at this SF,
+    # and in-suite JVM state swings single runs by more than that
+    leg("micro", mbig, micro, iters=3)
+    leg("bulk", msmall, F.lit(True), iters=3)
     msmall.unpersist()
-
-    # disk-resident crossover leg (VERDICT r9 #8): the in-memory micro
-    # probe is scan-bound (target persisted on one node, both plans
-    # converge); this leg DROPS the persist and merges a 0.5% changeset
-    # into the same 16x target read back from parquet, so the shuffle
-    # plan pays a real disk scan + full-target shuffle while the
-    # broadcast plan pays the scan only — the closest local-mode
-    # approximation of the cluster regime the broadcast flip exists
-    # for.  Expected reading: broadcast <= shuffle here; if the probe
-    # still reads shuffle-faster, local disk is fast enough that both
-    # stay scan-bound (document, don't flip the rule).
-    import shutil
-    import tempfile
-
     disk_root = tempfile.mkdtemp(prefix="bench_merge_disk_")
     try:
         mbig.write.mode("overwrite").parquet(disk_root)
         mbig.unpersist()
         dtgt = spark.read.parquet(disk_root)
         merge_x["disk_target_rows"] = dtgt.count()
-        dch = (
-            dtgt.where(F.pmod(F.col("k"), F.lit(200)) == 7)
-            .withColumn("v", F.lit("upd"))
-            .withColumn("ts_ms", F.lit(200).cast("long"))
-            .withColumn("offset", F.col("offset") + 100_000_000)
-            .withColumn("op", F.lit("update"))
-        ).persist()
-        merge_x["disk_micro_rows"] = dch.count()
-        for strat in ("shuffle", "broadcast"):
-            merge_x[f"disk_micro_{strat}_s"] = timed(
-                lambda: force(
-                    apply_changeset(dtgt, dch, keys=("k",), strategy=strat)
-                ),
-                keep_cache=True,
-                iters=2,
-            )
-        dplan = join_plan(
-            df_key_stats(dtgt, "k"),
-            df_key_stats(dch, "k"),
-            "k",
-            left_row_bytes=row_bytes_of(dtgt.dtypes),
-            right_row_bytes=row_bytes_of(dch.dtypes),
-        )
-        dpick = merge_strategy_from_plan(dplan)
-        dother = "shuffle" if dpick == "broadcast" else "broadcast"
-        merge_x["disk_micro_planner_pick"] = dpick
-        merge_x["disk_micro_pick_is_faster"] = bool(
-            merge_x[f"disk_micro_{dpick}_s"]
-            <= merge_x[f"disk_micro_{dother}_s"]
-        )
-        dch.unpersist()
+        leg("disk_micro", dtgt, micro, iters=2)
     finally:
         shutil.rmtree(disk_root, ignore_errors=True)
-    # READ ME before re-litigating the sign: on local[_] both micro
-    # plans are scan-bound and their gap sits inside the host's noise
-    # band — two same-tree runs have read it in OPPOSITE directions
-    # (SCALE.md round-10 close).  *_pick_is_faster is a coin flip
-    # locally; the flip rule's value is the cluster regime where the
-    # avoided target shuffle is network, not page cache.
+    # READ ME before re-litigating the sign: locally both micro plans are
+    # scan-bound and their gap is noise (same-tree runs read it in
+    # OPPOSITE directions, SCALE.md), so *_pick_is_faster is a coin flip;
+    # the flip pays off on a cluster, where the shuffle is network.
     merge_x["local_mode_scan_bound"] = True
+    return merge_x
 
-    # streaming-maintainer per-trigger cost (VERDICT r9 #6): the
-    # "O(batch) per trigger, never O(history)" claim, timed.  Ten
-    # update() calls per maintainer at 1x and 4x batch size; the
-    # reported figure is the mean of triggers 3..10 (the first two
-    # pay init/JIT), plus the last-trigger wall so history-growth
-    # sensitivity is visible (SCD2's snapshot swap rewrites the
-    # stored history file per commit — bounded IO, no shuffle growth;
-    # IVF appends one partition and never touches old batches).
-    def trigger_walls(mk_maintainer, batches) -> list[float]:
-        m = mk_maintainer()
+
+def maintainers(spark) -> dict:
+    """Per-trigger cost and history-depth axes of the streaming maintainers."""
+    from pyspark.sql import functions as F
+    from cdc_redshift_spark.operators.similarity import _centroids
+    from cdc_redshift_spark.sources.tables import load_table
+    from cdc_redshift_spark.streaming.annindex import IvfIndexMaintainer
+    from cdc_redshift_spark.streaming.joinview import JoinViewMaintainer
+    from cdc_redshift_spark.streaming.rollup import RollupMaintainer
+    from cdc_redshift_spark.streaming.scd2 import Scd2Maintainer
+    maint: dict = {}
+
+    def trigger_walls(steps) -> list[float]:
+        # ``steps`` is a generator, so each batch is built off the clock
         walls = []
-        for i, b in enumerate(batches):
+        for step in steps:
             spark.sparkContext._jvm.System.gc()
             t0 = time.perf_counter()
-            m.update(b, i)
+            step()
             walls.append(round(time.perf_counter() - t0, 3))
         return walls
 
     def steady(walls: list[float]) -> float:
-        return round(sum(walls[2:]) / len(walls[2:]), 3)
+        return round(sum(walls[2:]) / len(walls[2:]), 3)  # 2 pay init + JIT
 
-    from cdc_redshift_spark.operators.similarity import _centroids
-    from cdc_redshift_spark.streaming.annindex import IvfIndexMaintainer
-    from cdc_redshift_spark.streaming.scd2 import Scd2Maintainer
-
-    maint: dict = {}
-    orders = load_table(spark, SF_DIR, "orders")
-    # SCD2: each trigger UPDATES the same key slice with a later ts —
-    # every batch closes its keys' open intervals and appends new
-    # versions (the worst case for the maintainer: maximal interval
-    # churn, stored history grows every trigger)
-    scd_base = orders.select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("attr"),
-        F.col("o_orderkey").alias("seq"),
-        F.lit("update").alias("op"),
-    )
-    for label, nkeys in (("1x", 10), ("4x", 40)):
-        sl = scd_base.where(F.pmod(F.col("k"), F.lit(400)) < nkeys).persist()
-        n_rows = sl.count()
-        batches = [
-            sl.withColumn("ts", F.lit(100 + i).cast("long")).withColumn(
-                "attr", F.concat(F.col("attr"), F.lit(str(i)))
-            )
-            for i in range(10)
-        ]
-        root = tempfile.mkdtemp(prefix="bench_scd2_")
-        try:
-            walls = trigger_walls(
-                lambda: Scd2Maintainer(
-                    spark, root, keys=["k"], ts_col="ts",
-                    attrs=["attr"], tiebreak=["seq"],
-                ),
-                batches,
-            )
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-            sl.unpersist()
-        maint[f"scd2_batch_rows_{label}"] = n_rows
-        maint[f"scd2_sec_per_trigger_{label}"] = steady(walls)
-        maint[f"scd2_last_trigger_s_{label}"] = walls[-1]
-
-    # history-DEPTH axis (VERDICT r10 #1): with the bucketed snapshot
-    # store, a trigger's IO is O(touched buckets + batch) — so the
-    # per-trigger wall must stay ~flat as the STORED history grows
-    # 10x, provided the batch touches few of the 64 key-hash buckets.
-    # Seed a 1x / 10x-deep history, then time 8 triggers that each
-    # update the SAME 5 LITERAL keys (review r11: a mod-class filter
-    # here selects ~0.5% of ALL keys — hundreds of distinct values
-    # touching ~every bucket, which silently stops exercising the
-    # prune).  scd2_depth_touched_buckets pins how many of the 64
-    # buckets a trigger actually rewrites; the rest are hard-linked,
-    # never read.
     def store_footprint(root: str) -> tuple[int, int]:
-        """(bytes, version-dir count) of a snapshot store — hard-linked
-        files counted ONCE (st_ino dedup), since unchanged-bucket
-        sharing across versions is exactly the layout property the
-        footprint axis certifies (VERDICT r13 #5): on-disk bytes must
-        stay O(state) + O(churn x keep_versions), not O(state x
-        versions-ever-written)."""
-        seen, total, nver = set(), 0, 0
-        for d in os.listdir(root):
-            if d.startswith("v") and os.path.isdir(os.path.join(root, d)):
-                nver += 1
-        for dirpath, _dirs, files in os.walk(root):
-            for f in files:
-                st = os.stat(os.path.join(dirpath, f))
-                if st.st_ino in seen:
-                    continue
-                seen.add(st.st_ino)
-                total += st.st_size
-        return total, nver
+        # (bytes, version dirs); a hard-linked file counts ONCE, as bytes
+        # must stay O(state + churn x keep_versions)
+        files = [os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs]
+        sizes = {st.st_ino: st.st_size for st in map(os.stat, files)}
+        vdirs = [os.path.join(root, d) for d in os.listdir(root) if d.startswith("v")]
+        return sum(sizes.values()), sum(map(os.path.isdir, vdirs))
 
-    keys5 = [
-        r[0]
-        for r in scd_base.select("k").distinct().orderBy("k").limit(5).collect()
-    ]
-    micro = scd_base.where(F.col("k").isin(keys5)).persist()
-    maint["scd2_depth_micro_rows"] = micro.count()
-    for label, seed_lim in (("1x", 40), ("10x", 400)):
-        seed = scd_base.where(
-            F.pmod(F.col("k"), F.lit(400)) < seed_lim
-        ).withColumn("ts", F.lit(1).cast("long"))
-        root = tempfile.mkdtemp(prefix="bench_scd2_depth_")
-        try:
-            m = Scd2Maintainer(
-                spark, root, keys=["k"], ts_col="ts",
-                attrs=["attr"], tiebreak=["seq"],
-            )
-            m.update(seed, 0)
-            maint[f"scd2_depth_{label}_hist_rows"] = m.current().count()
-            maint["scd2_depth_touched_buckets"] = len(
-                m.touched_buckets(micro)
-            )
-            walls = []
-            for i in range(1, 9):
-                b = micro.withColumn(
-                    "ts", F.lit(100 + i).cast("long")
-                ).withColumn("attr", F.concat("attr", F.lit(str(i))))
-                spark.sparkContext._jvm.System.gc()
-                t0 = time.perf_counter()
-                m.update(b, i)
-                walls.append(round(time.perf_counter() - t0, 3))
-            # footprint axis (VERDICT r13 #5): after 9 commits with
-            # keep_versions retention, unique-inode bytes must track
-            # the STATE size, and version dirs stay at the retention
-            # cap — not grow with trigger count
-            fb, nv = store_footprint(root)
-            maint[f"scd2_depth_{label}_store_bytes"] = fb
-            maint[f"scd2_depth_{label}_version_dirs"] = nv
-            # rows AT footprint time (the 8 triggers appended history
-            # since the seed count), so the bytes/row ratio compares
-            # numerator and denominator of the SAME state
-            maint[f"scd2_depth_{label}_rows_at_du"] = m.current().count()
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-        maint[f"scd2_depth_{label}_s_per_trigger"] = steady(walls)
-    micro.unpersist()
-    maint["scd2_depth_flat_ratio"] = round(
-        maint["scd2_depth_10x_s_per_trigger"]
-        / max(maint["scd2_depth_1x_s_per_trigger"], 1e-9),
-        2,
-    )
-    # bytes-per-state-row must be flat across 10x stored history
-    # (~1.0 = disk is O(state x keep_versions), no version leak)
-    maint["scd2_depth_bytes_per_row_ratio"] = round(
-        (
-            maint["scd2_depth_10x_store_bytes"]
-            / max(maint["scd2_depth_10x_rows_at_du"], 1)
+    def growth(prefix, slices, open_store, batch) -> None:
+        # "O(batch) per trigger, never O(history)": ten triggers per 1x
+        # and 4x batch; the last one's wall shows any history growth
+        for label, sl in slices:
+            sl = sl.persist()
+            maint[f"{prefix}_batch_rows_{label}"] = sl.count()
+            root = tempfile.mkdtemp(prefix=f"bench_{prefix}_")
+            try:
+                m = open_store(root)
+                steps = (partial(m.update, batch(sl, i), i) for i in range(10))
+                walls = trigger_walls(steps)
+            finally:
+                shutil.rmtree(root, ignore_errors=True)
+                sl.unpersist()
+            maint[f"{prefix}_sec_per_trigger_{label}"] = steady(walls)
+            maint[f"{prefix}_last_trigger_s_{label}"] = walls[-1]
+
+    def depth(prefix, rows_key, seeds, open_store, pinned, steps, on_done=None,
+              seed_store=lambda m, seed: m.update(seed, 0)) -> None:
+        # trigger IO is O(touched buckets + batch): s/trigger must stay
+        # flat as the stored state grows 10x.  Triggers touch the SAME 5
+        # literal keys; a mod-class filter would touch ~every bucket
+        for label, seed in seeds:
+            root = tempfile.mkdtemp(prefix=f"bench_{prefix}_")
+            try:
+                m = open_store(root)
+                seed_store(m, seed)
+                maint[f"{prefix}_{label}_{rows_key}"] = m.current().count()
+                maint[f"{prefix}_touched_buckets"] = len(m.touched_buckets(pinned))
+                walls = trigger_walls(steps(m, seed))
+                if on_done:
+                    on_done(label, m, root)
+            finally:
+                shutil.rmtree(root, ignore_errors=True)
+            maint[f"{prefix}_{label}_s_per_trigger"] = steady(walls)
+        maint[f"{prefix}_flat_ratio"] = ratio(
+            maint[f"{prefix}_10x_s_per_trigger"], maint[f"{prefix}_1x_s_per_trigger"]
         )
-        / (
-            maint["scd2_depth_1x_store_bytes"]
-            / max(maint["scd2_depth_1x_rows_at_du"], 1)
-        ),
-        2,
-    )
 
-    # re-bucket axis (round 12): the depth flat-line must HOLD ACROSS
-    # a live bucket-geometry migration.  Same deep-history shape as
-    # the 10x depth probe: steady per-trigger walls before and after
-    # rebucket(64 -> 128), plus the migration's own one-off wall (a
-    # full read -> rewrite, amortized O(1)/byte by the geometric
-    # growth rule in streaming/snapshots.maybe_rebucket).
-    micro_rb = scd_base.where(F.col("k").isin(keys5)).persist()
-    micro_rb.count()
-    seed = scd_base.where(
-        F.pmod(F.col("k"), F.lit(400)) < 400
-    ).withColumn("ts", F.lit(1).cast("long"))
+    def pinned5(df, col):
+        keys5 = [r[0] for r in df.select(col).distinct().orderBy(col).take(5)]
+        return df.where(F.col(col).isin(keys5))
+
+    def scd2_batch(df, i):
+        attr = F.concat("attr", F.lit(str(i)))
+        return df.withColumn("ts", F.lit(100 + i).cast("long")).withColumn("attr", attr)
+
+    def scd2_steps(m, lo, hi):
+        return (partial(m.update, scd2_batch(micro, i), i) for i in range(lo, hi))
+
+    def footprint(label, m, root):
+        # after 9 commits, bytes track the STATE and version dirs stay at
+        # the retention cap; rows re-counted so bytes/row is one state
+        fb, nv = store_footprint(root)
+        maint[f"scd2_depth_{label}_store_bytes"] = fb
+        maint[f"scd2_depth_{label}_version_dirs"] = nv
+        maint[f"scd2_depth_{label}_rows_at_du"] = m.current().count()
+
+    scd2 = partial(Scd2Maintainer, spark, keys=["k"], ts_col="ts", attrs=["attr"],
+                   tiebreak=["seq"])
+    orders = load_table(spark, SF_DIR, "orders")
+    okey = F.col("o_orderkey")
+    scd = orders.select(okey.alias("k"), F.col("o_orderstatus").alias("attr"),
+                        okey.alias("seq"), F.lit("update").alias("op"))
+    # SCD2 worst case: each trigger UPDATES the same keys with a later ts
+    k400 = F.pmod(F.col("k"), F.lit(400))
+    growth("scd2", [(lbl, scd.where(k400 < n)) for lbl, n in (("1x", 10), ("4x", 40))],
+           scd2, scd2_batch)
+    micro = pinned5(scd, "k").persist()
+    maint["scd2_depth_micro_rows"] = micro.count()
+    seeds = [(lbl, scd.where(k400 < n).withColumn("ts", F.lit(1).cast("long")))
+             for lbl, n in (("1x", 40), ("10x", 400))]
+    depth("scd2_depth", "hist_rows", seeds, scd2, micro,
+          lambda m, _seed: scd2_steps(m, 1, 9), footprint)
+    # ~1.0 = disk is O(state x keep_versions), no version leak
+    per_row = [maint[f"scd2_depth_{d}_store_bytes"]
+               / max(maint[f"scd2_depth_{d}_rows_at_du"], 1) for d in ("10x", "1x")]
+    maint["scd2_depth_bytes_per_row_ratio"] = ratio(*per_row)
+    # the depth flat line must HOLD across a live rebucket(64 -> 128); the
+    # one-off migration is amortized O(1)/byte by snapshots.maybe_rebucket
     root = tempfile.mkdtemp(prefix="bench_scd2_rebucket_")
     try:
-        m = Scd2Maintainer(
-            spark, root, keys=["k"], ts_col="ts",
-            attrs=["attr"], tiebreak=["seq"],
-        )
-        m.update(seed, 0)
-
-        def rb_walls(n_triggers: int, start: int) -> list[float]:
-            walls = []
-            for i in range(start, start + n_triggers):
-                b = micro_rb.withColumn(
-                    "ts", F.lit(100 + i).cast("long")
-                ).withColumn("attr", F.concat("attr", F.lit(str(i))))
-                spark.sparkContext._jvm.System.gc()
-                t0 = time.perf_counter()
-                m.update(b, i)
-                walls.append(round(time.perf_counter() - t0, 3))
-            return walls
-
-        pre = rb_walls(6, 1)
-        maint["rebucket_store_bytes_pre"] = store_footprint(root)[0]
+        m = scd2(root)
+        m.update(seeds[1][1], 0)
+        pre = steady(trigger_walls(scd2_steps(m, 1, 7)))
+        maint["rebucket_store_bytes_pre"] = pre_bytes = store_footprint(root)[0]
         t0 = time.perf_counter()
         m.rebucket(128)
         maint["rebucket_migration_s"] = round(time.perf_counter() - t0, 3)
-        post = rb_walls(6, 7)
-        # footprint must survive the live migration flat: same state,
-        # finer geometry, retention still pruning — not a 2x residue
-        fb, nv = store_footprint(root)
+        post = steady(trigger_walls(scd2_steps(m, 7, 13)))
+        fb, maint["rebucket_version_dirs_post"] = store_footprint(root)
         maint["rebucket_store_bytes_post"] = fb
-        maint["rebucket_version_dirs_post"] = nv
-        maint["rebucket_bytes_flat_ratio"] = round(
-            fb / max(maint["rebucket_store_bytes_pre"], 1), 2
-        )
-        maint["rebucket_pre_s_per_trigger"] = steady(pre)
-        maint["rebucket_post_s_per_trigger"] = steady(post)
-        maint["rebucket_touched_buckets_post"] = len(
-            m.touched_buckets(micro_rb)
-        )
+        maint["rebucket_bytes_flat_ratio"] = ratio(fb, pre_bytes)
+        maint["rebucket_pre_s_per_trigger"] = pre
+        maint["rebucket_post_s_per_trigger"] = post
+        maint["rebucket_touched_buckets_post"] = len(m.touched_buckets(micro))
         maint["rebucket_hist_rows"] = m.current().count()
-        maint["rebucket_flat_ratio"] = round(
-            maint["rebucket_post_s_per_trigger"]
-            / max(maint["rebucket_pre_s_per_trigger"], 1e-9),
-            2,
-        )
+        maint["rebucket_flat_ratio"] = ratio(post, pre)
     finally:
         shutil.rmtree(root, ignore_errors=True)
-        micro_rb.unpersist()
+        micro.unpersist()
+    right = load_table(spark, SF_DIR, "customer").select(
+        F.col("c_custkey").alias("custkey"), "c_mktsegment").persist()
+    right.count()
+    jv_pinned = pinned5(right, "custkey")
+    signed = right.withColumn("sign", F.lit(1))
 
-    # join-view / rollup history-DEPTH axes (round-11 close-note
-    # candidate): the same bounded-IO claim as the SCD2 probe, for
-    # the other two bucketed maintainers.  Previously only isolated
-    # session probes existed (SCALE.md round-11: join view 0.87);
-    # putting them here makes the flat line a per-round artifact.
-    # Each probe seeds a 1x / 10x stored state, then times 8 triggers
-    # whose delta touches the SAME 5 literal keys — so a trigger
-    # rewrites O(5) of the 64 buckets and hard-links the rest, and
-    # s/trigger must stay flat as the stored state grows 10x.
-    from cdc_redshift_spark.streaming.joinview import JoinViewMaintainer
-    from cdc_redshift_spark.streaming.rollup import RollupMaintainer
+    def jv_steps(m, left):
+        # 5 new left rows on the pinned keys: delta = dL ⋈ R_old (dR empty)
+        for i in range(1, 9):
+            d_left = jv_pinned.select("custkey", F.lit(f"S{i}").alias("o_orderstatus"),
+                                      F.lit(1).alias("sign"))
+            yield partial(m.update, d_left, left, signed.limit(0), right, i)
 
-    customer = load_table(spark, SF_DIR, "customer")
-    jv_right = customer.select(
-        F.col("c_custkey").alias("custkey"), "c_mktsegment"
-    ).persist()
-    jv_right.count()
-    jv_cols = ["custkey", "o_orderstatus", "c_mktsegment"]
-    jv_keys5 = [
-        r[0]
-        for r in jv_right.select("custkey").orderBy("custkey").limit(5).collect()
-    ]
-    d_right_empty = jv_right.withColumn("sign", F.lit(1)).limit(0)
-    for label, mod in (("1x", 10), ("10x", 1)):
-        seed_left = orders.where(
-            F.pmod(F.col("o_orderkey"), F.lit(mod)) == 0
-        ).select(F.col("o_custkey").alias("custkey"), "o_orderstatus")
-        root = tempfile.mkdtemp(prefix="bench_jv_depth_")
-        try:
-            m = JoinViewMaintainer(spark, root, on=["custkey"], cols=jv_cols)
-            m.update(
-                seed_left.withColumn("sign", F.lit(1)),
-                seed_left,
-                jv_right.withColumn("sign", F.lit(1)),
-                jv_right.limit(0),
-                0,
-            )
-            maint[f"jv_depth_{label}_view_rows"] = m.current().count()
-            maint["jv_depth_touched_buckets"] = len(
-                m.touched_buckets(
-                    jv_right.where(F.col("custkey").isin(jv_keys5)).select(
-                        "custkey"
-                    )
-                )
-            )
-            walls = []
-            for i in range(1, 9):
-                # 5 brand-new left rows on the 5 pinned keys: the
-                # delta is dL ⋈ R_old (dR empty), 5 new view images
-                d_left = (
-                    jv_right.where(F.col("custkey").isin(jv_keys5))
-                    .select(
-                        "custkey",
-                        F.lit(f"S{i}").alias("o_orderstatus"),
-                        F.lit(1).alias("sign"),
-                    )
-                )
-                spark.sparkContext._jvm.System.gc()
-                t0 = time.perf_counter()
-                m.update(d_left, seed_left, d_right_empty, jv_right, i)
-                walls.append(round(time.perf_counter() - t0, 3))
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-        maint[f"jv_depth_{label}_s_per_trigger"] = steady(walls)
-    jv_right.unpersist()
-    maint["jv_depth_flat_ratio"] = round(
-        maint["jv_depth_10x_s_per_trigger"]
-        / max(maint["jv_depth_1x_s_per_trigger"], 1e-9),
-        2,
+    depth(
+        "jv_depth", "view_rows",
+        [(lbl, orders.where(F.pmod(okey, F.lit(n)) == 0)
+          .select(F.col("o_custkey").alias("custkey"), "o_orderstatus"))
+         for lbl, n in (("1x", 10), ("10x", 1))],
+        partial(JoinViewMaintainer, spark, on=["custkey"],
+                cols=["custkey", "o_orderstatus", "c_mktsegment"]),
+        jv_pinned.select("custkey"), jv_steps,
+        seed_store=lambda m, left: m.update(
+            left.withColumn("sign", F.lit(1)), left, signed, right.limit(0), 0),
     )
-
-    # rollup: a PER-KEY grain (dims=[k]) so the stored state grows
-    # with the seeded key space — the regime where the round-11
-    # bucketed store matters (a low-cardinality grain never did)
-    ru_base = orders.select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_totalprice").cast("decimal(18,4)").alias("total"),
-        F.lit(1).alias("sign"),
-    )
-    ru_keys5 = [
-        r[0] for r in ru_base.select("k").orderBy("k").limit(5).collect()
-    ]
-    ru_micro = ru_base.where(F.col("k").isin(ru_keys5)).persist()
+    right.unpersist()
+    # a PER-KEY rollup grain, so the stored state grows with the keys
+    total = F.col("o_totalprice").cast("decimal(18,4)")
+    ru = orders.select(okey.alias("k"), total.alias("total"), F.lit(1).alias("sign"))
+    ru_micro = pinned5(ru, "k").persist()
     ru_micro.count()
-    for label, mod in (("1x", 10), ("10x", 1)):
-        seed = ru_base.where(F.pmod(F.col("k"), F.lit(mod)) == 0)
-        root = tempfile.mkdtemp(prefix="bench_ru_depth_")
-        try:
-            m = RollupMaintainer(
-                spark, root, lambda r: r, time_col=None, bucket=None,
-                dims=["k"], measures={"sum_total": "total"},
-            )
-            m.update(seed, 0)
-            maint[f"rollup_depth_{label}_group_rows"] = m.current().count()
-            maint["rollup_depth_touched_buckets"] = len(
-                m.touched_buckets(ru_micro.select("k"))
-            )
-            walls = []
-            for i in range(1, 9):
-                spark.sparkContext._jvm.System.gc()
-                t0 = time.perf_counter()
-                m.update(ru_micro, i)
-                walls.append(round(time.perf_counter() - t0, 3))
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-        maint[f"rollup_depth_{label}_s_per_trigger"] = steady(walls)
-    ru_micro.unpersist()
-    maint["rollup_depth_flat_ratio"] = round(
-        maint["rollup_depth_10x_s_per_trigger"]
-        / max(maint["rollup_depth_1x_s_per_trigger"], 1e-9),
-        2,
+    depth(
+        "rollup_depth", "group_rows",
+        [(lbl, ru.where(F.pmod(F.col("k"), F.lit(n)) == 0))
+         for lbl, n in (("1x", 10), ("10x", 1))],
+        partial(RollupMaintainer, spark, prepare=lambda r: r, time_col=None,
+                bucket=None, dims=["k"], measures={"sum_total": "total"}),
+        ru_micro.select("k"),
+        lambda m, _seed: (partial(m.update, ru_micro, i) for i in range(1, 9)),
     )
-
+    ru_micro.unpersist()
+    # 1x = a quarter of the small embeddings table per IVF trigger, 4x =
+    # all of it: a thinner slice would measure only the fixed floor
     emb = load_table(spark, SF_DIR, "embeddings")
     cents = _centroids(emb, 16, "vec_id", "embedding")
-    # 1x trigger = a quarter of the embeddings table, 4x = the whole
-    # table per trigger (the embeddings fixture is small, so a thinner
-    # slice would measure only the fixed per-trigger floor)
-    for label, nmod in (("1x", 1), ("4x", 4)):
-        sl = emb.where(F.pmod(F.col("vec_id"), F.lit(4)) < nmod).persist()
-        n_rows = sl.count()
-        # distinct id spaces per trigger (streaming appends)
-        batches = [
-            sl.select(
-                (F.col("vec_id") + i * 10_000_000).alias("vec_id"),
-                "embedding",
-            )
-            for i in range(10)
-        ]
-        root = tempfile.mkdtemp(prefix="bench_ivf_")
-        try:
-            walls = trigger_walls(
-                lambda: IvfIndexMaintainer(spark, root, cents), batches
-            )
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-            sl.unpersist()
-        maint[f"ivf_batch_rows_{label}"] = n_rows
-        maint[f"ivf_sec_per_trigger_{label}"] = steady(walls)
-        maint[f"ivf_last_trigger_s_{label}"] = walls[-1]
-
-    # string-vs-variant payload on the FULL DMS replay (VERDICT r10
-    # #7): the same envelope → ChangeSet → LWW → explode → merge
-    # chain, explosion via from_json on the string payload vs typed
-    # variant_get on the once-parsed variant.  min-of-2 each.
-    # Expected reading: ~par (measured 0.97x at sf0.1) — the string
-    # explosion is ONE from_json into a struct, so a single-
-    # extraction replay has no redundant parsing to delete; the 2.6x
-    # isolated win (SCALE.md r10) is vs per-path get_json_object /
-    # repeated typed access.  The entry pins that the variant path
-    # costs nothing on the plain replay while enabling those reads.
-    variant_x = {}
-    for key, qname in (
-        ("replay_string_s", "cdc_dms_relational"),
-        ("replay_variant_s", "cdc_dms_variant_replay"),
-    ):
-        best = float("inf")
-        for _ in range(2):
-            settle()
-            t0 = time.perf_counter()
-            force(qs[qname](spark, SF_DIR))
-            best = min(best, time.perf_counter() - t0)
-        variant_x[key] = round(best, 3)
-    variant_x["variant_speedup_x"] = round(
-        variant_x["replay_string_s"]
-        / max(variant_x["replay_variant_s"], 1e-9),
-        2,
+    growth(
+        "ivf",
+        [(lbl, emb.where(F.pmod(F.col("vec_id"), F.lit(4)) < n))
+         for lbl, n in (("1x", 1), ("4x", 4))],
+        partial(IvfIndexMaintainer, spark, cents=cents),
+        lambda sl, i: sl.select((F.col("vec_id") + i * 10_000_000).alias("vec_id"),
+                                "embedding"),
     )
+    return maint
 
-    # streaming entries: min-of-2 — the FIRST run pays a ~2x cold
-    # start (state-store init + streaming-harness JIT: isolated probe
-    # measured 16.2 s cold vs 8.4 s warm for events_stream_join), so a
-    # single run reports startup, not the operator
-    for name in tail_headline:
-        best = float("inf")
-        for _ in range(2):
-            settle()
-            t0 = time.perf_counter()
-            force(qs[name](spark, SF_DIR))
-            best = min(best, time.perf_counter() - t0)
-        times[name] = round(best, 3)
 
-    total = round(sum(times.values()) + cdc_secs, 3)
-    sf = SF_DIR.rstrip("/").split("sf")[-1]
-    result = (
-            {
-                "metric": "suite_wall_seconds",
-                "value": total,
-                "unit": "sec",
-                "queries": {**times, "cdc_apply_batch": round(cdc_secs, 3)},
-                "sf": float(sf),
-                "extra": {
-                    "cdc_events": n_events,
-                    "cdc_rec_per_s": round(rec_per_s, 1),
-                    "baseline_rec_per_s": 6667,
-                    "cdc_vs_baseline_x": round(rec_per_s / 6667, 2),
-                    "cdc_events_4x": n_events_4x,
-                    "cdc_rec_per_s_4x": round(rec_per_s_4x, 1),
-                    "cdc_scaleup_x": round(rec_per_s_4x / rec_per_s, 2)
-                    if rec_per_s
-                    else 0.0,
-                    "merge_crossover": merge_x,
-                    "maintainers": maint,
-                    "dms_payload_variant": variant_x,
-                },
-            }
-    )
-    # The driver records only the LAST 2000 chars of stdout, which
-    # truncates the per-query dict (VERDICT r11 "What's missing" #2:
-    # r10<->r11 per-query regression diffing degraded into prose
-    # archaeology).  ALSO persist the complete result as a committed
-    # repo artifact, round-stamped so each round's file survives:
-    # BENCH_FULL_r{N}.json, N = this round = 1 + the newest round
-    # artifact the driver has written (env SPARK_GRAFT_ROUND wins).
+def main() -> None:
+    from cdc_redshift_spark.session import get_spark
+    spark = get_spark("bench")
+    # warmup, off the clock: touch the tables, JIT common paths and start
+    # the Python worker pool (~10 s one-time) before any pandas-UDF query
+    _queries()["q1_pricing_summary"](spark, SF_DIR).count()
+    warm_sf = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.001")
+    if os.path.isdir(warm_sf):
+        for name in WARMUP:
+            force(_queries()[name](spark, warm_sf))
+    times = {e.name: run(spark, e) for e in ENTRIES[:-N_TAIL]}
+    cdc_secs, extra = cdc_apply(spark)
+    extra["merge_crossover"] = merge_crossover(spark)
+    extra["maintainers"] = maintainers(spark)
+    v = extra["dms_payload_variant"] = {k: run(spark, registry(q)) for k, q in VARIANT}
+    v["variant_speedup_x"] = ratio(v["replay_string_s"], v["replay_variant_s"])
+    times.update((e.name, run(spark, e)) for e in ENTRIES[-N_TAIL:])
+    result = {
+        "metric": "suite_wall_seconds",
+        "value": round(sum(times.values()) + cdc_secs, 3),
+        "unit": "sec",
+        "queries": {**times, "cdc_apply_batch": cdc_secs},
+        "sf": float(SF_DIR.rstrip("/").split("sf")[-1]),
+        "extra": extra,
+    }
+    # the full result goes to BENCH_FULL_rNN.json (N = 1 + the newest round
+    # artifact, or SPARK_GRAFT_ROUND); the printed line is slim, because
+    # its consumer records only the last 2000 chars of stdout
+    here = os.path.dirname(__file__)
     full = None
     try:
         rnd = os.environ.get("SPARK_GRAFT_ROUND")
         if rnd is None:
-            import glob as _glob
-
-            seen = [
-                artifact_round(p)
-                for pat in ("CORRECTNESS_r*.json", "BENCH_r*.json")
-                for p in _glob.glob(
-                    os.path.join(os.path.dirname(__file__), pat)
-                )
-            ]
+            pats = ("CORRECTNESS_r*.json", "BENCH_r*.json")
+            seen = [artifact_round(p) for pat in pats
+                    for p in glob.glob(os.path.join(here, pat))]
             rnd = str(max(seen) + 1 if seen else 0)
         full = f"BENCH_FULL_r{int(rnd):02d}.json"
-        with open(os.path.join(os.path.dirname(__file__), full), "w") as f:
+        with open(os.path.join(here, full), "w") as f:
             json.dump(result, f, indent=1, sort_keys=True)
             f.write("\n")
     except Exception as exc:  # artifact write must never fail the bench
         print(f"BENCH_FULL write skipped: {exc}", file=sys.stderr)
-    # The PRINTED line is what the driver parses, and its capture is
-    # tail-truncated — round 14's line scrolled out behind the full
-    # `extra` blob and cost that round its round-over-round comparison
-    # (VERDICT r15 "Next round" #2).  Print a SLIM line: the complete
-    # contract fields (metric/value/unit/queries/sf) plus only the
-    # headline CDC-rate extras; the merge-crossover / maintainer /
-    # variant axes live in the BENCH_FULL artifact referenced by name.
-    slim_extra = {
-        k: result["extra"][k]
-        for k in (
-            "cdc_events",
-            "cdc_rec_per_s",
-            "baseline_rec_per_s",
-            "cdc_vs_baseline_x",
-            "cdc_rec_per_s_4x",
-            "cdc_scaleup_x",
-        )
-    }
+    slim = ("cdc_events", "cdc_rec_per_s", "baseline_rec_per_s", "cdc_vs_baseline_x",
+            "cdc_rec_per_s_4x", "cdc_scaleup_x")
+    slim_extra = {k: extra[k] for k in slim}
     if full is not None:
         slim_extra["full_extra_in"] = full
-    slim = dict(result)
-    slim["extra"] = slim_extra
-    print(json.dumps(slim))
+    print(json.dumps({**result, "extra": slim_extra}))
 
 
 if __name__ == "__main__":

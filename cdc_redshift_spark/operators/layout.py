@@ -11,9 +11,8 @@ row-group filtering, DuckDB zone maps, Redshift Spectrum, Trino) skips
 every file whose [min, max] misses the predicate — the poor man's
 sort/cluster key, no table format required.
 
-At 100 TB this is the difference between a key-range merge probe
-reading the whole table and reading one file: ``ParquetSink``'s
-``cluster_keys`` applies it to every snapshot it commits.
+At 100 TB this is the difference between a key-range probe reading
+the whole table and reading one file.
 
 For multi-column locality beyond lexicographic (true Z-ordering),
 cluster on an interleaved bit key computed from the columns; the

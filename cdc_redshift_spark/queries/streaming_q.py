@@ -2039,13 +2039,6 @@ def q_cdc_dead_letter_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = _os.path.join(root, "ckpt")
     dlq = _os.path.join(root, "dlq")
     _os.makedirs(indir, exist_ok=True)
-    # kept for sessions not built by get_spark: without its cached-plan
-    # conf, the pipeline's persisted LWW batch keeps all
-    # shuffle.partitions (default 200) partitions.  Pinned to 16 this
-    # entry ran 3.06 s instead of 11.8 s (median of 4, sf0.01, plain
-    # local[8] session on 4 cores).
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
     try:
         _write_phase(_raw_shape(raw), 8, indir)
         sink = ParquetSink(
@@ -2102,7 +2095,6 @@ def q_cdc_dead_letter_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return out
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         _shutil.rmtree(root, ignore_errors=True)
 
 

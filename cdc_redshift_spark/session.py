@@ -11,10 +11,14 @@ and leave shuffle.partitions at a per-deployment value.
 Cached plans follow the same rule: AQE may coalesce a ``persist()``ed
 plan's output partitions too, so a job over a cached micro-batch (the
 pipeline's LWW result, a sink slice) runs as many tasks as its data
-needs instead of ``initialPartitionNum``.  One builder default, no
-runtime toggle; only the state store of a stateful stream keeps the
-partition count it was first checkpointed with, because no AQE conf
-resizes it.
+needs instead of ``initialPartitionNum``.  The policy is one conf,
+:data:`CACHED_PLAN_COALESCE`, with no runtime toggle: ``get_spark``
+sets it on every session it makes, and ``CdcPipeline.start`` sets it on the
+stream's own session clone inside ``foreachBatch``, so a pipeline
+started from any session sizes its cached batch the same way without
+touching the caller's session.  Only the state store of a stateful
+stream keeps the partition count it was first checkpointed with,
+because no AQE conf resizes it.
 """
 
 from __future__ import annotations
@@ -22,6 +26,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: lets AQE coalesce a persisted plan's output partitions; without it
+#: every job over a cache runs the plan's initial shuffle width
+CACHED_PLAN_COALESCE = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
 
 def get_spark(
@@ -59,9 +67,7 @@ def get_spark(
         )
         # without this AQE leaves a persisted plan at the wide initial
         # width, and every job over the cache runs ~256 tasks
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-        )
+        .config(CACHED_PLAN_COALESCE, "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

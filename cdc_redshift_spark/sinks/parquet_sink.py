@@ -89,20 +89,13 @@ class ParquetSink(Sink):
         ts_col: str = "ts_ms",
         tiebreak_col: str = "offset",
         partition_cols: Sequence[str] = (),
-        cluster_keys: Sequence[str] = (),
         bloom_index_cols: Sequence[str] = (),
         merge_mode: str = "rewrite",
         constraints: dict[str, str] | None = None,
         generated_cols: dict[str, str] | None = None,
         occ: bool = False,
     ):
-        """``cluster_keys`` range-clusters every committed snapshot
-        (operators/layout.py): each written file covers a disjoint
-        slice of the key space, so the merge's key-probe scan and any
-        stats-aware reader skip files by min/max instead of reading
-        the table.  Natural choice: the merge ``keys``.
-
-        ``bloom_index_cols`` additionally builds a per-file Bloom
+        """``bloom_index_cols`` builds a per-file Bloom
         index (operators/layout.bloom_file_index) for each named
         column at every commit, stored as ``_BLOOM_<col>`` parquet
         next to the snapshot — point lookups on SECONDARY
@@ -139,7 +132,6 @@ class ParquetSink(Sink):
         self.ts_col = ts_col
         self.tiebreak_col = tiebreak_col
         self.partition_cols = list(partition_cols)
-        self.cluster_keys = list(cluster_keys)
         self.bloom_index_cols = list(bloom_index_cols)
         if merge_mode not in ("rewrite", "dv"):
             raise ValueError(
@@ -240,13 +232,6 @@ class ParquetSink(Sink):
                     f"batch rejected for {what}: " + "; ".join(bad)
                 )
         return df
-
-    def _layout(self, state: DataFrame) -> DataFrame:
-        if not self.cluster_keys:
-            return state
-        from cdc_redshift_spark.operators.layout import cluster
-
-        return cluster(state, self.cluster_keys)
 
     # -- catalog -----------------------------------------------------------
     def _dir(self, db: str, table: str) -> str:
@@ -743,11 +728,9 @@ class ParquetSink(Sink):
         src = os.path.join(self._dir(db, table), f"v{v}")
         dst = os.path.join(self._dir(db, table), f"v{v + 1}")
         self._occ_guard(db, table, v + 1)
-        self._to_physical(
-            db, table, self._layout(rewritten)
-        ).write.mode("overwrite").partitionBy(
-            *self.partition_cols
-        ).parquet(dst)
+        self._to_physical(db, table, rewritten).write.mode(
+            "overwrite"
+        ).partitionBy(*self.partition_cols).parquet(dst)
         self._write_schema(db, table, rewritten, v + 1)
         linked: list[str] = []
         for name, val_str in existing.items():
@@ -1323,34 +1306,29 @@ class ParquetSink(Sink):
             )
             if null_touched:
                 cond = cond | F.col(pcol).isNull()
-            rewritten = cur.where(cond)
-            if not self.cluster_keys:
-                # spread each partition over exactly its k target
-                # files; the range-clustered layout (if configured)
-                # governs file organization instead
-                ks = self.spark.createDataFrame(
-                    [(s, k) for s, k in plan.items()],
-                    "__pv string, __k int",
+            # spread each partition over exactly its k target files
+            ks = self.spark.createDataFrame(
+                [(s, k) for s, k in plan.items()],
+                "__pv string, __k int",
+            )
+            total = sum(plan.values())
+            rewritten = (
+                cur.where(cond)
+                .join(
+                    F.broadcast(ks),
+                    F.coalesce(F.col(pcol).cast("string"), F.lit(HIVE_NULL))
+                    == F.col("__pv"),
                 )
-                total = sum(plan.values())
-                rewritten = (
-                    rewritten.join(
-                        F.broadcast(ks),
-                        F.coalesce(
-                            F.col(pcol).cast("string"), F.lit(HIVE_NULL)
-                        )
-                        == F.col("__pv"),
-                    )
-                    .withColumn(
-                        "__salt",
-                        F.pmod(
-                            F.xxhash64(*[F.col(k) for k in self.keys]),
-                            F.col("__k").cast("long"),
-                        ),
-                    )
-                    .repartition(max(total, 1), F.col(pcol), F.col("__salt"))
-                    .drop("__pv", "__k", "__salt")
+                .withColumn(
+                    "__salt",
+                    F.pmod(
+                        F.xxhash64(*[F.col(k) for k in self.keys]),
+                        F.col("__k").cast("long"),
+                    ),
                 )
+                .repartition(max(total, 1), F.col(pcol), F.col("__salt"))
+                .drop("__pv", "__k", "__salt")
+            )
             self._commit_pruned(
                 db,
                 table,
@@ -1391,13 +1369,8 @@ class ParquetSink(Sink):
             plan = {os.path.relpath(d, src): 1 for d in frag}
             # one task per partition tuple -> one file per leaf dir
             # (task collisions only merge partitions, never split them)
-            state = (
-                cur
-                if self.cluster_keys
-                else cur.repartition(
-                    max(len(by_dir), 1),
-                    *[F.col(c) for c in self.partition_cols],
-                )
+            state = cur.repartition(
+                max(len(by_dir), 1), *[F.col(c) for c in self.partition_cols]
             )
             self._commit(db, table, state)
         else:
@@ -1412,8 +1385,7 @@ class ParquetSink(Sink):
                 }
             plan = {"": k}
             # reading v while writing v+1: distinct dirs, lazy is safe
-            state = cur if self.cluster_keys else cur.repartition(k)
-            self._commit(db, table, state)
+            self._commit(db, table, cur.repartition(k))
         new_v = self._latest_version(db, table)
         files_after = len(
             self._data_files(os.path.join(self._dir(db, table), f"v{new_v}"))
@@ -1615,7 +1587,6 @@ class ParquetSink(Sink):
             set(self.keys)
             | {self.ts_col, self.tiebreak_col, "op"}
             | set(self.partition_cols)
-            | set(self.cluster_keys)
             | set(self.bloom_index_cols)
         )
 
@@ -1831,7 +1802,7 @@ class ParquetSink(Sink):
         self._occ_guard(db, table, v)
         path = os.path.join(d, f"v{v}")
         writer = (
-            self._to_physical(db, table, self._layout(state))
+            self._to_physical(db, table, state)
             .write.mode("overwrite")
         )
         if self.partition_cols:

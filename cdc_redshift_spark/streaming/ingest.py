@@ -31,9 +31,9 @@ contract a Delta/Iceberg sink would give via its transaction log.
 
 At scale, additionally bucket both parquet tables by ``fp`` so the
 per-batch probe join is co-located (bucketBy + saveAsTable — the
-zero-Exchange contract is pinned in tests/test_bucketing.py; the
-sink's ``cluster_keys`` range clustering is the complementary
-file-skipping axis); the ``batch`` partition column keeps per-batch
+zero-Exchange contract is pinned in tests/test_bucketing.py; range
+clustering, operators/layout.py, is the complementary file-skipping
+axis); the ``batch`` partition column keeps per-batch
 overwrite idempotence and lets compaction fold old batches without
 touching live ones.
 """

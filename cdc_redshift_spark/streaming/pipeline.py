@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from cdc_redshift_spark.dedup import latest_per_key
+from cdc_redshift_spark.session import CACHED_PLAN_COALESCE
 from cdc_redshift_spark.sinks.base import Sink
 
 log = logging.getLogger(__name__)
@@ -133,6 +134,10 @@ class CdcPipeline:
 
     # -- per-batch body (the foreachBatch target) ---------------------------
     def process_batch(self, raw: DataFrame, batch_id: int) -> None:
+        """Apply one micro-batch.  The persisted LWW batch takes its
+        partition count from ``raw``'s session: a direct call keeps
+        the caller's width, while :meth:`start` lets AQE coalesce it
+        (session.CACHED_PLAN_COALESCE)."""
         self.stats.batches += 1
         if raw.isEmpty():  # F7, without the rdd.count() job
             self.stats.empty_batches += 1
@@ -305,9 +310,19 @@ class CdcPipeline:
         Defaults mirror the reference (windowSize='30 seconds',
         checkpointLocation — readme.md:32-35).  ``available_now=True``
         drains all pending input then stops (test/backfill mode).
+
+        Each batch runs on the stream's own session clone with
+        session.CACHED_PLAN_COALESCE set, so the cached batch is sized
+        by its data whatever session started the stream; the caller's
+        session conf is left as it was.
         """
+
+        def run_batch(raw: DataFrame, batch_id: int) -> None:
+            raw.sparkSession.conf.set(CACHED_PLAN_COALESCE, "true")
+            self.process_batch(raw, batch_id)
+
         writer = (
-            raw_stream.writeStream.foreachBatch(self.process_batch)
+            raw_stream.writeStream.foreachBatch(run_batch)
             .queryName(query_name)
             .option("checkpointLocation", checkpoint)
         )

@@ -1,7 +1,6 @@
-"""Tests for operators/layout.py and ParquetSink.cluster_keys: the
-range-clustered write must produce files with disjoint key ranges (so
-min/max stats actually prune), and the sink's merge semantics must be
-unchanged by the layout."""
+"""Tests for operators/layout.py: the range-clustered write must
+produce files with disjoint key ranges (so min/max stats actually
+prune)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -49,40 +48,6 @@ def test_clustered_files_have_disjoint_ranges(spark, rows, tmp_path):
     # a narrow range predicate skips almost every clustered file
     assert pruned_fraction(cr, 100, 120) >= 0.75
     assert pruned_fraction(pr, 100, 120) == 0.0
-
-
-def test_sink_cluster_keys_layout_and_semantics(spark, tmp_path):
-    """Clustered sink == plain sink state-wise; its files carry
-    disjoint key ranges."""
-    import os
-
-    from cdc_redshift_spark.sinks.parquet_sink import ParquetSink
-
-    changes = spark.range(0, 2000).select(
-        F.col("id").cast("string").alias("key"),
-        (F.col("id") % 7).alias("ts_ms"),
-        F.col("id").alias("offset"),
-        F.lit("insert").alias("op"),
-        F.concat(F.lit("p"), F.col("id")).alias("payload"),
-        (F.hash("id") % 100).alias("noise"),
-    ).orderBy("noise").drop("noise")
-
-    plain = ParquetSink(spark, str(tmp_path / "p"), keys=("key",))
-    clus = ParquetSink(
-        spark, str(tmp_path / "c"), keys=("key",), cluster_keys=("offset",)
-    )
-    for s in (plain, clus):
-        s.apply_changeset("d", "t", changes)
-
-    a = {r["key"]: r["payload"] for r in plain.read_table(spark, "d", "t").collect()}
-    b = {r["key"]: r["payload"] for r in clus.read_table(spark, "d", "t").collect()}
-    assert a == b
-
-    vdir = os.path.join(str(tmp_path / "c"), "d", "t", "v1")
-    cr = sorted(file_ranges(vdir, "offset"))
-    if len(cr) > 1:
-        for (a1, b1), (a2, b2) in zip(cr, cr[1:]):
-            assert b1 < a2  # strictly disjoint, ascending
 
 
 def test_zorder_prunes_on_every_dimension(spark, tmp_path):

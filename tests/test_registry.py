@@ -124,3 +124,26 @@ def test_artifact_round_reads_leading_digits(monkeypatch):
     assert artifact_round("CORRECTNESS_r16.json") == 16
     with pytest.raises(ValueError):
         artifact_round("BENCH_rx.json")
+
+
+def test_bench_table_keeps_the_published_keys(monkeypatch):
+    """bench.py's table is the published `queries` contract: its entry
+    names plus cdc_apply_batch are exactly the keys of the committed
+    BENCH_FULL_r17.json, so an entry cannot be renamed or dropped
+    without this test changing.  Importing bench loads no pyspark."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    monkeypatch.syspath_prepend(repo)
+    import bench
+
+    names = [e.name for e in bench.ENTRIES]
+    assert len(names) == len(set(names))
+    with open(os.path.join(repo, "BENCH_FULL_r17.json")) as f:
+        published = set(json.load(f)["queries"])
+    assert set(names) | {"cdc_apply_batch"} == published
+    probe = "import sys, bench; sys.exit('pyspark' in sys.modules)"
+    assert subprocess.run([sys.executable, "-c", probe], cwd=repo).returncode == 0

@@ -95,6 +95,41 @@ def test_two_microbatches_upsert_delete(spark, tmp_path):
     assert pipe.stats.batches >= 2  # maxFilesPerTrigger=1 → one file per batch
 
 
+def test_started_pipeline_coalesces_its_cached_batch(spark, tmp_path):
+    """A plain session without the cached-plan conf: the started
+    stream still lets AQE coalesce the persisted LWW batch, on the
+    stream's own session clone, and leaves the caller's conf alone."""
+    from cdc_redshift_spark.session import CACHED_PLAN_COALESCE
+
+    confs = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.shuffle.partitions": "200",
+        CACHED_PLAN_COALESCE: "false",
+    }
+    old = {k: spark.conf.get(k, None) for k in confs}
+    widths = []
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        pipe, sink, indir, ckpt = mk_pipeline(
+            spark,
+            tmp_path,
+            on_batch=lambda _bid, df: widths.append(df.rdd.getNumPartitions()),
+        )
+        write_batch_file(indir, "b0.json", [pg_line("c", 1, 100, {"v": "a"}, 0)])
+        write_batch_file(indir, "b1.json", [pg_line("u", 1, 200, {"v": "b"}, 1)])
+        drain(pipe, spark, indir, ckpt)
+        assert state(sink, spark) == {"1": {"id": 1, "v": "b"}}
+        assert len(widths) == 2 and max(widths) <= 16, widths
+        assert spark.conf.get(CACHED_PLAN_COALESCE) == "false"
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_checkpoint_restart_no_reprocess_and_continues(spark, tmp_path):
     pipe, sink, indir, ckpt = mk_pipeline(spark, tmp_path)
     write_batch_file(indir, "b0.json", [pg_line("c", 1, 100, {"v": "a"}, 0)])

@@ -1,9 +1,11 @@
 """Per-stage empirical profile of one bench query (guide §1.1/§7.1).
 
-Runs a named ``queries()`` entry (or a bench sub-entry) in its own
-SparkSession with the UI enabled, forces it through the noop sink,
-then pulls the REST API for per-stage wall/shuffle/spill metrics and
-prints the stages sorted by executor-run time.  This is the "open the
+Runs a named ``queries()`` entry in its own SparkSession with the UI
+enabled, forces it through the noop sink, then pulls the REST API for
+per-stage wall/shuffle/spill metrics and prints the stages sorted by
+executor-run time.  Only registry names resolve: bench rows that are not
+registry queries (``dedup_minhash_lsh.char``, ``sink_dv_merge_commit``,
+...) cannot be profiled with it.  This is the "open the
 Stages tab" loop from the optimization guide, scriptable.
 
 Usage:

@@ -13,6 +13,9 @@ guard makes that class of failure impossible to commit unnoticed:
   6. every oracle binds on DuckDB with driver-safe output dtypes
      (tools/check_dtypes.py — the round-9 red-row class: an uncast
      DECIMAL output hash-mismatches the Spark BIGINT at the driver).
+  7. every registry query ``bench.py`` names (its registry-backed
+     entries, warmup and variant pair) exists, so a renamed query fails
+     here instead of minutes into a bench run.
 
 Run it before EVERY commit (documented in SURVEY.md §8):
 
@@ -57,6 +60,14 @@ def main() -> int:
     bad_oracle_keys = set(eo) - set(eq)
     if bad_oracle_keys:
         problems.append(f"oracle_sql keys not in queries(): {sorted(bad_oracle_keys)}")
+
+    import bench
+
+    benched = {e.query for e in bench.ENTRIES if e.query}
+    benched |= {q for _, q in bench.VARIANT} | set(bench.WARMUP)
+    missing = sorted(benched - set(eq))
+    if missing:
+        problems.append(f"bench.py names queries not in queries(): {missing}")
 
     # cwd + PYTHONPATH pinned to the repo: `python -m pytest` only puts
     # the CWD on sys.path, so collection from any other directory would

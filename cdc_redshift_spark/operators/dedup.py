@@ -37,8 +37,9 @@ from pyspark.sql import functions as F
 
 from cdc_redshift_spark.functions.text import normalize_text
 from cdc_redshift_spark.operators.simjoin import (
-    _capture_plan,
-    stable_verify_codegen,
+    _finish,
+    _pair_partitions,
+    _verify,
 )
 
 # Mersenne prime modulus and fixed LCG-generated coefficients for the
@@ -470,7 +471,6 @@ def minhash_lsh_pairs(
     n: int = 3,
     jaccard_threshold: float = 0.5,
     bitmap_dict_max: int = 4096,
-    num_partitions: int | None = None,
     eager: bool = True,
     unit: str = "char",
     max_bucket_size: int | None = None,
@@ -498,8 +498,8 @@ def minhash_lsh_pairs(
        O(Σ bucket²) candidate stream.  The exact rounded-Jaccard
        filter runs JVM-side (F.round, HALF_UP) for oracle parity.
     4. **array fallback** (unbounded vocabularies, e.g. word n-grams):
-       band-key self-join on the slice-value struct, then
-       ``array_intersect`` verify; join strategy left to AQE.
+       band-key self-join on the slice-value struct, then the shared
+       ``array_intersect`` verify (``simjoin._verify``).
 
     ``max_bucket_size`` (optional) bounds per-bucket verify work on
     template-heavy corpora: a pair survives iff the bucket of its
@@ -520,8 +520,7 @@ def minhash_lsh_pairs(
     """
     spark = df.sparkSession
     rows_per_band = k // bands
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 2
+    num_partitions = _pair_partitions(spark)
     idt = df.schema[id_col].dataType.simpleString()
 
     shd = minhash_frames(
@@ -547,9 +546,8 @@ def minhash_lsh_pairs(
         .collect()
     )
     bitmap = len(dict_rows) <= bitmap_dict_max
-    #: scored candidate cache of the array-fallback verify (released
-    #: after the eager checkpoint); the bitmap path never sets it
-    scored = None
+    #: the array-fallback verify's caches; the bitmap path makes none
+    caches: list[DataFrame] = []
 
     if bitmap:
         dict_vals = sorted(r.h for r in dict_rows)
@@ -585,10 +583,11 @@ def minhash_lsh_pairs(
     else:
         # Unbounded vocabulary: self-join on the band's slice-value
         # struct (still collision-free), dedup candidates BEFORE the
-        # expensive array verify, and repartition explicitly — AQE
-        # would coalesce the byte-small pair stream to a few partitions
-        # and serialize a verify that is CPU-bound per row.  No
-        # broadcast hint: that would ship the whole corpus' sets.
+        # expensive array verify, and repartition explicitly (see
+        # simjoin._pair_partitions).  No broadcast: that would ship the
+        # whole corpus' shingle arrays to every executor, and the verify's
+        # 300k-row cap was measured on the prefix joins' token arrays,
+        # never on these.
         band_structs = F.array(
             *[
                 F.struct(
@@ -631,28 +630,9 @@ def minhash_lsh_pairs(
                 .dropDuplicates(["id_a", "id_b"])
                 .repartition(num_partitions, "id_a", "id_b")
             )
-        sh_a = shd.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-        sh_b = shd.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-        # single-eval intersection + cache barrier before the
-        # threshold (the simjoin verify discipline, round-15-opt):
-        # the rounded-jaccard filter would otherwise re-evaluate
-        # array_intersect per reference inside the verify join
-        scored = (
-            cands.join(sh_a, "id_a")
-            .join(sh_b, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                F.size("sh_a").alias("__za"),
-                F.size("sh_b").alias("__zb"),
-                F.size(F.array_intersect("sh_a", "sh_b")).alias("__i"),
-            )
+        scored, caches = _verify(
+            cands, shd.select("id", "sh"), eager, broadcast=False
         )
-        if eager:
-            # guard: persist() plans the array-verify here (simjoin
-            # discipline; the bitmap path is Arrow-side and untouched)
-            with stable_verify_codegen(scored.sparkSession):
-                scored = scored.persist()
         union = F.col("__za") + F.col("__zb") - F.col("__i")
         out = (
             scored.select(
@@ -665,15 +645,7 @@ def minhash_lsh_pairs(
             .where(F.col("jaccard") >= jaccard_threshold)
         )
 
-    if eager:
-        # unguarded on purpose: the array verify is already inside the
-        # guarded `scored` cache (or Arrow-side on the bitmap path), so
-        # this plan compiles only a threshold over its output
-        ck = out.localCheckpoint(eager=True)
-        _capture_plan(f"minhash_lsh_pairs.{unit}", out)
-        out = ck
-        if scored is not None:
-            scored.unpersist()
+    out = _finish(out, eager, f"minhash_lsh_pairs.{unit}", caches)
     shd.unpersist()
     return out
 
@@ -982,8 +954,6 @@ def incremental_minhash_pairs(
     bands: int = 8,
     jaccard_threshold: float = 0.5,
     eager: bool = True,
-    broadcast_batch_max_rows: int = 200_000,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs of a NEW batch against an already-signed corpus.
 
@@ -1010,19 +980,9 @@ def incremental_minhash_pairs(
     # ``eager`` materializes the result and releases the caches before
     # returning (the simjoin discipline); eager=False keeps everything
     # lazy/recomputable.
-    if num_partitions is None:
-        # same tuning knob + default as the simjoin family / LSH
-        num_partitions = (
-            existing_frames.sparkSession.sparkContext.defaultParallelism * 2
-        )
     if eager:
-        # persist() plans the cached subtree EAGERLY — every eager-path
-        # persist sits under the stable_verify_codegen guard (see
-        # simjoin.py: wrapping only the actions left the verify
-        # compiled as one huge whole-stage method)
-        with stable_verify_codegen(existing_frames.sparkSession):
-            existing_frames = existing_frames.persist()
-            batch_frames = batch_frames.persist()
+        existing_frames = existing_frames.persist()
+        batch_frames = batch_frames.persist()
     a = _band_key_rows(batch_frames, k, bands, "batch").withColumnRenamed(
         "id", "batch_id"
     )
@@ -1048,104 +1008,53 @@ def incremental_minhash_pairs(
             )
         )
         .select("batch_id", "match_id", "match_side")
-        # explicit candidate shuffle before the dedup (the simjoin /
-        # LSH-fallback discipline): the band join inherits its stored-
-        # side partitioning, which can satisfy the distinct's
-        # clustering and fuse band join + dedup + verify into one
-        # oversized WholeStageCodegen region (JIT-compile lottery,
-        # measured on the Jaccard form) with index-side parallelism;
-        # the shuffle keys the verify on the candidate volume instead.
-        # Explicit count: AQE coalesces the byte-small pair stream to
-        # a few partitions and would serialize the CPU-bound shingle
-        # verify (measured 15 coalesced tasks crawling at 257 s wall
-        # on a quiet host before the count was pinned)
+        # explicit candidate shuffle before the dedup (the simjoin
+        # discipline): the band join inherits its stored-side
+        # partitioning, which can satisfy the distinct's clustering and
+        # fuse band join + dedup + verify into one stage with
+        # index-side parallelism; the shuffle keys the verify on the
+        # candidate volume instead
         .repartition(
-            num_partitions, F.col("batch_id"), F.col("match_id")
+            _pair_partitions(batch_frames.sparkSession),
+            "batch_id",
+            "match_id",
         )
         .distinct()
     )
-    if eager:
-        # candidate-id cache barrier between dedup and verify — the
-        # simjoin codegen-region split (round-15-opt)
-        with stable_verify_codegen(cand.sparkSession):
-            cand = cand.persist()
-    sha = batch_frames.select(
-        F.col("id").alias("batch_id"), F.col("sh").alias("sha")
-    )
-    # the batch side is small by contract (a micro-batch probing a big
-    # index): broadcasting its shingle arrays means the candidate
-    # stream never re-shuffles carrying an array between the two
-    # verify joins (the simjoin 8x-knee lesson).  Counting is cheap
-    # only when the frames are persisted (eager), so the fallback
-    # shuffle path stays for lazy callers and giant batches.
-    if eager:
-        with stable_verify_codegen(batch_frames.sparkSession):
-            n_batch = batch_frames.count()
-        if n_batch <= broadcast_batch_max_rows:
-            sha = F.broadcast(sha)
-    # the verify join is keyed on (match_id, match_side): an id present
-    # in BOTH inputs (re-ingesting a doc already indexed) must verify
-    # against the copy its candidate came from, not fan out to both
-    shb = (
-        existing_frames.select(
+    # the verify probes with the batch side, small by contract (a
+    # micro-batch probing a big index), so an eager call broadcasts its
+    # shingle arrays.  The match join is keyed on (match_id,
+    # match_side): an id present in BOTH inputs (re-ingesting a doc
+    # already indexed) must verify against the copy its candidate came
+    # from, not fan out to both
+    shb = existing_frames.select(
+        F.col("id").alias("match_id"),
+        F.lit("existing").alias("match_side"),
+        F.col("sh"),
+    ).unionByName(
+        batch_frames.select(
             F.col("id").alias("match_id"),
-            F.col("sh").alias("shb"),
-            F.lit("existing").alias("match_side"),
-        )
-        .unionByName(
-            batch_frames.select(
-                F.col("id").alias("match_id"),
-                F.col("sh").alias("shb"),
-                F.lit("batch").alias("match_side"),
-            )
+            F.lit("batch").alias("match_side"),
+            F.col("sh"),
         )
     )
-    # intersection computed exactly once into small scored rows, then
-    # thresholded above a cache barrier: without it the pushed-down
-    # threshold re-evaluates array_intersect 3-4x per candidate over
-    # ~140-element shingle arrays inside the verify join's codegen
-    # region (measured ~3x the verify wall, and the fused region
-    # re-opens the JIT-compile lottery — round-15-opt, simjoin
-    # discipline).  Lazy callers keep the pure recomputable plan.
-    scored = (
-        cand.join(sha, "batch_id")
-        .join(shb, ["match_id", "match_side"])
-        .select(
-            "batch_id",
-            "match_id",
-            "match_side",
-            F.size("sha").alias("__za"),
-            F.size("shb").alias("__zb"),
-            F.size(F.array_intersect("sha", "shb")).alias("__i"),
-        )
+    scored, caches = _verify(
+        cand,
+        batch_frames.select("id", "sh"),
+        eager,
+        probe_key="batch_id",
+        match=shb,
     )
-    if eager:
-        # guard: persist() plans the verify here (simjoin discipline)
-        with stable_verify_codegen(scored.sparkSession):
-            scored = scored.persist()
     jac = F.col("__i") / (F.col("__za") + F.col("__zb") - F.col("__i"))
-    out = (
-        scored.where(jac >= jaccard_threshold)
-        .select(
-            "batch_id",
-            "match_id",
-            "match_side",
-            F.round(jac, 6).alias("jaccard"),
-        )
+    out = scored.where(jac >= jaccard_threshold).select(
+        "batch_id",
+        "match_id",
+        "match_side",
+        F.round(jac, 6).alias("jaccard"),
     )
-    if eager:
-        # band join + dedup + verify run under expression-codegen: the
-        # fused verify region's generated method is a JIT-compile
-        # lottery on short stages (see simjoin.stable_verify_codegen —
-        # this op measured walls [20, 183, 63] s with whole-stage
-        # codegen on vs [10.6, 7.4, 14.2] s off, interleaved in one
-        # session, round 16)
-        with stable_verify_codegen(out.sparkSession):
-            ck = out.localCheckpoint(eager=True)
-        _capture_plan("incremental_minhash_pairs", out)
-        out = ck
-        scored.unpersist()
-        cand.unpersist()
-        existing_frames.unpersist()
-        batch_frames.unpersist()
-    return out
+    return _finish(
+        out,
+        eager,
+        "incremental_minhash_pairs",
+        caches + [existing_frames, batch_frames],
+    )

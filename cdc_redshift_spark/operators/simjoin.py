@@ -26,10 +26,12 @@ Scale design (100 TB corpus):
   join keys — bucket sizes are bounded by the df of *rare* tokens by
   construction, the property that makes prefix filtering the
   standard exact similarity join at corpus scale.
-- verify: DISTINCT candidate pairs first (ids + sizes only ride the
-  prefix join), then the token arrays join back once per pair and
-  ``array_intersect`` runs under whole-stage codegen — each pair is
-  verified exactly once however many prefix tokens it shares.
+- verify: DISTINCT candidate pairs first (only ids ride the prefix
+  join), then the token arrays join back once per pair and
+  ``array_intersect`` runs once per pair (:func:`_verify`, the core
+  the MinHash operators in ``operators/dedup.py`` share, planned
+  under :func:`stable_verify_codegen`) — each pair is verified exactly
+  once however many prefix tokens it shares.
 
 Everything is built-in Column expressions; no Python runs per row.
 """
@@ -37,7 +39,6 @@ Everything is built-in Column expressions; no Python runs per row.
 from __future__ import annotations
 
 import math
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,38 +46,34 @@ from pyspark.sql import functions as F
 
 from cdc_redshift_spark.functions.text import normalize_text
 
+#: an eager verify broadcasts its probe-side array table (both sides of
+#: a self-join) up to this many rows, so the candidate stream never
+#: shuffles carrying an array — this removed the 8x-replica spill knee
+#: (131 s -> linear, SCALE.md).  Above it the verify falls back to
+#: shuffle joins, the only shape that works when the array table itself
+#: exceeds executor memory.
+BROADCAST_VERIFY_MAX_ROWS = 300_000
+
 
 @contextmanager
 def stable_verify_codegen(spark: SparkSession):
-    """Materialize a candidate-verify pipeline under expression-codegen
-    (whole-stage codegen OFF) for the duration of the block.
+    """Run the block with whole-stage codegen OFF, so the persists in
+    it fix their cached plans without it; the session's setting is
+    restored on exit.  Entered only by :func:`_verify`.
 
-    Why (round-16 measurement): the fused verify region (candidate
-    cache scan -> two broadcast hash joins -> array_intersect
-    projection) generates a method large enough that its C2
-    compilation is a TIMING LOTTERY on short stages — the same input
-    measured interleaved in one session read walls of [16.2, 19.7,
-    35.8] s (another session: 7.0 / 227.6 s; per-stage CPU 480 ->
-    5 877 s on identical data) with whole-stage codegen on, versus a
-    stable [7.6, 7.8] s with it off: small per-expression generated
-    classes JIT reliably, the one huge method does not, and
-    ``-XX:-DontCompileHugeMethods`` was measured NOT to close the gap
-    (the compile itself is what loses the race on a short stage).
-    Round 15 attacked the same lottery with the candidate exchange +
-    persist barriers, which shrank but did not close it.
-
-    Scale note: this is a SHORT-STAGE phenomenon.  On a cluster where
-    the verify stage runs minutes, the compile amortizes and
-    whole-stage codegen is the faster mode — set
-    ``SPARK_GRAFT_VERIFY_WSCG=1`` there to keep it on; the local
-    default favors the stable mode the bench can actually measure.
-    Only the session conf is touched, and it is restored on exit; the
-    lazy (``eager=False``) paths never enter this block, so their
-    plans are untouched.
+    Why: the fused verify region (candidate cache scan -> two broadcast
+    hash joins -> array_intersect projection) generates a method large
+    enough that its C2 compilation is a timing lottery on short stages.
+    Measured interleaved in one session: walls of [16.2, 19.7, 35.8] s
+    (another session: 7.0 / 227.6 s) with whole-stage codegen on,
+    against a stable [7.6, 7.8] s with it off;
+    ``-XX:-DontCompileHugeMethods`` did not close the gap.  Hashed
+    verify shrank the region, but a fresh-process A/B still caught an
+    incremental-minhash probe at 28.1 s against a 4.80 s guarded median
+    (CHANGES.md), so the guard stays.  On a cluster where the verify
+    stage runs minutes the compile amortizes and whole-stage codegen
+    would be the faster mode.
     """
-    if os.environ.get("SPARK_GRAFT_VERIFY_WSCG") == "1":
-        yield
-        return
     key = "spark.sql.codegen.wholeStage"
     old = spark.conf.get(key, "true")
     spark.conf.set(key, "false")
@@ -84,6 +81,7 @@ def stable_verify_codegen(spark: SparkSession):
         yield
     finally:
         spark.conf.set(key, old)
+
 
 #: evidence hook (tools/dump_named_plans.py): when set to a list, each
 #: EAGER call appends ("<op>", <formatted plan of the result frame,
@@ -108,6 +106,158 @@ def _capture_plan(label: str, df: DataFrame) -> None:
         )
 
 
+def _pair_partitions(spark: SparkSession) -> int:
+    """Shuffle width of a candidate-pair stream before its dedup: twice
+    the session's cores.  Explicit because AQE coalesces the byte-small
+    pair stream to a handful of partitions and would serialize the
+    per-row-CPU-bound verify (measured 15 coalesced tasks crawling at
+    257 s wall on a quiet host before the count was pinned)."""
+    return spark.sparkContext.defaultParallelism * 2
+
+
+def _rarest_first(
+    toks: DataFrame, eager: bool
+) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
+    """Order each set of an (id, toks) frame rarest first.
+
+    Returns ``ordered`` — (id, sz, hs), plus ``toks`` unless the verify
+    reads hashes — with every set's distinct tokens sorted by the global
+    order (document frequency, ties broken lexicographically) and
+    ``hs`` their xxhash64 hashes in that order; the (id, array) frame
+    the verify reads; and the frames cached for the caller to release.
+
+    Join keys built from ``hs`` are always safe: a hash collision only
+    ADDS spurious candidate rows, which the filters and the exact verify
+    reject.  Verifying on ``hs`` is exact iff xxhash64 is injective on
+    the vocabulary, which the eager path PROVES with one aggregate over
+    the (persisted, vocabulary-sized) df table — at 10^9-token
+    vocabularies the 64-bit birthday probability is a few percent, so
+    the check is not a formality.  On a collision, and on the lazy path
+    that cannot run the check, the verify reads the exact string arrays.
+    Why hash at all: ArrayIntersect on array<string> evaluates through
+    its interpreted, per-element-boxing path (Spark emits primitive-
+    specialized code only for primitive element types), measured at
+    1 700-5 800 JVM-CPU-s per run at sf0.1; long arrays take the
+    primitive path and are ~10x narrower in the verify broadcast.
+    """
+    # the df table is vocabulary-sized; at sf scale AQE broadcasts it,
+    # at 100 TB it is an equi-join shuffled on token either way
+    tok_df = (
+        toks.select(F.explode("toks").alias("tok"))
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("df"))
+    )
+    caches = []
+    hash_verify = False
+    if eager:
+        tok_df = tok_df.persist()
+        caches.append(tok_df)
+        chk = tok_df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct(F.xxhash64("tok")).alias("nh"),
+        ).first()
+        hash_verify = chk["n"] == chk["nh"]
+    ordered = (
+        toks.select("id", F.explode("toks").alias("tok"))
+        .join(tok_df, "tok")
+        .groupBy("id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("df", "tok"))),
+                lambda s: s["tok"],
+            ).alias("toks")
+        )
+        .withColumn("sz", F.size("toks"))
+        .withColumn("hs", F.transform("toks", lambda t: F.xxhash64(t)))
+    )
+    if hash_verify:
+        ordered = ordered.drop("toks")
+    if eager:
+        ordered = ordered.persist()
+        caches.append(ordered)
+    arrays = ordered.select("id", "hs" if hash_verify else "toks")
+    return ordered, arrays, caches
+
+
+def _verify(
+    cand: DataFrame,
+    arrays: DataFrame,
+    eager: bool,
+    probe_key: str = "id_a",
+    match: DataFrame | None = None,
+    broadcast: bool = True,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """Score distinct candidate pairs by exact set overlap: the verify
+    every similarity join here shares.
+
+    ``arrays`` is an (id, array) frame joined to ``cand`` on
+    ``probe_key``; ``match`` is the other side, a (keys..., array)
+    frame joined on its keys, or None for a self-join of ``arrays`` on
+    ``id_b``.  Returns ``cand``'s columns plus both array sizes
+    (``__za``, ``__zb``) and their overlap (``__i``), and the frames
+    cached for the caller to release.
+
+    The arrays join back once per distinct pair, and the intersection
+    is computed once into that small scored row, which eager calls
+    cache: without the barrier Catalyst substitutes the
+    alias back into the caller's pushed-down threshold and re-evaluates
+    ``array_intersect`` 3-4x per pair (measured ~3x the verify wall on
+    dense candidates).  Eager calls also cache the candidate ids, so
+    the pair dedup and the verify joins run as separate stages, and,
+    with ``broadcast``, broadcast the probe side (both sides of a
+    self-join) when it holds at most BROADCAST_VERIFY_MAX_ROWS rows.
+    Lazy calls keep the pure, recomputable plan.
+    """
+    iid, arr = arrays.columns
+    a = arrays.select(F.col(iid).alias(probe_key), F.col(arr).alias("ta"))
+    if match is None:
+        b = arrays.select(F.col(iid).alias("id_b"), F.col(arr).alias("tb"))
+    else:
+        b = match.withColumnRenamed(match.columns[-1], "tb")
+    b_keys = b.columns[:-1]
+
+    def score(cand: DataFrame, a: DataFrame, b: DataFrame) -> DataFrame:
+        return (
+            cand.join(a, probe_key)
+            .join(b, b_keys)
+            .select(
+                *cand.columns,
+                F.size("ta").alias("__za"),
+                F.size("tb").alias("__zb"),
+                F.size(F.array_intersect("ta", "tb")).alias("__i"),
+            )
+        )
+
+    if not eager:
+        return score(cand, a, b), []
+    if broadcast and arrays.count() <= BROADCAST_VERIFY_MAX_ROWS:
+        a = F.broadcast(a)
+        if match is None:
+            b = F.broadcast(b)
+    # the guard's one site: persist() fixes a cached query's physical
+    # plan, whole-stage codegen included, with or without AQE; the
+    # action that later fills the cache does not re-decide it
+    with stable_verify_codegen(cand.sparkSession):
+        cand = cand.persist()
+        scored = score(cand, a, b).persist()
+    return scored, [cand, scored]
+
+
+def _finish(
+    out: DataFrame, eager: bool, label: str, caches: list[DataFrame]
+) -> DataFrame:
+    """Eager: materialize ``out`` with a localCheckpoint, hand its
+    runtime plan to PLAN_CAPTURE and release ``caches``.  Lazy: ``out``
+    as it is."""
+    if not eager:
+        return out
+    ck = out.localCheckpoint(eager=True)
+    _capture_plan(label, out)
+    for df in caches:
+        df.unpersist()
+    return ck
+
+
 def _token_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, toks) — distinct word tokens of the normalized text."""
     return df.select(
@@ -124,8 +274,6 @@ def jaccard_similarity_join(
     id_col: str = "doc_id",
     text_col: str = "text",
     eager: bool = True,
-    broadcast_verify_max_rows: int = 300_000,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """All pairs (id_a < id_b) with token-set Jaccard >= ``tau``.
 
@@ -145,122 +293,34 @@ def jaccard_similarity_join(
     many prefix tokens) candidate-first verify was measured 25×
     (204 s → 8 s at sf0.1, SCALE.md).
 
-    When ``eager`` and the corpus is at most
-    ``broadcast_verify_max_rows`` docs, BOTH verify joins broadcast
-    the ordered-token frame: the surviving-pair stream (ids only)
-    never shuffles carrying an array — this removed the 8×-replica
-    spill knee (131 s → linear, SCALE.md).  Above the threshold the
-    verify falls back to shuffle joins, the only shape that works when
-    the token table itself exceeds executor memory.
-
-    ``eager`` persists the ordered-token frame for its three uses and
-    releases it before returning (the result is localCheckpoint-ed);
-    ``eager=False`` keeps the result lazy at the cost of recomputing
-    the ordering per downstream action.
+    ``eager`` caches the ordered-token frame for its uses, broadcasts
+    it into the verify when the corpus has at most
+    ``BROADCAST_VERIFY_MAX_ROWS`` docs, and releases every cache before
+    returning (the result is localCheckpoint-ed); ``eager=False`` keeps
+    the result lazy at the cost of recomputing the ordering per
+    downstream action.
     """
     if not 0.0 < tau <= 1.0:
         raise ValueError(f"tau must be in (0, 1], got {tau}")
-    if num_partitions is None:
-        # the candidate-verify tuning knob minhash_lsh_pairs already
-        # exposes (ADVICE r15): default scales with the session's
-        # cores; clusters verifying much larger candidate volumes
-        # per stage pass an explicit count
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
-    toks = _token_sets(df, id_col, text_col)
-
-    # Global token order: rarest first, ties broken lexicographically.
-    # The df table is vocabulary-sized; at sf scale AQE broadcasts it,
-    # at 100 TB it is an equi-join shuffled on token either way.
-    tok_df = (
-        toks.select(F.explode("toks").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("df"))
+    ordered, arrays, caches = _rarest_first(
+        _token_sets(df, id_col, text_col), eager
     )
-
-    # 64-bit token hashes for the JOIN KEYS and (eager, checked) the
-    # VERIFY (round 16).  Join-key hashing is unconditionally safe: a
-    # hash collision only ADDS spurious candidate rows, which the
-    # positional filter / exact verify reject — a real shared prefix
-    # token always produces its matching row.  VERIFY hashing is exact
-    # iff xxhash64 is injective on this corpus' vocabulary, which the
-    # eager path PROVES with one aggregate over the (persisted,
-    # vocabulary-sized) df table before relying on it — at 10^9-token
-    # vocabularies the 64-bit birthday probability is a few percent,
-    # so the check is not a formality; on collision (or on the lazy
-    # path, which cannot run the check) the verify stays on the exact
-    # string arrays.  Why hash at all: thread dumps of the slow mode
-    # showed ArrayIntersect on array<string> evaluating through its
-    # interpreted, per-element-boxing nullSafeEval path (Spark only
-    # emits primitive-specialized code for primitive element types),
-    # burning 1 700-5 800 JVM-CPU-s per run at sf0.1; long arrays take
-    # the primitive path.  The hash arrays are also ~10x narrower in
-    # the verify broadcast/shuffle (guide §2.3 "narrower types").
-    hash_verify = False
-    if eager:
-        with stable_verify_codegen(df.sparkSession):
-            tok_df = tok_df.persist()
-            chk = tok_df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.countDistinct(F.xxhash64("tok")).alias("nh"),
-            ).first()
-        hash_verify = chk["n"] == chk["nh"]
-
-    # Re-assemble each doc with tokens sorted rarest-first and slice
-    # the prefix.  ceil/greatest keep p >= 1 so single-token docs
-    # still carry one prefix token.
-    ordered = (
-        toks.select("id", F.explode("toks").alias("tok"))
-        .join(tok_df, "tok")
-        .groupBy("id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("df", "tok"))),
-                lambda s: s["tok"],
-            ).alias("toks")
-        )
-        .withColumn("sz", F.size("toks"))
-        .withColumn(
-            "p",
-            # the -1e-9 slack mirrors alpha's (review r14): float
-            # noise rounding an exact tau*sz integer boundary UP
-            # would SHORTEN the prefix by one and silently drop
-            # qualifying pairs from an exact join; erring low only
-            # lengthens the prefix by one at exact boundaries
-            F.greatest(
-                F.lit(1),
-                (
-                    F.col("sz")
-                    - F.ceil(F.lit(tau) * F.col("sz") - 1e-9)
-                    + 1
-                ).cast("int"),
-            ),
-        )
-        # token hashes in the SAME rarest-first order (see hash_verify)
-        .withColumn("hs", F.transform("toks", lambda t: F.xxhash64(t)))
-    )
-    if hash_verify:
-        # candidates and the verify read only hs: keep toks out of
-        # the persisted frame
-        ordered = ordered.drop("toks")
-    if eager:
-        # NOTE: persist() plans the cached subtree EAGERLY at this call
-        # (CacheManager resolves executedPlan when the cache is
-        # registered), so every persist in the eager path must sit
-        # inside the stable_verify_codegen guard — wrapping only the
-        # actions leaves the verify compiled as one huge whole-stage
-        # method (observed: GeneratedIteratorForCodegenStage4 in the
-        # cache-build thread dump of a 114 s run, round 16)
-        with stable_verify_codegen(df.sparkSession):
-            ordered = ordered.persist()
 
     # candidate generation: ONLY (id, sz, pos, tok-hash) rides the
     # prefix join — pos (0-based rank in the rarest-first order, from
-    # posexplode) feeds the positional filter below; the 8-byte hashed
-    # join key is collision-safe here (see hash_verify note)
+    # posexplode) feeds the positional filter below.  The prefix length
+    # p = sz - ceil(tau*sz) + 1 stays >= 1 so single-token docs still
+    # carry one prefix token; its -1e-9 slack mirrors alpha's (review
+    # r14): float noise rounding an exact tau*sz integer boundary UP
+    # would SHORTEN the prefix by one and silently drop qualifying pairs
+    # from an exact join; erring low only lengthens the prefix by one
+    # at exact boundaries
+    p = F.greatest(
+        F.lit(1),
+        (F.col("sz") - F.ceil(F.lit(tau) * F.col("sz") - 1e-9) + 1).cast("int"),
+    )
     pre = ordered.select(
-        "id",
-        "sz",
-        F.posexplode(F.slice("hs", 1, F.col("p"))).alias("pos", "tok"),
+        "id", "sz", F.posexplode(F.slice("hs", 1, p)).alias("pos", "tok")
     )
     a = pre.select(
         F.col("id").alias("id_a"),
@@ -305,74 +365,22 @@ def jaccard_similarity_join(
             F.least(F.col("sa") - F.col("pa"), F.col("sb") - F.col("pb"))
             >= alpha
         )
-        .select("id_a", "id_b", "sa", "sb")
-        # explicit candidate shuffle BEFORE the pair dedup (mirrors the
-        # LSH array fallback in operators/dedup.py): the prefix join
-        # inherits the doc-aggregate's hash(id) partitioning, which
-        # already satisfies the distinct's clustering (id_a is a group
-        # key), so without this exchange Catalyst fuses explode + join
-        # + dedup + verify into ONE WholeStageCodegen region whose
-        # generated method is large enough that JIT compilation becomes
-        # a lottery (same input measured 8.6 s vs 279 s across runs,
-        # round-15-opt) — and whose parallelism is capped by the DOC
+        .select("id_a", "id_b")
+        # explicit candidate shuffle BEFORE the pair dedup: the prefix
+        # join inherits the doc-aggregate's hash(id) partitioning,
+        # which already satisfies the distinct's clustering, so without
+        # this exchange Catalyst fuses explode + join + dedup + verify
+        # into ONE stage whose parallelism is capped by the DOC
         # aggregate's partition count instead of the candidate volume,
-        # which is the quantity that grows at 100 TB.  The count is
-        # EXPLICIT for the LSH-fallback reason: AQE coalesces the
-        # byte-small pair stream to a handful of partitions and would
-        # serialize the per-row-CPU-bound verify
-        .repartition(num_partitions, F.col("id_a"), F.col("id_b"))
+        # the quantity that grows at 100 TB (same input measured 8.6 s
+        # vs 279 s across runs, round-15-opt)
+        .repartition(_pair_partitions(df.sparkSession), "id_a", "id_b")
         # a pair sharing several prefix tokens joins several times;
         # verify each pair ONCE
         .distinct()
     )
-    if eager:
-        # materialize the deduped candidate ids (small rows) so the
-        # pair-dedup aggregation and the verify joins become SEPARATE
-        # codegen regions: fused, the single generated method is what
-        # the JIT lottery above chokes on (the same input read 5 s
-        # with this barrier vs 27 CPU-minutes fused, round-15-opt)
-        with stable_verify_codegen(df.sparkSession):
-            cand = cand.persist()
-
-    # verify: token(-hash) arrays join back once per surviving pair.
-    # Small corpora broadcast the array table so the pair stream never
-    # shuffles carrying an array (the 8x-replica spill knee); huge
-    # corpora fall back to shuffle joins.
-    vcol = "hs" if hash_verify else "toks"
-    ta = ordered.select(F.col("id").alias("id_a"), F.col(vcol).alias("ta"))
-    tb = ordered.select(F.col("id").alias("id_b"), F.col(vcol).alias("tb"))
-    if eager:
-        with stable_verify_codegen(df.sparkSession):
-            n_docs = ordered.count()
-        if n_docs <= broadcast_verify_max_rows:
-            ta, tb = F.broadcast(ta), F.broadcast(tb)
-    # intersection computed EXACTLY ONCE into a small scored row
-    # (ids + sizes + overlap), then thresholded ABOVE a cache barrier:
-    # without the barrier Catalyst substitutes the alias back into the
-    # pushed-down predicate and the filter + projection re-evaluate
-    # array_intersect 3-4x per pair inside the join's codegen region —
-    # measured ~3x the verify wall on dense candidates, and the larger
-    # fused region is what re-opens the JIT-compile lottery this
-    # operator's candidate shuffle exists to close (round-15-opt).
-    # The cached rows are O(candidates) x ~40 bytes — the decide-on-
-    # small-rows discipline; lazy callers keep the pure plan.
-    scored = (
-        cand.join(ta, "id_a")
-        .join(tb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            "sa",
-            "sb",
-            F.size(F.array_intersect("ta", "tb")).alias("__i"),
-        )
-    )
-    if eager:
-        # the VERIFY plan (cand cache -> 2 BHJ -> array_intersect) is
-        # planned HERE by persist() — guard it (see ordered.persist)
-        with stable_verify_codegen(df.sparkSession):
-            scored = scored.persist()
-    jac = F.col("__i") / (F.col("sa") + F.col("sb") - F.col("__i"))
+    scored, verify_caches = _verify(cand, arrays, eager)
+    jac = F.col("__i") / (F.col("__za") + F.col("__zb") - F.col("__i"))
     out = (
         scored
         # threshold on the UNROUNDED value (the oracle does the same);
@@ -380,18 +388,7 @@ def jaccard_similarity_join(
         .where(jac >= tau)
         .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
     )
-    if eager:
-        # the checkpoint action plans + runs the candidate dedup and
-        # verify stages — the JIT-lottery region the conf guards
-        with stable_verify_codegen(df.sparkSession):
-            ck = out.localCheckpoint(eager=True)
-        _capture_plan("jaccard_similarity_join", out)
-        out = ck
-        scored.unpersist()
-        cand.unpersist()
-        ordered.unpersist()
-        tok_df.unpersist()
-    return out
+    return _finish(out, eager, "jaccard_similarity_join", verify_caches + caches)
 
 
 def prefix_length(sz: int, tau: float) -> int:
@@ -447,8 +444,6 @@ def containment_join(
     id_col: str = "doc_id",
     text_col: str = "text",
     eager: bool = True,
-    broadcast_verify_max_rows: int = 300_000,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """All DIRECTED pairs (id_a != id_b) where the fraction of doc A's
     shingles found in doc B clears ``tau``:
@@ -473,52 +468,16 @@ def containment_join(
     shared shingle in the global order, every shared shingle sits at
     or after it in BOTH ordered lists — the same antitone row-level
     argument as the Jaccard form), then verify ONCE with
-    ``array_intersect``.
+    ``array_intersect``.  Shingles are n-word strings, so the checked
+    hashed verify (:func:`_rarest_first`) matters more here than in the
+    Jaccard form.
     """
     if not 0.0 < tau <= 1.0:
         raise ValueError(f"tau must be in (0, 1], got {tau}")
-    if num_partitions is None:
-        # same knob + default as jaccard_similarity_join
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
     toks = _shingle_sets(df, id_col, text_col, n).where(
         F.size("toks") >= 1
     )
-
-    tok_df = (
-        toks.select(F.explode("toks").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    # hashed join keys (always safe) + eager-checked hashed verify —
-    # the Jaccard form's discipline, and a bigger win here: shingles
-    # are n-word STRINGS, the type whose ArrayIntersect path is the
-    # interpreted boxing one (see hash_verify note there)
-    hash_verify = False
-    if eager:
-        with stable_verify_codegen(df.sparkSession):
-            tok_df = tok_df.persist()
-            chk = tok_df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.countDistinct(F.xxhash64("tok")).alias("nh"),
-            ).first()
-        hash_verify = chk["n"] == chk["nh"]
-    ordered = (
-        toks.select("id", F.explode("toks").alias("tok"))
-        .join(tok_df, "tok")
-        .groupBy("id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("df", "tok"))),
-                lambda s: s["tok"],
-            ).alias("toks")
-        )
-        .withColumn("sz", F.size("toks"))
-        .withColumn("hs", F.transform("toks", lambda t: F.xxhash64(t)))
-    )
-    if eager:
-        # persist() plans eagerly — guard it (see the Jaccard form)
-        with stable_verify_codegen(df.sparkSession):
-            ordered = ordered.persist()
+    ordered, arrays, caches = _rarest_first(toks, eager)
 
     # probe side: prefix only; container side: every shingle
     alpha_a = F.ceil(F.lit(tau) * F.col("sz") - 1e-9).cast("int")
@@ -551,57 +510,15 @@ def containment_join(
             )
             >= F.col("alpha")
         )
-        .select("id_a", "id_b", "sa")
-        # candidate shuffle before the dedup — same rationale (and same
-        # measured JIT-lottery fix + explicit anti-coalescing count) as
-        # the Jaccard form above
-        .repartition(num_partitions, F.col("id_a"), F.col("id_b"))
+        .select("id_a", "id_b")
+        # candidate shuffle before the dedup: same rationale as the
+        # Jaccard form above
+        .repartition(_pair_partitions(df.sparkSession), "id_a", "id_b")
         .distinct()
     )
-    if eager:
-        # candidate-id cache barrier between dedup and verify — same
-        # codegen-region split as the Jaccard form above
-        with stable_verify_codegen(df.sparkSession):
-            cand = cand.persist()
-
-    vcol = "hs" if hash_verify else "toks"
-    ta = ordered.select(F.col("id").alias("id_a"), F.col(vcol).alias("ta"))
-    tb = ordered.select(F.col("id").alias("id_b"), F.col(vcol).alias("tb"))
-    if eager:
-        with stable_verify_codegen(df.sparkSession):
-            n_docs = ordered.count()
-        if n_docs <= broadcast_verify_max_rows:
-            ta, tb = F.broadcast(ta), F.broadcast(tb)
-    # single-eval intersection + cache barrier before the threshold —
-    # same rationale (and same measured re-evaluation cost) as the
-    # Jaccard form above
-    scored = (
-        cand.join(ta, "id_a")
-        .join(tb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            "sa",
-            F.size(F.array_intersect("ta", "tb")).alias("__i"),
-        )
+    scored, verify_caches = _verify(cand, arrays, eager)
+    cont = F.col("__i") / F.col("__za")
+    out = scored.where(cont >= tau).select(
+        "id_a", "id_b", F.round(cont, 6).alias("containment")
     )
-    if eager:
-        # guard: persist() plans the verify here (see the Jaccard form)
-        with stable_verify_codegen(df.sparkSession):
-            scored = scored.persist()
-    cont = F.col("__i") / F.col("sa")
-    out = (
-        scored.where(cont >= tau)
-        .select("id_a", "id_b", F.round(cont, 6).alias("containment"))
-    )
-    if eager:
-        # same JIT-lottery guard as the Jaccard form above
-        with stable_verify_codegen(df.sparkSession):
-            ck = out.localCheckpoint(eager=True)
-        _capture_plan("containment_join", out)
-        out = ck
-        scored.unpersist()
-        cand.unpersist()
-        ordered.unpersist()
-        tok_df.unpersist()
-    return out
+    return _finish(out, eager, "containment_join", verify_caches + caches)

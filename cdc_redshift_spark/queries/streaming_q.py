@@ -726,11 +726,13 @@ def q_cdc_stream_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="drift_stream_")
     indir, ckpt = os.path.join(root, "in"), os.path.join(root, "ckpt")
     os.makedirs(indir, exist_ok=True)
-    # kept for sessions not built by get_spark: without its cached-plan
-    # conf, the applier's localCheckpoint inside foreachBatch keeps all
-    # shuffle.partitions (default 200) partitions.  Pinned to 16 this
-    # entry ran 3.55 s instead of 4.53 s (median of 4, sf0.01, plain
-    # local[8] session on 4 cores).
+    # kept for sessions not built by get_spark, where shuffle.partitions
+    # defaults to 200: pinned to 16 this entry ran 3.18 s instead of
+    # 3.71 s (median of 8 alternating reps, sf0.01, plain local[8]
+    # session on 4 cores).  Setting the cached-plan conf on the
+    # applier's stream clone instead, as CdcPipeline.start does, did not
+    # move the unpinned wall (3.76 s), so the width this depends on is
+    # not a cached batch's.
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "16")
     try:

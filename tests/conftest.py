@@ -39,4 +39,32 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def restore_confs(spark):
+    """Snapshot the shared session's confs with ``SET`` and restore
+    every modifiable one after the test (static confs such as driver
+    memory never reach a live session), so confs a test or a
+    ``get_spark`` call sets do not leak into later tests."""
+    saved = {r.key: r.value for r in spark.sql("SET").collect()}
+    yield
+    for r in spark.sql("SET").collect():
+        if not spark.conf.isModifiable(r.key):
+            continue
+        if r.key not in saved:
+            spark.conf.unset(r.key)
+        elif saved[r.key] != r.value:
+            spark.conf.set(r.key, saved[r.key])
+
+
+@pytest.fixture
+def wholestage_codegen(spark, restore_confs):
+    """Run the test with whole-stage codegen on, as production sessions
+    do (the session above turns it off unless SPARK_TEST_WSCG=true).
+    Afterwards the setting must still read true: the similarity verify
+    core turns it off only inside its guard."""
+    spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    yield
+    assert spark.conf.get("spark.sql.codegen.wholeStage") == "true"
+
+
 SF_DIR = "/root/testdata/sf0.001"

@@ -192,6 +192,10 @@ def test_minhash_array_fallback_matches_bitmap_path(spark, docs):
     assert fast == slow
 
 
+def test_minhash_array_fallback_under_codegen(spark, docs, wholestage_codegen):
+    test_minhash_array_fallback_matches_bitmap_path(spark, docs)
+
+
 def test_minhash_bucket_cap_drops_template_megabucket(spark):
     """With max_bucket_size set, pairs whose FIRST colliding band
     lands in an oversized bucket are dropped — identical template docs

@@ -385,7 +385,9 @@ def test_heavy_hitters_screen_then_semi_join(spark):
     assert plan.count("BroadcastNestedLoopJoin") == 1
 
 
-def test_aqe_coalesces_small_query_despite_wide_initial_partitions(spark):
+def test_aqe_coalesces_small_query_despite_wide_initial_partitions(
+    spark, restore_confs
+):
     """The session factory starts every shuffle at
     initialPartitionNum = max(256, 8*cpus) and relies on AQE to
     coalesce; pin that a small aggregate actually lands on FEW
@@ -394,65 +396,55 @@ def test_aqe_coalesces_small_query_despite_wide_initial_partitions(spark):
 
     ``get_spark`` returns the live shared session with its production
     confs applied, so the test restores the test session's confs
-    afterwards: later tests keep conftest's AQE/WSCG-off pin."""
+    afterwards (``restore_confs``): later tests keep conftest's
+    AQE/WSCG-off pin."""
     from cdc_redshift_spark.session import get_spark
 
-    saved = {r.key: r.value for r in spark.sql("SET").collect()}
+    prod = get_spark("aqe-pin-test")
+    df = (
+        prod.range(10_000)
+        .selectExpr("id % 7 AS k", "id AS v")
+        .groupBy("k")
+        .agg({"v": "sum"})
+    )
+    df.collect()  # AQE final plan only exists after execution
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "AdaptiveSparkPlan" in plan
+    # final partition count of the shuffle read must be far below
+    # the wide initial number — read it from the final RDD
+    n_parts = df.rdd.getNumPartitions()
+    assert n_parts <= 16, (
+        f"small aggregate fragmented into {n_parts} partitions; "
+        f"AQE coalescing lost (plan: {plan[:400]})"
+    )
+
+    # a CACHED plan too: CdcPipeline persists each micro-batch's LWW
+    # result and routes/applies over it; AQE must coalesce the
+    # persisted shuffle, or every job over the cache runs
+    # initialPartitionNum tasks whatever the batch size
+    from cdc_redshift_spark.dedup import latest_per_key
+
+    changes = latest_per_key(
+        prod.range(2_000).selectExpr(
+            "'db' AS db",
+            "CAST(id % 3 AS STRING) AS table",
+            "CAST(id % 97 AS STRING) AS key",
+            "id AS ts_ms",
+            "id AS offset",
+            "IF(id % 5 = 0, 'delete', 'upsert') AS op",
+        )
+    ).persist()
     try:
-        prod = get_spark("aqe-pin-test")
-        df = (
-            prod.range(10_000)
-            .selectExpr("id % 7 AS k", "id AS v")
-            .groupBy("k")
-            .agg({"v": "sum"})
+        changes.count()
+        cached_parts = (
+            changes.where("op <> 'delete'").rdd.getNumPartitions()
         )
-        df.collect()  # AQE final plan only exists after execution
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "AdaptiveSparkPlan" in plan
-        # final partition count of the shuffle read must be far below
-        # the wide initial number — read it from the final RDD
-        n_parts = df.rdd.getNumPartitions()
-        assert n_parts <= 16, (
-            f"small aggregate fragmented into {n_parts} partitions; "
-            f"AQE coalescing lost (plan: {plan[:400]})"
+        assert cached_parts <= 16, (
+            f"filter over a cached LWW batch runs {cached_parts} "
+            "partitions; AQE does not coalesce persisted plans"
         )
-
-        # a CACHED plan too: CdcPipeline persists each micro-batch's LWW
-        # result and routes/applies over it; AQE must coalesce the
-        # persisted shuffle, or every job over the cache runs
-        # initialPartitionNum tasks whatever the batch size
-        from cdc_redshift_spark.dedup import latest_per_key
-
-        changes = latest_per_key(
-            prod.range(2_000).selectExpr(
-                "'db' AS db",
-                "CAST(id % 3 AS STRING) AS table",
-                "CAST(id % 97 AS STRING) AS key",
-                "id AS ts_ms",
-                "id AS offset",
-                "IF(id % 5 = 0, 'delete', 'upsert') AS op",
-            )
-        ).persist()
-        try:
-            changes.count()
-            cached_parts = (
-                changes.where("op <> 'delete'").rdd.getNumPartitions()
-            )
-            assert cached_parts <= 16, (
-                f"filter over a cached LWW batch runs {cached_parts} "
-                "partitions; AQE does not coalesce persisted plans"
-            )
-        finally:
-            changes.unpersist()
     finally:
-        # static confs (driver memory, UI) never reach a live session
-        for r in spark.sql("SET").collect():
-            if not spark.conf.isModifiable(r.key):
-                continue
-            if r.key not in saved:
-                spark.conf.unset(r.key)
-            elif saved[r.key] != r.value:
-                spark.conf.set(r.key, saved[r.key])
+        changes.unpersist()
 
 
 def test_substring_dedup_plan_bounded(spark):

@@ -72,6 +72,13 @@ def test_simjoin_equals_bruteforce(spark, docs, tau):
     assert want, "fixture must produce at least one qualifying pair"
 
 
+@pytest.mark.parametrize("tau", [0.5, 0.8, 1.0])
+def test_simjoin_equals_bruteforce_under_codegen(
+    spark, docs, tau, wholestage_codegen
+):
+    test_simjoin_equals_bruteforce(spark, docs, tau)
+
+
 def test_simjoin_rejects_bad_tau(spark, docs):
     for tau in (0.0, -0.1, 1.5):
         with pytest.raises(ValueError):
@@ -159,6 +166,12 @@ def test_incremental_minhash_matches_scratch(spark, docs):
         assert (r.match_side == "batch") == (r.match_id in batch_ids)
 
 
+def test_incremental_minhash_matches_scratch_under_codegen(
+    spark, docs, wholestage_codegen
+):
+    test_incremental_minhash_matches_scratch(spark, docs)
+
+
 # ---------------------------------------------------------------------------
 # containment join
 # ---------------------------------------------------------------------------
@@ -219,6 +232,12 @@ def test_containment_equals_brute_force_on_fixture(spark):
         .collect()
     }
     assert fast == brute and len(fast) > 0
+
+
+def test_containment_equals_brute_force_under_codegen(
+    spark, wholestage_codegen
+):
+    test_containment_equals_brute_force_on_fixture(spark)
 
 
 def test_containment_short_docs_excluded(spark):

@@ -979,10 +979,14 @@ def incremental_minhash_pairs(
     # (the docstring's "never re-shingled" claim would be false).
     # ``eager`` materializes the result and releases the caches before
     # returning (the simjoin discipline); eager=False keeps everything
-    # lazy/recomputable.
-    if eager:
-        existing_frames = existing_frames.persist()
-        batch_frames = batch_frames.persist()
+    # lazy/recomputable.  A frame the caller already cached (a
+    # persisted signature index probed batch after batch) is used as
+    # is and left cached: only the caches this call makes are released.
+    owned = [
+        f.persist()
+        for f in (existing_frames, batch_frames)
+        if eager and not f.is_cached
+    ]
     a = _band_key_rows(batch_frames, k, bands, "batch").withColumnRenamed(
         "id", "batch_id"
     )
@@ -1056,5 +1060,5 @@ def incremental_minhash_pairs(
         out,
         eager,
         "incremental_minhash_pairs",
-        caches + [existing_frames, batch_frames],
+        caches + owned,
     )

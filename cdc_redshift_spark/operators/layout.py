@@ -156,14 +156,13 @@ def pruned_fraction(ranges: list[tuple], lo, hi) -> float:
 # Per-file Bloom index (point-lookup data skipping on unclustered keys)
 # ---------------------------------------------------------------------------
 
-#: Bloom geometry: with ``m_bits="auto"`` (the default) each file's
-#: filter is sized from ITS OWN row count at ``BLOOM_BITS_PER_KEY``
-#: bits per key — at k=5 hashes, m/n = 18 gives p = (1-e^{-kn/m})^k
-#: ≈ 0.08 % false positives REGARDLESS of file size, so a realistic
-#: 128 MB parquet file with ~10^6 keys gets a ~2.2 MB filter instead
-#: of a saturated 16 Kibit one that matches every probe.
-#: ``BLOOM_M_BITS`` is the floor (and the legacy fixed default, still
-#: accepted as an int argument): tiny files round up to 16 Kibit.
+#: Bloom geometry: each file's filter is sized from ITS OWN row count
+#: at ``BLOOM_BITS_PER_KEY`` bits per key — at k=5 hashes, m/n = 18
+#: gives p = (1-e^{-kn/m})^k ≈ 0.08 % false positives REGARDLESS of
+#: file size, so a realistic 128 MB parquet file with ~10^6 keys gets
+#: a ~2.2 MB filter instead of a saturated 16 Kibit one that matches
+#: every probe.  ``BLOOM_M_BITS`` is the floor: tiny files round up
+#: to 16 Kibit.
 BLOOM_M_BITS = 16384
 BLOOM_K_HASHES = 5
 BLOOM_BITS_PER_KEY = 18
@@ -180,15 +179,7 @@ def _bloom_h1_h2(key_str):
     )
 
 
-def bloom_file_index(
-    spark,
-    path,
-    key_col: str,
-    m_bits: int | str = "auto",
-    k_hashes: int = BLOOM_K_HASHES,
-    bits_per_key: int = BLOOM_BITS_PER_KEY,
-    min_m_bits: int = BLOOM_M_BITS,
-) -> DataFrame:
+def bloom_file_index(spark, path, key_col: str) -> DataFrame:
     """Build one Bloom filter PER DATA FILE of a parquet table:
     ``(file, words: array<long>, m_bits, k)``.
 
@@ -203,52 +194,44 @@ def bloom_file_index(
     by construction (every present key set its bits); false-positive
     files cost one wasted file read, bounded by the geometry.
 
-    ``path`` may be one directory or a list of them (the sink's
-    incremental rebuild indexes only the rewritten partitions).
+    ``path`` may be one path or a list of them — directories or
+    data files (the sink indexes only the files a commit wrote).
 
-    Geometry: ``m_bits="auto"`` (default) sizes each file's filter
-    from its OWN row count — ``bits_per_key`` bits per key (rounded
-    up to a 64-bit word, floored at ``min_m_bits``), so the
-    false-positive rate stays at the design point for ANY file size
-    (a fixed 16 Kibit filter saturates to "every probe matches" at
-    the ~10^6 keys a realistic 128 MB file holds).  Per-file counts
-    are an upper bound on distinct keys — duplicates only oversize,
-    never saturate.  A fixed int ``m_bits`` is still accepted.  The
+    Geometry: each file's filter is sized from its OWN row count —
+    ``BLOOM_BITS_PER_KEY`` bits per key (rounded up to a 64-bit word,
+    floored at ``BLOOM_M_BITS``), so the false-positive rate stays at
+    the design point for ANY file size (a fixed 16 Kibit filter
+    saturates to "every probe matches" at the ~10^6 keys a realistic
+    128 MB file holds).  Per-file counts are an upper bound on
+    distinct keys — duplicates only oversize, never saturate.  The
     geometry travels IN the index rows (``m_bits``, ``k`` columns),
-    so lookups and carried-forward rows from older commits with a
-    different geometry coexist in one index.
+    so rows carried forward from older commits coexist with new ones
+    in one index.
 
-    At 100 TB: the index is ~bits_per_key/8 bytes per key per file
+    At 100 TB: the index is ~BLOOM_BITS_PER_KEY/8 bytes per key per file
     (a 128 MB file → ~2.2 MB filter; ~1.7 % of data size), the build
     is a single pass, and it composes with the cluster layouts:
     cluster on the merge key, Bloom-index the secondary lookup keys.
     """
     paths = [path] if isinstance(path, str) else list(path)
     df = spark.read.parquet(*paths)
-    if m_bits == "auto":
-        word = F.ceil(
-            F.col("count") * F.lit(int(bits_per_key)) / F.lit(64.0)
-        ).cast("long")
-        geom = (
-            df.select(F.input_file_name().alias("file"))
-            .groupBy("file")
-            .count()
-            .select(
-                "file",
-                F.greatest(word * 64, F.lit(int(min_m_bits)))
-                .cast("long")
-                .alias("m_bits"),
-            )
+    word = F.ceil(
+        F.col("count") * F.lit(BLOOM_BITS_PER_KEY) / F.lit(64.0)
+    ).cast("long")
+    geom = (
+        df.select(F.input_file_name().alias("file"))
+        .groupBy("file")
+        .count()
+        .select(
+            "file",
+            F.greatest(word * 64, F.lit(BLOOM_M_BITS))
+            .cast("long")
+            .alias("m_bits"),
         )
-    else:
-        geom = (
-            df.select(F.input_file_name().alias("file"))
-            .distinct()
-            .select("file", F.lit(int(m_bits)).cast("long").alias("m_bits"))
-        )
+    )
     h1, h2 = _bloom_h1_h2(F.col(key_col).cast("string"))
     positions = F.transform(
-        F.sequence(F.lit(0), F.lit(k_hashes - 1)),
+        F.sequence(F.lit(0), F.lit(BLOOM_K_HASHES - 1)),
         lambda i: F.pmod(h1 + i.cast("long") * h2, F.col("m_bits")),
     )
     rows = (
@@ -305,7 +288,7 @@ def bloom_file_index(
         "file",
         F.transform(F.col("sw"), lambda x: x["word"]).alias("words"),
         "m_bits",
-        F.lit(int(k_hashes)).alias("k"),
+        F.lit(BLOOM_K_HASHES).alias("k"),
     )
 
 
@@ -316,12 +299,7 @@ def _py_hash60(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
 
-def bloom_lookup_files(
-    index: DataFrame,
-    key_value,
-    m_bits: int = BLOOM_M_BITS,
-    k_hashes: int = BLOOM_K_HASHES,
-) -> list[str]:
+def bloom_lookup_files(index: DataFrame, key_value) -> list[str]:
     """Files that MAY contain ``key_value`` (no false negatives).
     The membership test is pure Column bit math over the index frame
     (tiny — one row per file); the returned list is what a reader
@@ -329,17 +307,11 @@ def bloom_lookup_files(
     table.  The collect is bounded by |matching files|.
 
     Geometry is read PER ROW from the index's ``m_bits``/``k``
-    columns (so rows carried forward from commits with a different
-    auto-sized geometry evaluate correctly side by side); the
-    ``m_bits``/``k_hashes`` arguments are only the fallback for
-    legacy indexes written before the geometry columns existed.
+    columns, so rows carried forward from commits with a different
+    auto-sized geometry evaluate correctly side by side.
     """
     s = str(key_value)
     h1, h2 = _py_hash60(s), _py_hash60("b:" + s)
-    if "m_bits" not in index.columns:
-        index = index.withColumn("m_bits", F.lit(int(m_bits)).cast("long"))
-    if "k" not in index.columns:
-        index = index.withColumn("k", F.lit(int(k_hashes)))
     # per-row geometry -> the whole test is ONE SQL forall over the
     # hash sequence (h1 + i*h2 stays < 2^63 for the k<=8 this module
     # writes: both base hashes are 60-bit)

@@ -19,6 +19,14 @@ Layout (``T`` = ``root/<db>/<table>``):
     T/_CLAIM_v<N>             # OCC claim marker (occ=True only)
     root/_TXN_PENDING         # intent manifest of a multi-table commit
 
+Every commit that reuses files builds ``v<N>/`` through one step,
+:meth:`ParquetSink._link_version`: it hard-links a source version's
+data files (all of them, or only the untouched partition dirs) and
+carries their ``_DV`` and ``_BLOOM_<col>`` rows by ONE rewrite of the
+percent-encoded ``file`` URIs; :meth:`ParquetSink._index` then indexes
+only the files the commit wrote.  Reads assume the format this module
+writes: every flipped version holds its ``_SCHEMA`` and ``_FILEVERS``.
+
 Publish order: Spark writes the data files, ``_DV/`` and the index
 dirs into ``v<N>/`` (or hard-links them forward); then ``_SCHEMA``,
 ``_FILEVERS`` and ``_ANALYZE[_AGE]``; then, inside a transaction only,
@@ -68,6 +76,15 @@ HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 ANALYZE_CARRY_LIMIT = 64
 
 
+def _uri_path(spark: SparkSession, path: str) -> str:
+    """Directory ``path`` as it appears inside the file URIs Spark
+    reports (``input_file_name``, ``_metadata.file_path``), with a
+    trailing slash: percent-encoded by the Hadoop ``Path`` that
+    renders those URIs, so ``t x`` reads ``t%20x``."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(os.path.abspath(path))
+    return hpath.toUri().getRawPath() + "/"
+
+
 class CommitConflictError(RuntimeError):
     """A concurrent writer claimed or published the version this commit
     targeted.  The caller must RE-READ table state and retry the whole
@@ -101,11 +118,11 @@ class ParquetSink(Sink):
         next to the snapshot — point lookups on SECONDARY
         high-cardinality keys (which min/max clustering cannot serve)
         then read only candidate files via :meth:`lookup_files`.
-        Pruned commits maintain the index incrementally (untouched
-        partitions' rows carried forward; only rewritten partitions
-        scanned).  Filters are sized per file at ~18 bits/key
-        (``bloom_file_index``'s 'auto'), so realistic file sizes don't
-        saturate them.
+        Commits that link files forward maintain the index
+        incrementally (linked files' rows carried; only written files
+        scanned).  Filters are sized per file at ~18 bits/key (see
+        ``bloom_file_index``), so realistic file sizes don't saturate
+        them.
 
         ``merge_mode``: ``'rewrite'`` (default) merges by rewriting
         touched data (partition-pruned when possible);  ``'dv'``
@@ -301,26 +318,15 @@ class ParquetSink(Sink):
                     f"available: {retained}"
                 )
             v = version
-        reader = spark.read
-        # time travel pins the PER-VERSION schema (falling back to
-        # inference for pre-versioned-schema snapshots); current reads
-        # use the table-level latest
-        schema = (
-            self._read_schema(db, table, v)
-            if version is not None
-            else self._read_schema(db, table)
+        # the version's own schema: time travel reproduces the schema
+        # as of that version.  Impose PHYSICAL names (column mapping):
+        # parquet columns match by name; logical names apply after
+        # the scan
+        schema = self._read_schema(db, table, v)
+        df = spark.read.schema(self._phys_read_schema(schema)).parquet(
+            os.path.join(self._dir(db, table), f"v{v}")
         )
-        if schema is not None:
-            # impose PHYSICAL names (column mapping): parquet columns
-            # match by name; logical names apply after the scan
-            reader = reader.schema(self._phys_read_schema(schema))
-        df = reader.parquet(os.path.join(self._dir(db, table), f"v{v}"))
-        man = (
-            self._read_file_manifest(db, table, v)
-            if with_commit_version
-            else {}
-        )
-        if man:
+        if with_commit_version:
             # capture the basename while the hidden _metadata column
             # still resolves (the DV anti-join below severs it); the
             # provenance join itself happens after the mask
@@ -336,20 +342,12 @@ class ParquetSink(Sink):
             # Delta _commit_version story) — hard-linked rows keep
             # their original version, derived from the per-snapshot
             # file manifest; a tiny broadcast join on the basename
-            if man:
-                mdf = spark.createDataFrame(
-                    [(f, ver) for f, ver in man.items()],
-                    "__file string, _commit_version int",
-                )
-                df = df.join(F.broadcast(mdf), "__file", "left").drop(
-                    "__file"
-                )
-            else:  # pre-manifest snapshot: unknown provenance
-                df = df.withColumn(
-                    "_commit_version", F.lit(None).cast("int")
-                )
-        if schema is not None:
-            df = self._to_logical(df, schema)
+            mdf = spark.createDataFrame(
+                list(self._read_file_manifest(db, table, v).items()),
+                "__file string, _commit_version int",
+            )
+            df = df.join(F.broadcast(mdf), "__file", "left").drop("__file")
+        df = self._to_logical(df, schema)
         if not include_tombstones and "op" in df.columns:
             # null-safe: only true tombstones are hidden — a NULL op
             # (malformed envelope normalized through) is data, and
@@ -357,13 +355,8 @@ class ParquetSink(Sink):
             df = df.where(~F.col("op").eqNullSafe(F.lit("delete")))
         return df
 
-    def _schema_path(self, db: str, table: str, v: int | None = None) -> str:
-        d = self._dir(db, table)
-        return (
-            os.path.join(d, f"v{v}", "_SCHEMA")
-            if v is not None
-            else os.path.join(d, "_SCHEMA")
-        )
+    def _schema_path(self, db: str, table: str, v: int) -> str:
+        return os.path.join(self._dir(db, table), f"v{v}", "_SCHEMA")
 
     def _read_schema(self, db: str, table: str, v: int | None = None):
         """Committed schema — the CURRENT (latest flipped) snapshot's
@@ -371,33 +364,24 @@ class ParquetSink(Sink):
         so time travel reproduces the schema as of that version (a
         column added since doesn't read as NULL into history, a
         dropped one doesn't vanish from it — the Delta/Iceberg
-        ``VERSION AS OF`` schema contract).  Pre-versioned-schema
-        snapshots return None and the reader falls back to parquet
-        inference rather than imposing the latest schema on old data.
+        ``VERSION AS OF`` schema contract).  None when the table does
+        not exist.
 
         The default (current) read resolves through the published
         ``_LATEST`` pointer to that version's OWN ``_SCHEMA`` copy:
         schema writes happen at operation time while pointer flips can
         be deferred (sink transactions) or pre-empted (crash before
         flip), so the version dir is the atomic unit and its schema
-        travels with it.  A table-level ``_SCHEMA`` is no longer
-        written; it is read only as the fallback for pre-upgrade
-        tables whose version dirs carry no schema copy."""
+        travels with it."""
         from pyspark.sql.types import StructType
 
         import json as _json
 
         if v is None:
-            cur = self._latest_version(db, table)
-            if cur is not None:
-                pv = self._schema_path(db, table, cur)
-                if os.path.exists(pv):
-                    with open(pv) as f:
-                        return StructType.fromJson(_json.load(f))
-        p = self._schema_path(db, table, v)
-        if not os.path.exists(p):
-            return None  # pre-catalog snapshot: fall back to inference
-        with open(p) as f:
+            v = self._latest_version(db, table)
+            if v is None:
+                return None
+        with open(self._schema_path(db, table, v)) as f:
             return StructType.fromJson(_json.load(f))
 
     def _write_schema(
@@ -723,63 +707,113 @@ class ParquetSink(Sink):
         touched_strs: set[str],
         null_touched: bool,
     ) -> None:
-        """Write the touched partitions as v+1 and hard-link every
-        untouched partition directory forward from v."""
-        src = os.path.join(self._dir(db, table), f"v{v}")
+        """Hard-link every untouched partition directory of v into v+1
+        (with its DV and index rows), then write the touched partitions
+        — rebuilt from the DV-applied state, so their masks die here."""
         dst = os.path.join(self._dir(db, table), f"v{v + 1}")
         self._occ_guard(db, table, v + 1)
+        linked = [
+            name
+            for name, val_str in existing.items()
+            if not (
+                null_touched
+                if val_str == HIVE_NULL
+                else val_str in touched_strs
+            )
+        ]
+        self._link_version((db, table, v), (db, table, v + 1), parts=linked)
         self._to_physical(db, table, rewritten).write.mode(
-            "overwrite"
+            "append"
         ).partitionBy(*self.partition_cols).parquet(dst)
         self._write_schema(db, table, rewritten, v + 1)
-        linked: list[str] = []
-        for name, val_str in existing.items():
-            is_null = val_str == HIVE_NULL
-            if (is_null and null_touched) or (
-                not is_null and val_str in touched_strs
-            ):
-                continue
-            self._link_tree(os.path.join(src, name), os.path.join(dst, name))
-            linked.append(name)
-        if self.bloom_index_cols:
-            self._build_bloom_incremental(db, table, v + 1, v, linked)
-        # a DV-bearing snapshot hard-links masked rows forward: the
-        # sidecar rows of LINKED partitions must travel too (rewritten
-        # partitions were rebuilt from the DV-APPLIED state, so their
-        # masks are dead and dropped here)
-        prev_dv = self._dv_dir(db, table, v)
-        if os.path.isdir(prev_dv) and linked:
-            carried = self._carried_index_rows(
-                self.spark.read.parquet(prev_dv),
-                linked,
-                f"/{db}/{table}/v{v}/",
-                f"/{db}/{table}/v{v + 1}/",
-            )
-            if not carried.isEmpty():
-                carried.coalesce(1).write.mode("overwrite").parquet(
-                    self._dv_dir(db, table, v + 1)
-                )
+        self._index(
+            db,
+            table,
+            v + 1,
+            [
+                os.path.join(dst, name)
+                for name in os.listdir(dst)
+                if not name.startswith(("_", ".")) and name not in linked
+            ],
+        )
         self._flip(db, table, v + 1)
 
     # -- deletion-vector merge ---------------------------------------------
     def _dv_dir(self, db: str, table: str, v: int) -> str:
         return os.path.join(self._dir(db, table), f"v{v}", "_DV")
 
-    @classmethod
-    def _link_snapshot(cls, src: str, dst: str) -> None:
-        """Hard-link every DATA entry of one snapshot dir into another
-        (recursing into partition dirs); underscore/dot sidecars
-        (_DV, _SCHEMA, _BLOOM_*, _SUCCESS) are NOT carried — the
-        commit writes fresh ones."""
-        os.makedirs(dst, exist_ok=True)
-        for name in os.listdir(src):
-            if name.startswith(("_", ".")):
+    def _link_version(
+        self,
+        src: tuple[str, str, int],
+        dst: tuple[str, str, int],
+        parts: Sequence[str] | None = None,
+        masked: DataFrame | None = None,
+    ) -> set[str]:
+        """Build version ``dst`` (db, table, v) from version ``src``
+        without rewriting data: hard-link every data file of ``src``,
+        or only those under the partition dirs named in ``parts``, and
+        carry the ``_DV`` rows and ``_BLOOM_<col>`` rows of the linked
+        files.  ``masked`` adds ``(file, pos)`` rows of ``src`` files
+        to the carried deletion vector.  Returns the linked paths.
+
+        DV and index rows name files by URI, where reserved characters
+        are percent-encoded (table ``t x`` is ``t%20x``, partition
+        ``p=%3A`` is ``p=%253A``); they move to ``dst`` by replacing
+        the encoded ``src`` dir prefix, which occurs once per URI.  A
+        retry first clears the partial dir a crashed attempt left
+        (``os.link`` refuses to overwrite)."""
+        sdir = os.path.join(self._dir(*src[:2]), f"v{src[2]}")
+        ddir = os.path.join(self._dir(*dst[:2]), f"v{dst[2]}")
+        if os.path.isdir(ddir):
+            shutil.rmtree(ddir)
+        os.makedirs(ddir)
+        roots = [sdir] if parts is None else [
+            os.path.join(sdir, p) for p in parts
+        ]
+        linked = set()
+        for r in roots:
+            for base, dirs, files in os.walk(r):
+                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+                out = os.path.normpath(
+                    os.path.join(ddir, os.path.relpath(base, sdir))
+                )
+                os.makedirs(out, exist_ok=True)
+                # data files and their local-FS checksums
+                for name in files:
+                    if name.endswith((".parquet", ".parquet.crc")):
+                        os.link(
+                            os.path.join(base, name), os.path.join(out, name)
+                        )
+                        linked.add(os.path.join(out, name))
+        if parts == []:
+            return linked
+        old, new = _uri_path(self.spark, sdir), _uri_path(self.spark, ddir)
+        keep = None
+        if parts is not None:
+            keep = F.substring_index(
+                F.substring_index(F.col("file"), old, -1), "/", 1
+            ).isin(
+                [_uri_path(self.spark, r)[len(old):-1] for r in roots]
+            )
+        sidecars = [("_DV", masked)] + [
+            (f"_BLOOM_{c}", None) for c in self.bloom_index_cols
+        ]
+        for name, extra in sidecars:
+            rows = extra
+            if os.path.isdir(os.path.join(sdir, name)):
+                rows = self.spark.read.parquet(os.path.join(sdir, name))
+                if extra is not None:
+                    rows = rows.unionByName(extra)
+            if rows is None:
                 continue
-            s = os.path.join(src, name)
-            if os.path.isfile(s):
-                os.link(s, os.path.join(dst, name))
-            else:
-                cls._link_snapshot(s, os.path.join(dst, name))
+            if keep is not None:
+                rows = rows.where(keep)
+            rows.withColumn(
+                "file", F.replace(F.col("file"), F.lit(old), F.lit(new))
+            ).coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(ddir, name)
+            )
+        return linked
 
     @staticmethod
     def _data_files(root: str) -> set[str]:
@@ -818,8 +852,6 @@ class ParquetSink(Sink):
             src = os.path.join(self._dir(db, table), f"v{v}")
             dst = os.path.join(self._dir(db, table), f"v{v + 1}")
             self._occ_guard(db, table, v + 1)
-            old_seg = f"/{db}/{table}/v{v}/"
-            new_seg = f"/{db}/{table}/v{v + 1}/"
 
             # batch winners (per-key LWW within the batch, tombstones
             # kept so deletes land as maskers + tombstone rows)
@@ -834,10 +866,9 @@ class ParquetSink(Sink):
 
             # stored rows competing with this batch: key-pruned,
             # column-pruned, and already-masked rows excluded
-            schema = self._read_schema(db, table)
-            reader = self.spark.read
-            if schema is not None:
-                reader = reader.schema(self._phys_read_schema(schema))
+            reader = self.spark.read.schema(
+                self._phys_read_schema(self._read_schema(db, table))
+            )
             cur = reader.parquet(src).select(
                 *self.keys,
                 self.ts_col,
@@ -884,109 +915,33 @@ class ParquetSink(Sink):
             win_keys = winners.select(*self.keys).distinct()
 
             # DV additions: every surviving stored row of a key the
-            # batch won (path-rewritten into the new snapshot)
-            new_dv = (
-                rel.join(F.broadcast(win_keys), self.keys, "left_semi")
-                .select(
-                    F.replace(
-                        F.col("__f"), F.lit(old_seg), F.lit(new_seg)
-                    ).alias("file"),
-                    F.col("__r").alias("pos"),
-                )
-            )
-            carried_dv = (
-                old_dv.select(
-                    F.replace(
-                        F.col("file"), F.lit(old_seg), F.lit(new_seg)
-                    ).alias("file"),
-                    "pos",
-                )
-                if old_dv is not None
-                else None
-            )
-            dv_rows = (
-                new_dv
-                if carried_dv is None
-                else carried_dv.unionByName(new_dv)
-            )
+            # batch won
+            masked = rel.join(
+                F.broadcast(win_keys), self.keys, "left_semi"
+            ).select(F.col("__f").alias("file"), F.col("__r").alias("pos"))
             # every source below (src data, prev _DV, the persisted
             # changes) is DISTINCT from the v+1 dir being built, so
             # the lazy plans stay valid throughout the commit
             append_rows = winners.localCheckpoint(eager=True)
-            # retry safety: a prior attempt may have died between the
-            # link and the pointer flip, leaving a partial dst (the
-            # rewrite paths get this for free from Spark's overwrite
-            # mode; os.link would raise FileExistsError instead)
-            if os.path.isdir(dst):
-                shutil.rmtree(dst)
-            self._link_snapshot(src, dst)
-            before = self._data_files(dst)
+            linked = self._link_version(
+                (db, table, v), (db, table, v + 1), masked=masked
+            )
             writer = self._to_physical(db, table, append_rows).write.mode(
                 "append"
             )
             if self.partition_cols:
                 writer = writer.partitionBy(*self.partition_cols)
             writer.parquet(dst)
-            appended = sorted(self._data_files(dst) - before)
-            dv_rows.select(
-                F.col("file").cast("string"), F.col("pos").cast("long")
-            ).coalesce(1).write.mode("overwrite").parquet(
-                self._dv_dir(db, table, v + 1)
-            )
             self._write_schema(db, table, append_rows, v + 1)
-            if self.bloom_index_cols:
-                self._index_dv_commit(db, table, v + 1, v, appended)
+            # masked rows stay in the index as false-positive
+            # candidates (a wasted file read, never a miss); compact()
+            # rebuilds it clean
+            self._index(
+                db, table, v + 1, sorted(self._data_files(dst) - linked)
+            )
             self._flip(db, table, v + 1)
         finally:
             changes.unpersist()
-
-    def _index_dv_commit(
-        self,
-        db: str,
-        table: str,
-        new_v: int,
-        prev_v: int,
-        appended_files: list[str],
-    ) -> None:
-        """Bloom maintenance for a DV commit: every previous file is
-        hard-linked (rows carried by path rewrite, ALL dirs linked),
-        and only the appended files are scanned.  Masked rows stay in
-        the index as false-positive candidates — a wasted file read at
-        lookup time, never a correctness loss; compact() rebuilds
-        clean."""
-        from cdc_redshift_spark.operators.layout import (
-            BLOOM_K_HASHES,
-            BLOOM_M_BITS,
-            bloom_file_index,
-        )
-
-        old_seg = f"/{db}/{table}/v{prev_v}/"
-        new_seg = f"/{db}/{table}/v{new_v}/"
-
-        def carry(old_idx: DataFrame) -> DataFrame:
-            return old_idx.withColumn(
-                "file",
-                F.replace(F.col("file"), F.lit(old_seg), F.lit(new_seg)),
-            )
-
-        for col in self.bloom_index_cols:
-            prev_dir = self._bloom_dir(db, table, prev_v, col)
-            if not os.path.isdir(prev_dir):
-                self._build_bloom(db, table, new_v)
-                break
-            old_idx = self.spark.read.parquet(prev_dir)
-            if "m_bits" not in old_idx.columns:
-                old_idx = old_idx.withColumn(
-                    "m_bits", F.lit(BLOOM_M_BITS).cast("long")
-                ).withColumn("k", F.lit(BLOOM_K_HASHES))
-            idx = carry(old_idx)
-            if appended_files:
-                idx = idx.unionByName(
-                    bloom_file_index(self.spark, appended_files, col)
-                )
-            idx.coalesce(1).write.mode("overwrite").parquet(
-                self._bloom_dir(db, table, new_v, col)
-            )
 
     def compact(self, db: str, table: str) -> None:
         """Fold deletion vectors into a clean snapshot: read the
@@ -1061,14 +1016,6 @@ class ParquetSink(Sink):
         if x is False:
             return "false"
         return str(x)
-
-    @staticmethod
-    def _link_tree(src: str, dst: str) -> None:
-        os.makedirs(dst, exist_ok=True)
-        for name in os.listdir(src):
-            s = os.path.join(src, name)
-            if os.path.isfile(s):
-                os.link(s, os.path.join(dst, name))
 
     def expire_tombstones(self, db: str, table: str, before_ts_ms: int) -> None:
         """Compact away tombstones older than the lateness horizon.
@@ -1475,12 +1422,6 @@ class ParquetSink(Sink):
         if v is None:
             raise ValueError(f"{db}.{table} does not exist")
         schema = self._read_schema(db, table)
-        if schema is None:
-            # pre-catalog table: materialize the catalog first so the
-            # mapping has a source of truth
-            schema = self.spark.read.parquet(
-                os.path.join(self._dir(db, table), f"v{v}")
-            ).schema
         names = [f.name for f in schema.fields]
         if old not in names:
             raise ValueError(f"{db}.{table} has no column {old!r}: {names}")
@@ -1508,19 +1449,6 @@ class ParquetSink(Sink):
         )
         self._metadata_only_commit(db, table, new_schema)
 
-    def _dv_rewrite(
-        self, src_dv: str, dst_dv: str, old_seg: str, new_seg: str
-    ) -> None:
-        """Carry a DV sidecar between snapshot dirs by path rewrite
-        (the masks reference absolute file paths)."""
-        if os.path.isdir(src_dv):
-            self.spark.read.parquet(src_dv).select(
-                F.replace(
-                    F.col("file"), F.lit(old_seg), F.lit(new_seg)
-                ).alias("file"),
-                "pos",
-            ).coalesce(1).write.mode("overwrite").parquet(dst_dv)
-
     def _metadata_only_commit(
         self,
         db: str,
@@ -1541,22 +1469,8 @@ class ParquetSink(Sink):
             src_v = cur
         new_v = cur + 1
         self._occ_guard(db, table, new_v)
-        src = os.path.join(self._dir(db, table), f"v{src_v}")
-        dst = os.path.join(self._dir(db, table), f"v{new_v}")
-        if os.path.isdir(dst):  # retry safety (see _apply_dv)
-            shutil.rmtree(dst)
-        self._link_snapshot(src, dst)
-        old_seg = f"/{db}/{table}/v{src_v}/"
-        new_seg = f"/{db}/{table}/v{new_v}/"
-        self._dv_rewrite(
-            self._dv_dir(db, table, src_v),
-            self._dv_dir(db, table, new_v),
-            old_seg,
-            new_seg,
-        )
-        if self.bloom_index_cols:
-            # every file carries: index rows travel by path rewrite
-            self._index_dv_commit(db, table, new_v, src_v, [])
+        self._link_version((db, table, src_v), (db, table, new_v))
+        self._index(db, table, new_v, [])
         self._write_schema_json(db, table, new_schema, new_v)
         self._flip(db, table, new_v, manifest_prev=src_v)
         return new_v
@@ -1590,14 +1504,6 @@ class ParquetSink(Sink):
             | set(self.bloom_index_cols)
         )
 
-    def _catalog_or_infer(self, db: str, table: str, v: int):
-        schema = self._read_schema(db, table)
-        if schema is None:
-            schema = self.spark.read.parquet(
-                os.path.join(self._dir(db, table), f"v{v}")
-            ).schema
-        return schema
-
     def add_column(self, db: str, table: str, name: str, dtype: str) -> int:
         """METADATA-ONLY ``ALTER TABLE ADD COLUMN`` (Delta contract):
         commit a new snapshot that hard-links every data file and adds
@@ -1620,7 +1526,7 @@ class ParquetSink(Sink):
                 "index columns must exist physically, not as "
                 "metadata-only nulls"
             )
-        schema = self._catalog_or_infer(db, table, v)
+        schema = self._read_schema(db, table)
         if name in [f.name for f in schema.fields]:
             raise ValueError(f"{db}.{table} already has a column {name!r}")
         dt = StructType.fromDDL(f"x {dtype}").fields[0].dataType
@@ -1658,7 +1564,7 @@ class ParquetSink(Sink):
         v = self._latest_version(db, table)
         if v is None:
             raise ValueError(f"{db}.{table} does not exist")
-        schema = self._catalog_or_infer(db, table, v)
+        schema = self._read_schema(db, table)
         fields = {f.name: f for f in schema.fields}
         if name not in fields:
             raise ValueError(
@@ -1721,14 +1627,9 @@ class ParquetSink(Sink):
             )
         if version == cur:
             return cur
-        schema = self._read_schema(db, table, version)
-        if schema is None:
-            # pre-versioned-schema snapshot: infer once so current
-            # reads stay typed
-            schema = self.spark.read.parquet(
-                os.path.join(self._dir(db, table), f"v{version}")
-            ).schema
-        return self._metadata_only_commit(db, table, schema, src_v=version)
+        return self._metadata_only_commit(
+            db, table, self._read_schema(db, table, version), src_v=version
+        )
 
     def clone_table(
         self, db: str, table: str, dest_db: str, dest_table: str
@@ -1749,51 +1650,15 @@ class ParquetSink(Sink):
             raise ValueError(
                 f"clone target {dest_db}.{dest_table} already exists"
             )
-        src = os.path.join(self._dir(db, table), f"v{v}")
-        dst = os.path.join(self._dir(dest_db, dest_table), "v1")
-        if os.path.isdir(dst):  # retry safety
-            shutil.rmtree(dst)
-        self._link_snapshot(src, dst)
-        old_seg = f"/{db}/{table}/v{v}/"
-        new_seg = f"/{dest_db}/{dest_table}/v1/"
-
-        def rewrite(df: DataFrame) -> DataFrame:
-            return df.withColumn(
-                "file",
-                F.replace(F.col("file"), F.lit(old_seg), F.lit(new_seg)),
-            )
-
-        self._dv_rewrite(
-            self._dv_dir(db, table, v),
-            self._dv_dir(dest_db, dest_table, 1),
-            old_seg,
-            new_seg,
-        )
-        for col in self.bloom_index_cols:
-            bdir = self._bloom_dir(db, table, v, col)
-            if os.path.isdir(bdir):
-                from cdc_redshift_spark.operators.layout import (
-                    BLOOM_K_HASHES,
-                    BLOOM_M_BITS,
-                )
-
-                idx = self.spark.read.parquet(bdir)
-                if "m_bits" not in idx.columns:
-                    # legacy pre-geometry index rows: same upgrade
-                    # _index_dv_commit applies on same-table carries
-                    idx = idx.withColumn(
-                        "m_bits", F.lit(BLOOM_M_BITS).cast("long")
-                    ).withColumn("k", F.lit(BLOOM_K_HASHES))
-                rewrite(idx).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(self._bloom_dir(dest_db, dest_table, 1, col))
+        self._link_version((db, table, v), (dest_db, dest_table, 1))
+        self._index(dest_db, dest_table, 1, [])
         # the _DROPPED guard travels with the catalog: a changeset on
         # the clone carrying a source-dropped column must raise too
         if os.path.exists(self._dropped_path(db, table)):
             self._write_dropped(dest_db, dest_table, self._dropped(db, table))
-        schema = self._read_schema(db, table)
-        if schema is not None:
-            self._write_schema_json(dest_db, dest_table, schema, 1)
+        self._write_schema_json(
+            dest_db, dest_table, self._read_schema(db, table), 1
+        )
         self._flip(dest_db, dest_table, 1)
 
     def _commit(self, db: str, table: str, state: DataFrame) -> None:
@@ -1808,8 +1673,7 @@ class ParquetSink(Sink):
         if self.partition_cols:
             writer = writer.partitionBy(*self.partition_cols)
         writer.parquet(path)
-        if self.bloom_index_cols:
-            self._build_bloom(db, table, v)
+        self._index(db, table, v, [])
         self._write_schema(db, table, state, v)
         self._flip(db, table, v)
 
@@ -2084,134 +1948,30 @@ class ParquetSink(Sink):
     def _bloom_dir(self, db: str, table: str, v: int, col: str) -> str:
         return os.path.join(self._dir(db, table), f"v{v}", f"_BLOOM_{col}")
 
-    def _build_bloom(self, db: str, table: str, v: int) -> None:
-        """Full index build over snapshot ``v`` — correct whenever the
-        snapshot was fully (re)written (``_commit``), since every file
-        is new anyway.  Geometry: each file's filter is sized from its
-        own row count, so large files don't saturate (the 'auto'
-        sizing of operators/layout.bloom_file_index).
-        """
+    def _index(self, db: str, table: str, v: int, written: list[str]) -> None:
+        """Bloom rows for the data files (or whole partition dirs) in
+        ``written`` — what the commit wrote into ``v`` — appended to
+        the rows :meth:`_link_version` carried for the linked files.
+        Where nothing was carried for a column (a full rewrite, or a
+        source version without that index) the whole version is
+        indexed.  Each file's filter is sized from its own row count
+        (see ``bloom_file_index``)."""
         from cdc_redshift_spark.operators.layout import bloom_file_index
 
-        snap = os.path.join(self._dir(db, table), f"v{v}")
         for col in self.bloom_index_cols:
-            idx = bloom_file_index(self.spark, snap, col)
+            out = self._bloom_dir(db, table, v, col)
+            carried = os.path.isdir(out)
+            if carried and not written:
+                continue
+            paths = (
+                written
+                if carried
+                else os.path.join(self._dir(db, table), f"v{v}")
+            )
             # coalesce: the index is |files| rows — one file suffices
-            idx.coalesce(1).write.mode("overwrite").parquet(
-                self._bloom_dir(db, table, v, col)
-            )
-
-    def _build_bloom_incremental(
-        self,
-        db: str,
-        table: str,
-        new_v: int,
-        prev_v: int,
-        linked_dirs: list[str],
-    ) -> None:
-        """Index maintenance for a PRUNED commit: hard-linked partition
-        directories hold byte-identical files, so their Bloom rows are
-        unchanged by construction — carry them forward with a path
-        rewrite and scan ONLY the rewritten partitions.  Per-commit
-        index cost is O(touched partitions), matching the data write
-        (a full rebuild would be a full-table read per micro-batch at
-        100 TB).  Carried rows keep the geometry they were built with
-        (it travels in the index's ``m_bits``/``k`` columns), so a
-        geometry change applies to new files without invalidating old
-        rows.  Falls back to a full build when the previous index is
-        missing (``bloom_index_cols`` newly configured)."""
-        from cdc_redshift_spark.operators.layout import (
-            BLOOM_K_HASHES,
-            BLOOM_M_BITS,
-            bloom_file_index,
-        )
-
-        dst = os.path.join(self._dir(db, table), f"v{new_v}")
-        if any(
-            not os.path.isdir(self._bloom_dir(db, table, prev_v, col))
-            for col in self.bloom_index_cols
-        ):
-            self._build_bloom(db, table, new_v)
-            return
-        linked_set = set(linked_dirs)
-        touched = [
-            d
-            for d in os.listdir(dst)
-            if os.path.isdir(os.path.join(dst, d))
-            and not d.startswith(("_", "."))
-            and d not in linked_set
-        ]
-        # paths from input_file_name are URIs over the os path — the
-        # version segment is the only part that changes between
-        # snapshots, so a prefix-anchored substring rewrite is exact
-        old_seg = f"/{db}/{table}/v{prev_v}/"
-        new_seg = f"/{db}/{table}/v{new_v}/"
-        for col in self.bloom_index_cols:
-            old_idx = self.spark.read.parquet(
-                self._bloom_dir(db, table, prev_v, col)
-            )
-            if "m_bits" not in old_idx.columns:  # legacy fixed geometry
-                old_idx = old_idx.withColumn(
-                    "m_bits", F.lit(BLOOM_M_BITS).cast("long")
-                ).withColumn("k", F.lit(BLOOM_K_HASHES))
-            carried = self._carried_index_rows(
-                old_idx, linked_dirs, old_seg, new_seg
-            )
-            if touched:
-                fresh = bloom_file_index(
-                    self.spark,
-                    [os.path.join(dst, d) for d in touched],
-                    col,
-                )
-                idx = carried.unionByName(fresh)
-            else:
-                idx = carried
-            idx.coalesce(1).write.mode("overwrite").parquet(
-                self._bloom_dir(db, table, new_v, col)
-            )
-
-    @staticmethod
-    def _carried_index_rows(
-        old_idx: DataFrame,
-        linked_dirs: list[str],
-        old_seg: str,
-        new_seg: str,
-    ) -> DataFrame:
-        """Index rows of hard-linked (byte-identical) partition dirs,
-        carried to the new snapshot with a path rewrite — shared by
-        the Bloom incremental maintainer and the DV sidecar carry.
-
-        ``linked_dirs`` are raw ``os.listdir`` names, but the ``file``
-        column holds URIs (``input_file_name`` /
-        ``_metadata.file_path``), where reserved characters are
-        percent-encoded: a partition value ``'a b'`` is the directory
-        ``p=a b`` on disk but ``.../p=a%20b/...`` in the URI.
-        Matching the raw name alone silently drops the carried
-        Bloom/DV rows of any such partition — deleted rows
-        resurrect and the index serves false negatives.  Each dir is
-        therefore matched under BOTH spellings: the raw name and its
-        percent-encoded form (``quote(d, safe="=")`` reproduces the
-        URI rendering of the on-disk name, including the double-encode
-        of hive-escaped dirs like ``p=%3A`` → ``p=%253A``)."""
-        from functools import reduce
-
-        if not linked_dirs:
-            return old_idx.limit(0)
-        alts = sorted(
-            {
-                a
-                for d in linked_dirs
-                for a in (d, urllib.parse.quote(d, safe="="))
-            }
-        )
-        in_linked = reduce(
-            lambda a, b: a | b,
-            [F.col("file").contains(old_seg + d + "/") for d in alts],
-        )
-        return old_idx.where(in_linked).withColumn(
-            "file",
-            F.replace(F.col("file"), F.lit(old_seg), F.lit(new_seg)),
-        )
+            bloom_file_index(self.spark, paths, col).coalesce(1).write.mode(
+                "append" if carried else "overwrite"
+            ).parquet(out)
 
     def lookup_files(
         self, db: str, table: str, col: str, value
@@ -2290,19 +2050,16 @@ class ParquetSink(Sink):
                 self.spark, db, table, include_tombstones=include_tombstones
             )
             return empty.limit(0)
+        schema = self._read_schema(db, table)
         reader = self.spark.read.option(
             "basePath", os.path.join(self._dir(db, table), f"v{v}")
-        )
-        schema = self._read_schema(db, table)
-        if schema is not None:
-            reader = reader.schema(self._phys_read_schema(schema))
+        ).schema(self._phys_read_schema(schema))
         # index file columns are URIs (percent-encoded: 'p=a b' is
         # .../p=a%20b/...); the reader wants on-disk paths — unquote
         # exactly inverts the URI rendering
         df = reader.parquet(*[urllib.parse.unquote(f) for f in files])
         df = self._apply_dv_mask(self.spark, df, db, table, v)
-        if schema is not None:
-            df = self._to_logical(df, schema)
+        df = self._to_logical(df, schema)
         if not include_tombstones and "op" in df.columns:
             df = df.where(~F.col("op").eqNullSafe(F.lit("delete")))
         return df
@@ -2383,10 +2140,7 @@ class ParquetSink(Sink):
     def _read_file_manifest(self, db: str, table: str, v: int) -> dict:
         import json as _json
 
-        p = self._manifest_path(db, table, v)
-        if not os.path.exists(p):
-            return {}
-        with open(p) as f:
+        with open(self._manifest_path(db, table, v)) as f:
             return _json.load(f)
 
     def _write_file_manifest(
@@ -2401,17 +2155,7 @@ class ParquetSink(Sink):
 
         if prev_v is None:
             prev_v = v - 1
-        prev = self._read_file_manifest(db, table, prev_v)
-        if not prev and v > 1:
-            # pre-manifest predecessor (sink root created before this
-            # feature): its carried files have UNKNOWN provenance —
-            # recording the current version would be silently WRONG
-            prev_dir = os.path.join(self._dir(db, table), f"v{prev_v}")
-            if os.path.isdir(prev_dir):
-                prev = {
-                    os.path.basename(f): None
-                    for f in self._data_files(prev_dir)
-                }
+        prev = self._read_file_manifest(db, table, prev_v) if prev_v else {}
         man = {
             os.path.basename(f): prev.get(os.path.basename(f), v)
             for f in self._data_files(

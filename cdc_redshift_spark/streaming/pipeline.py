@@ -64,6 +64,12 @@ class CdcPipeline:
 
     ``changeset_fn`` is one of ``normalize.{pg,mongo,dms}_changeset``
     (raw frame → canonical ChangeSet); ``sink`` owns table state.
+
+    The pipeline schedules tombstone expiry (``expire_after_ms``) and
+    ANALYZE (``analyze_every``) but never ``ParquetSink.compact()``:
+    on a ``merge_mode="dv"`` sink the operator must schedule it (e.g.
+    when ``dv_masked_fraction()`` crosses a read-cost budget), or the
+    deletion-vector sidecar every read anti-joins keeps growing.
     """
 
     def __init__(

@@ -316,6 +316,87 @@ def test_crash_points_dv_apply(spark, tmp_path, monkeypatch):
     assert os.path.isdir(os.path.join(root, "d", "t", "v2", "_DV"))
 
 
+def test_crash_points_pruned_expire_on_dv_bloom_table(
+    spark, tmp_path, monkeypatch
+):
+    """expire_tombstones on a partitioned DV sink with a Bloom index: a
+    pruned commit that rewrites partition 'z' and links 'x y' forward
+    with its DV rows and index rows.  Reads (tombstones included, and
+    a point lookup through the index) see pre or post only."""
+    root = str(tmp_path / "sink")
+
+    def sink_at():
+        return ParquetSink(
+            spark, root, partition_cols=("p",), bloom_index_cols=("key",),
+            merge_mode="dv",
+        )
+
+    def batch(*rows):
+        return spark.createDataFrame(
+            list(rows),
+            "key string, ts_ms long, offset long, op string, payload string,"
+            " p string",
+        )
+
+    sink = sink_at()
+    sink.apply_changeset("d", "t", batch(
+        ("1", 100, 0, "insert", "a", "x y"), ("2", 100, 1, "insert", "b", "z"),
+        ("3", 100, 2, "insert", "c", "z"),
+    ))
+    sink.apply_changeset("d", "t", batch(("1", 200, 3, "update", "a2", "x y")))
+    sink.apply_changeset("d", "t", batch(("2", 300, 4, "delete", None, "z")))
+
+    def read(s):
+        df = s.read_table(spark, "d", "t", include_tombstones=True)
+        hits = s.read_files("d", "t", s.lookup_files("d", "t", "key", "1"))
+        return (
+            s._latest_version("d", "t"),
+            sorted(tuple(r) for r in df.collect()),
+            sorted(tuple(r) for r in hits.where("key = '1'").collect()),
+        )
+
+    seen = crash_every_step(
+        monkeypatch, root, restart=sink_at,
+        op=lambda s: s.expire_tombstones("d", "t", before_ts_ms=1000),
+        read=read, publishes=_latest,
+    )
+    assert _kinds(seen) == [
+        ("write", "_SCHEMA"), ("write", "_FILEVERS"), ("write", "_LATEST"),
+    ]
+    v = os.path.join(root, "d", "t", "v4")
+    assert os.path.isdir(os.path.join(v, "_DV"))
+    assert os.path.isdir(os.path.join(v, "_BLOOM_key"))
+
+
+def test_crash_points_rename_column_on_dv_table(spark, tmp_path, monkeypatch):
+    """rename_column on a DV table: a metadata-only commit that links
+    every file and carries the DV under a new schema."""
+    root = str(tmp_path / "sink")
+    sink = ParquetSink(spark, root, merge_mode="dv")
+    sink.apply_changeset(
+        "d", "t",
+        _chdf(spark, [(str(i), 100, i, "insert", f"p{i}") for i in range(4)]),
+    )
+    sink.apply_changeset(
+        "d", "t", _chdf(spark, [("1", 200, 10, "update", "q1")])
+    )
+
+    def read(s):
+        df = s.read_table(spark, "d", "t")
+        return (s._latest_version("d", "t"), df.columns,
+                sorted(tuple(r) for r in df.collect()))
+
+    seen = crash_every_step(
+        monkeypatch, root,
+        restart=lambda: ParquetSink(spark, root, merge_mode="dv"),
+        op=lambda s: s.rename_column("d", "t", "payload", "body"),
+        read=read, publishes=_latest,
+    )
+    assert _kinds(seen) == [
+        ("write", "_SCHEMA"), ("write", "_FILEVERS"), ("write", "_LATEST"),
+    ]
+
+
 def test_crash_points_bucketed_rollup_update_then_rebucket(
     spark, tmp_path, monkeypatch
 ):

@@ -172,6 +172,23 @@ def test_incremental_minhash_matches_scratch_under_codegen(
     test_incremental_minhash_matches_scratch(spark, docs)
 
 
+def test_incremental_minhash_keeps_caller_cache(spark, docs):
+    """An eager probe releases only the caches it made: a signature
+    index the caller persisted stays cached for the next probe, and a
+    batch the caller did not cache is not left cached either."""
+    k = 32
+    idx = minhash_frames(docs.where(F.col("doc_id") % 3 != 0), k=k).persist()
+    batch = minhash_frames(docs.where(F.col("doc_id") % 3 == 0), k=k)
+    try:
+        first = incremental_minhash_pairs(idx, batch, k=k).collect()
+        assert idx.is_cached
+        assert not batch.is_cached
+        assert incremental_minhash_pairs(idx, batch, k=k).collect() == first
+        assert idx.is_cached
+    finally:
+        idx.unpersist()
+
+
 # ---------------------------------------------------------------------------
 # containment join
 # ---------------------------------------------------------------------------

@@ -13,7 +13,8 @@ against the pre-fix code:
 7. vacuum counting orphans toward keep_last,
 8. index lookups serving DV-masked rows (read_files helper),
 9. NULL-ts tombstones dropped by three-valued logic in
-   expire_tombstones' full-rewrite path.
+   expire_tombstones' full-rewrite path,
+10. URI-encoded db/table names dropping carried index/DV rows.
 """
 
 import json
@@ -360,3 +361,117 @@ def test_expire_tombstones_keeps_null_ts_tombstones(spark, tmp_path):
     sink.apply_changeset("d", "t", chdf(spark, [("3", 10, 0, "insert", "{}")]))
     live = {r.key for r in sink.read_table(spark, "d", "t").collect()}
     assert live == {"1", "3"} or live == {"1"}  # never a silent resurrect of 2
+
+
+# -- 10: URI-reserved characters in db/table names ---------------------------
+
+
+def _spaced_ops(kind):
+    """(sink options, operations on table ``t``) for one commit kind;
+    every kind ends with key '1' live.  DV and index rows name files
+    by percent-encoded URI, where table ``t x`` is ``t%20x``."""
+
+    def batch(spark, *rows):
+        return spark.createDataFrame(
+            list(rows),
+            "key string, ts_ms long, offset long, op string, payload string,"
+            " p string",
+        )
+
+    def seed(sink, spark, t):
+        sink.apply_changeset(
+            "d", t, batch(spark, ("1", 100, 0, "insert", "a", "x y"),
+                          ("2", 100, 1, "insert", "b", "z")),
+        )
+        sink.apply_changeset(
+            "d", t, batch(spark, ("1", 200, 2, "update", "a2", "x y"))
+        )
+
+    def delete_2(sink, spark, t):
+        sink.apply_changeset(
+            "d", t, batch(spark, ("2", 300, 3, "delete", None, "z"))
+        )
+
+    def update_2(sink, spark, t):
+        sink.apply_changeset(
+            "d", t, batch(spark, ("2", 300, 3, "update", "b2", "z"))
+        )
+
+    dv = {"merge_mode": "dv", "bloom_index_cols": ("key",)}
+    ops = {
+        "dv_apply": (dv, [seed, delete_2]),
+        # the update of key 2 rewrites p=z and links 'p=x y' forward
+        "pruned_apply": (
+            {"partition_cols": ("p",), "bloom_index_cols": ("key",)},
+            [seed, update_2],
+        ),
+        "rename_column": (
+            dv, [seed, lambda s, _, t: s.rename_column("d", t, "payload", "b")]
+        ),
+        "add_column": (
+            dv, [seed, lambda s, _, t: s.add_column("d", t, "x", "string")]
+        ),
+        "restore": (dv, [seed, delete_2, lambda s, _, t: s.restore("d", t, 2)]),
+        "clone_table": (
+            dv, [seed, lambda s, _, t: s.clone_table("d", t, "d", t + " c")]
+        ),
+    }
+    return ops[kind]
+
+
+@pytest.mark.parametrize(
+    "kind",
+    ["dv_apply", "pruned_apply", "rename_column", "add_column", "restore",
+     "clone_table"],
+)
+def test_table_name_with_space_reads_like_plain_name(spark, tmp_path, kind):
+    """Every commit that links files forward carries DV and index rows
+    to the new version dir.  Pre-fix each carry matched the raw
+    ``/d/t x/v1/`` against URIs holding ``/d/t%20x/v1/``: a DV table
+    ``t x`` brought back updated and deleted rows, and the Bloom index
+    missed keys that exist."""
+    opts, steps = _spaced_ops(kind)
+    sink = ParquetSink(spark, str(tmp_path), **opts)
+    got = {}
+    for t in ("t x", "tx"):
+        for step in steps:
+            step(sink, spark, t)
+        df = sink.read_table(spark, "d", _read_name(kind, t))
+        got[t] = (df.columns, sorted(tuple(r) for r in df.collect()))
+    assert got["t x"] == got["tx"]
+    read = _read_name(kind, "t x")
+    files = sink.lookup_files("d", read, "key", "1")
+    hits = sink.read_files("d", read, files).where("key = '1'")
+    assert [r.key for r in hits.collect()] == ["1"], files
+
+
+def _read_name(kind, t):
+    return t + " c" if kind == "clone_table" else t
+
+
+def test_sink_has_one_path_rewrite():
+    """Carried DV and index rows move between version dirs through one
+    URI rewrite, in ``ParquetSink._link_version``.  Counts the Spark
+    string-rewrite calls in the sink module (``F.replace`` and its
+    kin): a second one is a second copy of the carry to keep right."""
+    import ast
+
+    from cdc_redshift_spark.sinks import parquet_sink
+
+    rewrites = ("replace", "regexp_replace", "overlay", "translate")
+    with open(parquet_sink.__file__) as f:
+        tree = ast.parse(f.read())
+    calls = [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and (
+            isinstance(node.func, ast.Name)
+            and node.func.id in rewrites
+            or isinstance(node.func, ast.Attribute)
+            and node.func.attr in rewrites
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "F"
+        )
+    ]
+    assert len(calls) == 1, f"path rewrites at lines {calls}"

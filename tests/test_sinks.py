@@ -1317,28 +1317,6 @@ def test_optimize_refuses_inside_transaction(spark, tmp_path):
             sink.optimize("d", "t")
 
 
-def test_commit_version_unknown_for_pre_manifest_links(spark, tmp_path):
-    """Upgraded table (predecessor snapshot has no manifest): carried
-    files report NULL provenance, never the current version."""
-    sink = ParquetSink(spark, str(tmp_path), partition_cols=("ts_date",))
-    sink.apply_changeset(
-        "d", "t",
-        pchdf(spark, [
-            ("1", 100, 0, "insert", "a", "2024-01-01"),
-            ("2", 100, 1, "insert", "b", "2024-01-02"),
-        ]),
-    )
-    os.remove(str(tmp_path / "d" / "t" / "v1" / "_FILEVERS"))  # legacy sim
-    sink.apply_changeset(
-        "d", "t", pchdf(spark, [("1", 200, 2, "update", "a2", "2024-01-01")])
-    )
-    rows = {
-        r.key: r["_commit_version"]
-        for r in sink.read_table(spark, "d", "t", with_commit_version=True).collect()
-    }
-    assert rows == {"1": 2, "2": None}
-
-
 def test_restore_semantics_dv(spark, tmp_path):
     from cdc_redshift_spark.sinks.parquet_sink import ParquetSink
 
